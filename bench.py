@@ -14,6 +14,29 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
+def force_count(df, name: str, pruned: list[str]) -> int:
+    """Row count that FORCES every output column to be computed: a
+    bare count() lets Catalyst prune final projections, silently
+    timing a scan-count instead of the query. sum(hash(all cols))
+    consumes each row's full projection JVM-side and returns with
+    the count in one pass. hash() rejects some column types (maps) —
+    those queries fall back to a plain count and their names are
+    appended to ``pruned`` so under-measured rows are identifiable;
+    any other failure propagates."""
+    from pyspark.errors import AnalysisException
+    from pyspark.sql import functions as F
+
+    try:
+        row = df.select(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.hash(*[F.col(c) for c in df.columns])).alias("h"),
+        ).collect()[0]
+        return row["n"]
+    except AnalysisException:
+        pruned.append(name)
+        return df.count()
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from bq_nvd_spark.plans import QUERIES
@@ -53,28 +76,7 @@ def main() -> None:
             state_partitions=1,
         )
 
-    from pyspark.errors import AnalysisException
-
     pruned_timing: list[str] = []
-
-    def force_count(df, name: str) -> int:
-        """Row count that FORCES every output column to be computed: a
-        bare count() lets Catalyst prune final projections, silently
-        timing a scan-count instead of the query. sum(hash(all cols))
-        consumes each row's full projection JVM-side and returns with
-        the count in one pass. hash() rejects some column types (maps) —
-        those queries fall back to a plain count and are NAMED in the
-        output's ``pruned_timing`` list so under-measured rows are
-        identifiable; any other failure propagates."""
-        try:
-            row = df.select(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.hash(*[F.col(c) for c in df.columns])).alias("h"),
-            ).collect()[0]
-            return row["n"]
-        except AnalysisException:
-            pruned_timing.append(name)
-            return df.count()
 
     # Median-of-N per query (default 3). Run 1 absorbs the per-PLAN
     # warm-up (codegen compilation, Arrow worker spin-up for that plan's
@@ -148,7 +150,7 @@ def main() -> None:
             release_stage_checkpoints(spark)
             spark.sparkContext._jvm.System.gc()
             start = time.perf_counter()
-            n = force_count(QUERIES[name](spark, sf_dir), name)
+            n = force_count(QUERIES[name](spark, sf_dir), name, pruned_timing)
             samples.append(time.perf_counter() - start)
             if rep == 0:
                 # memo was empty entering run 1 (released above), so a
@@ -173,7 +175,7 @@ def main() -> None:
             spark.sparkContext._jvm.System.gc()
             start = time.perf_counter()
             try:
-                force_count(QUERIES[name](spark, sf_dir), name)
+                force_count(QUERIES[name](spark, sf_dir), name, pruned_timing)
                 cold[name] = round(time.perf_counter() - start, 3)
             except Exception as exc:  # noqa: BLE001 — fault isolation
                 cold[name] = None
@@ -209,6 +211,9 @@ def main() -> None:
         # timings force full column evaluation since round 2;
         # compare per-query medians, not totals.
         "n_queries": len(timings),
+        # Core count of the run (local[cpus]): the sidecar guard keeps a
+        # many-core record from being replaced by a fewer-core run.
+        "cpus": cpus,
         "mean_query_sec": round(total / max(len(timings), 1), 3),
         "pruned_timing": pruned_timing,
         # Variance context: per-query value above is the MEDIAN of
@@ -250,11 +255,13 @@ def _sidecar_writable(sidecar: str, payload: dict) -> bool:
     """Refuse to clobber the committed full-scale record with a smoke run.
 
     A dev-loop run (lower sf, or a SPARK_GRAFT_BENCH_ONLY subset) once
-    overwrote the round's sf0.1 record one commit before the snapshot;
+    overwrote the round's sf0.1 record one commit before the snapshot,
+    and a local[8] run later replaced a local[32] record unnoticed;
     the sidecar is the round's durable benchmark evidence, so a run
-    that is smaller on EITHER axis (sf, query count) than the existing
-    record is not allowed to replace it unless SPARK_GRAFT_BENCH_FORCE=1.
-    Unreadable/absent sidecars are always writable."""
+    that is smaller on ANY axis (sf, query count, core count) than the
+    existing record is not allowed to replace it unless
+    SPARK_GRAFT_BENCH_FORCE=1. Unreadable/absent sidecars are always
+    writable; a record without a core count is not guarded on cores."""
     if os.environ.get("SPARK_GRAFT_BENCH_FORCE") == "1":
         return True
     try:
@@ -273,13 +280,18 @@ def _sidecar_writable(sidecar: str, payload: dict) -> bool:
         old_n = int(existing.get("n_queries", 0))
     except (ValueError, TypeError):
         old_n = 0
+    try:
+        old_cpus = int(existing.get("cpus", 0))
+    except (ValueError, TypeError):
+        old_cpus = 0
     new_sf = payload["sf"] if isinstance(payload["sf"], float) else 0.0
-    if new_sf < old_sf or payload["n_queries"] < old_n:
+    new_cpus = payload.get("cpus", 0)
+    if new_sf < old_sf or payload["n_queries"] < old_n or new_cpus < old_cpus:
         print(
             f"# sidecar guard: NOT overwriting {sidecar} "
-            f"(existing sf={old_sf} n={old_n}; this run sf={new_sf} "
-            f"n={payload['n_queries']}). Set SPARK_GRAFT_BENCH_FORCE=1 "
-            "to override.",
+            f"(existing sf={old_sf} n={old_n} cpus={old_cpus}; this run "
+            f"sf={new_sf} n={payload['n_queries']} cpus={new_cpus}). "
+            "Set SPARK_GRAFT_BENCH_FORCE=1 to override.",
             file=sys.stderr,
         )
         return False

@@ -26,7 +26,12 @@ Spark-first re-expression:
 - sinks: NDJSON (Spark's JSON writer is newline-delimited natively,
   S3) and a parquet store partitioned by ``year(publishedDate)`` — the
   columnar analog of the BigQuery table, with per-year partition
-  pruning matching the feed's natural per-year layout.
+  pruning matching the feed's natural per-year layout. Each append is
+  rebalanced on the year column, so it writes at most one file per year
+  it touches (AQE splits a year above its advisory partition size into
+  files of about that size). The remaining small-file source is the
+  current year, which gains one file per non-empty refresh pass (~72 a
+  day at the reference's 20-minute cadence) until it is compacted.
 """
 
 from __future__ import annotations
@@ -147,6 +152,14 @@ class NvdStore:
     layout becomes partition pruning for time-scoped queries; at 100 TB
     each year is an independently scannable directory.
 
+    Write layout: an append writes at most one file per year partition it
+    touches, whatever the shuffle-partition count; a year above AQE's
+    advisory partition size is split into files of about that size.
+    Every scan (``count_cves``, the ``cve_ids`` anti-join, end-user SQL)
+    therefore opens about one file per year per append that touched it. The
+    current year still gains one small file per non-empty refresh pass
+    (~72 a day at a 20-minute cadence); compacting it is an open item.
+
     The sink format is a SEAM, not a constant: parquet is canonical in
     the sandbox, but the reference's store is a warehouse load job
     (bq_nvd/bq.py:171-202) — pointing ``format`` at ``"bigquery"`` (with
@@ -217,10 +230,13 @@ class NvdStore:
         self._write(df, mode="append")
 
     def _write(self, df: DataFrame, mode: str) -> None:
+        # One file per year per append, not one per (shuffle task, year);
+        # see "Write layout" in the class docstring.
         (
             df.withColumn(
                 "_pub_year", F.coalesce(F.year("publishedDate"), F.lit(0))
             )
+            .hint("rebalance", "_pub_year")
             .write.format(self.format)
             .options(**self.options)
             .mode(mode)

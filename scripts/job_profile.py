@@ -6,20 +6,22 @@ the SQL UI / plan capture drops").
 Usage:
   python scripts/job_profile.py [--sf DIR] [--repeats N] name [name...]
 
-Methodology matches bench.py: same force_count timed action, shared
-stages released before run 1 (cold) and kept for runs 2+ (warm), GC
-outside the timing window. Job ids are read from the status tracker
-under a per-run job group, so concurrent listener noise never
-contaminates the count.
+Methodology follows bench.py: the same ``bench.force_count`` timed
+action (queries whose columns hash() rejects fall back to a plain count
+and are tagged ``pruned``), shared stages released before run 1 (cold)
+and kept for runs 2+ (warm), GC outside the timing window. Job ids are
+read from pyspark's status tracker under a per-run job group, so
+concurrent listener noise never contaminates the count.
 """
 
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
@@ -29,8 +31,7 @@ def main() -> int:
     ap.add_argument("names", nargs="+")
     args = ap.parse_args()
 
-    from pyspark.sql import functions as F
-
+    from bench import force_count
     from bq_nvd_spark.operators.checkpoint import (
         release_shared_stages,
         release_stage_checkpoints,
@@ -40,16 +41,11 @@ def main() -> int:
 
     spark = get_spark(app_name="job-profile")
     sc = spark.sparkContext
-    # same warm-up as bench.py: footers + codegen + Arrow workers
+    # parquet footers + codegen warm-up (bench.py also warms the Arrow
+    # workers and the streaming engine, so rep 0 here absorbs more)
     spark.read.parquet(f"{args.sf}/lineitem.parquet").count()
 
-    def force_count(df):
-        return df.select(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.hash(*[F.col(c) for c in df.columns])).alias("h"),
-        ).collect()[0]["n"]
-
-    tracker = sc._jsc.sc().statusTracker()
+    tracker = sc.statusTracker()
     for name in args.names:
         if name not in QUERIES:
             print(f"{name}: NOT REGISTERED", file=sys.stderr)
@@ -60,24 +56,21 @@ def main() -> int:
             sc._jvm.System.gc()
             group = f"profile_{name}_{rep}"
             sc.setJobGroup(group, name)
+            pruned: list[str] = []
             start = time.perf_counter()
-            force_count(QUERIES[name](spark, args.sf))
+            force_count(QUERIES[name](spark, args.sf), name, pruned)
             wall = time.perf_counter() - start
             sc.setJobGroup(None, None)
             job_ids = sorted(tracker.getJobIdsForGroup(group))
-            descs = []
+            stages = []
             for jid in job_ids:
                 info = tracker.getJobInfo(jid)
-                if info is None:
-                    descs.append((jid, "?", "?"))
-                    continue
-                sids = list(info.stageIds())
-                descs.append((jid, len(sids), str(info.status())))
+                stages.append("?" if info is None else len(info.stageIds))
             label = "cold" if rep == 0 else "warm"
             print(
                 f"{name} [{label} rep {rep}]: {wall:.3f}s, "
                 f"{len(job_ids)} jobs "
-                f"(stages/job: {[d[1] for d in descs]})"
+                f"(stages/job: {stages})" + (" pruned" if pruned else "")
             )
     spark.stop()
     return 0

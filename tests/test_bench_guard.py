@@ -40,6 +40,28 @@ def test_guard_allows_equal_or_bigger(tmp_path, monkeypatch):
     assert bench._sidecar_writable(sidecar, {"sf": 1.0, "n_queries": 179})
 
 
+def test_guard_blocks_lower_core_count(tmp_path, monkeypatch):
+    """A local[8] run must not replace a local[32] record; a record made
+    before the core count was recorded stays writable."""
+    monkeypatch.delenv("SPARK_GRAFT_BENCH_FORCE", raising=False)
+    sidecar = str(tmp_path / "BENCH_FULL.json")
+    with open(sidecar, "w") as fh:
+        json.dump({"sf": 0.1, "n_queries": 179, "cpus": 32}, fh)
+    assert not bench._sidecar_writable(
+        sidecar, {"sf": 0.1, "n_queries": 179, "cpus": 8}
+    )
+    assert bench._sidecar_writable(
+        sidecar, {"sf": 0.1, "n_queries": 179, "cpus": 32}
+    )
+    assert bench._sidecar_writable(
+        sidecar, {"sf": 0.1, "n_queries": 179, "cpus": 64}
+    )
+    _write(sidecar, 0.1, 179)
+    assert bench._sidecar_writable(
+        sidecar, {"sf": 0.1, "n_queries": 179, "cpus": 8}
+    )
+
+
 def test_guard_allows_missing_or_corrupt(tmp_path, monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_BENCH_FORCE", raising=False)
     sidecar = str(tmp_path / "BENCH_FULL.json")

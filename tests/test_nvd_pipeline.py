@@ -298,6 +298,18 @@ def _synth_feed_gz(path: str, year: int, n: int, start: int = 0) -> list[str]:
     return ids
 
 
+def _data_files(store_path: str) -> dict[str, int]:
+    """Data-file count per ``_pub_year=Y`` directory (checksums and
+    markers excluded)."""
+    return {
+        name: sum(
+            f.startswith("part-") for f in os.listdir(os.path.join(store_path, name))
+        )
+        for name in os.listdir(store_path)
+        if name.startswith("_pub_year=")
+    }
+
+
 def test_backfill_100k_bootstrap_incremental_and_partition_pruning(
     spark, tmp_path
 ):
@@ -338,11 +350,18 @@ def test_backfill_100k_bootstrap_incremental_and_partition_pruning(
     results = run(spark, store, feeds, recent, bootstrap_threshold=1000)
     assert [r.loaded for r in results] == list(years.values())
     assert store.count_cves() == total
+    # Write layout: each append writes one file per year it touches, not
+    # one per (shuffle task, year)
+    after_bootstrap = _data_files(store.path)
+    assert after_bootstrap == {f"_pub_year={y}": 1 for y in years}
 
     # Brownfield: incremental loads ONLY the 500 genuinely-new entries
     results = run(spark, store, feeds, recent, bootstrap_threshold=1000)
     assert [(r.loaded, r.skipped) for r in results] == [(500, False)]
     assert store.count_cves() == total + 500
+    # ... and adds exactly one file, under the one year it touches
+    after_incremental = _data_files(store.path)
+    assert after_incremental == {**after_bootstrap, "_pub_year=2021": 2}
 
     # First-write-wins: a re-published entry kept its ORIGINAL
     # lastModifiedDate (2021-12-31, not the recent feed's 2022-06-01)
@@ -372,3 +391,26 @@ def test_backfill_100k_bootstrap_incremental_and_partition_pruning(
     # on-disk layout: one directory per year (+ the ensure()-time marker)
     dirs = {n for n in os.listdir(store.path) if n.startswith("_pub_year=")}
     assert {f"_pub_year={y}" for y in years} <= dirs
+
+
+def test_append_splits_a_year_above_the_aqe_advisory_size(spark, tmp_path):
+    """One year is written as one file at the default advisory partition
+    size, and as several files of about that size once the year outgrows
+    it — the split comes from AQE, not from the shuffle task count."""
+    feed = str(tmp_path / "nvdcve-1.1-2020.json.gz")
+    _synth_feed_gz(feed, 2020, 20_000)
+
+    def files_written(name: str) -> int:
+        store = NvdStore(spark, str(tmp_path / name))
+        ingest_feed(spark, store, feed)
+        assert store.count_cves() == 20_000
+        return _data_files(store.path)["_pub_year=2020"]
+
+    assert files_written("default") == 1
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    previous = spark.conf.get(key)
+    spark.conf.set(key, "256k")
+    try:
+        assert files_written("small_advisory") >= 2
+    finally:
+        spark.conf.set(key, previous)
