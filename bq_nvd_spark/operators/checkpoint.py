@@ -24,13 +24,15 @@ until the RDD is unpersisted; nothing in Spark releases them when the
 consuming query finishes, so a long-lived session serving many queries
 (or re-running one) accumulates pinned storage and later runs pay
 eviction/GC — measured on local[32] as the same query slowing 2× per
-repeat. ``stage_checkpoint`` therefore records the persistent-RDD ids
-it creates, and ``release_stage_checkpoints`` unpersists them. The
-query registry calls it on every TOP-LEVEL query invocation (before
-building the new plan), which encodes the engine-wide contract that a
-query's lazily-held result must be fully consumed before the next
-registered query runs on the same session — the same
-consume-before-reinvoke contract the streaming upsert store documents.
+repeat. Every executor-local pin therefore goes through
+``local_checkpoint``, which returns the frame's own pinned RDD id (and
+raises if that id is not persisted); ``stage_checkpoint`` records it
+and ``release_stage_checkpoints`` unpersists it. The query registry
+calls that on every TOP-LEVEL query invocation (before building the
+new plan), which encodes the engine-wide contract that a query's
+lazily-held result must be fully consumed before the next registered
+query runs on the same session — the same consume-before-reinvoke
+contract the streaming upsert store documents.
 
 On the reliable-checkpoint branch the files live in the configured
 fault-tolerant directory; deployments should set
@@ -44,7 +46,6 @@ from __future__ import annotations
 
 import logging
 import threading
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -94,86 +95,41 @@ def _persistent_rdd_entries(sc):
 
 def _unpersist_ids(sc, ids) -> int:
     """Unpersist every persistent RDD whose id is in ``ids``; returns
-    the count actually released (ids already evicted contribute 0)."""
-    released = 0
-    if not ids:
-        return released
-    for rdd_id, jrdd in _persistent_rdd_entries(sc):
-        if rdd_id in ids:
-            jrdd.unpersist(False)
-            released += 1
-    return released
+    the count actually released (ids already evicted, and the None id
+    of a reliable checkpoint, contribute 0)."""
+    pinned = [jrdd for rdd_id, jrdd in _persistent_rdd_entries(sc) if rdd_id in ids]
+    for jrdd in pinned:
+        jrdd.unpersist(False)
+    return len(pinned)
 
 
-def checkpointed_rdd_id(df: DataFrame):
-    """RDD id backing a ``localCheckpoint``-ed DataFrame, or None.
-
-    The checkpointed DataFrame's analyzed plan is a single LogicalRDD
-    whose ``rdd`` is exactly the persisted block owner — its id lets a
-    releaser unpersist THAT entry instead of diffing the context-global
-    persistentRdds map (a diff also captures blocks a CONCURRENT query
-    persisted in the window and would wrongly unpersist them).
+def _checkpoint_rdd_id(df: DataFrame) -> int:
+    """Id of the RDD backing a checkpointed DataFrame: its analyzed plan
+    is one LogicalRDD whose ``rdd`` owns the persisted blocks, so a
+    release never touches blocks another query persisted.
     ``df.rdd.unpersist()`` cannot substitute: ``.rdd`` wraps a fresh
-    javaToPython RDD whose id differs from the persisted one. Returns
-    None when the plan is not the expected LogicalRDD shape (caller
-    falls back to the before/after diff).
-    """
-    try:
-        return df._jdf.queryExecution().analyzed().rdd().id()
-    except Exception:  # py4j shape drift: fall back, never fail a batch
-        return None
+    javaToPython RDD whose id differs from the persisted one."""
+    return df._jdf.queryExecution().analyzed().rdd().id()
 
 
-# Block ids each checkpointed frame pinned, captured AT CREATION and
-# keyed weakly by the frame itself — ``release_checkpoint`` consults
-# this first so a later py4j drift in re-resolving the id cannot turn
-# a targeted release into a silent no-op. Weak keys: a frame the
-# caller dropped takes its entry with it (the blanket release still
-# frees the blocks via _TRACKED).
-_FRAME_IDS: "weakref.WeakKeyDictionary[DataFrame, list[int]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def _local_checkpoint_with_ids(
+def local_checkpoint(
     df: DataFrame, *, eager: bool = True
-) -> tuple[DataFrame, list[int], bool]:
-    """``localCheckpoint`` ``df`` and return the persisted block ids.
+) -> tuple[DataFrame, int]:
+    """``localCheckpoint`` ``df``; return the frame and its pinned RDD id.
 
-    Prefers the checkpointed frame's own LogicalRDD id when resolvable
-    (scopes a later release to exactly this block even if a concurrent
-    query persists an RDD in the window); falls back to a before/after
-    diff of the persistentRdds map — RDD.persist registers there at
-    call time (localCheckpoint persists immediately even when lazy), so
-    the diff identifies the blocks this call pinned without touching
-    RDDs the caller cached. The fallback also covers the py4j drift
-    where ``analyzed().rdd()`` succeeds but hands back a non-persisted
-    wrapper: an untracked pin silently reintroduces the per-run leak.
-
-    The third element says whether the ids are EXACT (the frame's own
-    LogicalRDD id) or a diff capture that may include blocks a
-    concurrent call persisted in the window — ``shared_stage``'s race
-    path releases a loser's exact id unconditionally but must subtract
-    the winner's possible blocks from a diff capture.
-    """
-    sc = df.sparkSession.sparkContext
-    before = {rdd_id for rdd_id, _ in _persistent_rdd_entries(sc)}
+    The engine's one executor-local pin path. localCheckpoint persists
+    at call time even when lazy, so the frame's id must already be in
+    the persistent-RDD map; if not, every later release would silently
+    miss the pinned blocks — raise instead."""
     out = df.localCheckpoint(eager=eager)
-    target_id = checkpointed_rdd_id(out)
-    after = [rdd_id for rdd_id, _ in _persistent_rdd_entries(sc)]
-    exact = [r for r in after if r == target_id]
-    ids = exact or [r for r in after if r not in before]
-    # Under _TRACKED_LOCK: shared_stage supports concurrent racing
-    # builds, so two threads insert/pop this dict concurrently; the
-    # lock serializes THOSE explicit mutations. Note the limit: the
-    # GC-driven weakref removal callbacks inside WeakKeyDictionary do
-    # NOT take this lock — their safety rests on CPython's per-bytecode
-    # atomicity for single dict ops (GIL), not on the lock. On a
-    # free-threaded build this would need the dict's removal path to
-    # share the lock too.
-    with _TRACKED_LOCK:
-        _FRAME_IDS[out] = list(ids)
-    return out, ids, bool(exact)
+    rdd_id = _checkpoint_rdd_id(out)
+    sc = df.sparkSession.sparkContext
+    if not any(rid == rdd_id for rid, _ in _persistent_rdd_entries(sc)):
+        raise RuntimeError(
+            f"localCheckpoint pinned no persistent RDD with the frame's "
+            f"own id {rdd_id}; its blocks could never be released"
+        )
+    return out, rdd_id
 
 
 def stage_checkpoint(df: DataFrame, *, eager: bool = True) -> DataFrame:
@@ -187,23 +143,20 @@ def stage_checkpoint(df: DataFrame, *, eager: bool = True) -> DataFrame:
     sc = df.sparkSession.sparkContext
     if sc.getCheckpointDir() is not None:
         return df.checkpoint(eager=eager)
-    out, ids, _ = _local_checkpoint_with_ids(df, eager=eager)
+    out, rdd_id = local_checkpoint(df, eager=eager)
     owner = getattr(_CURRENT_QUERY, "name", None)
     with _TRACKED_LOCK:
-        _TRACKED.setdefault(sc.applicationId, []).extend(
-            (rdd_id, owner) for rdd_id in ids
-        )
+        _TRACKED.setdefault(sc.applicationId, []).append((rdd_id, owner))
     return out
 
 
 # Session-scoped memo for SHARED chain stages:
-# {appId: {key: (frame, [rdd_ids])}} — the persisted-block ids are
-# captured AT CREATION (same target-id-then-diff logic as
-# stage_checkpoint) so release never depends on re-resolving the id
-# later under py4j drift. Deliberately NOT in _TRACKED — the blanket
+# {appId: {key: (frame, rdd_id)}} — the pinned RDD id comes from
+# ``local_checkpoint`` at creation (None on the reliable branch, which
+# pins no executor blocks). Deliberately NOT in _TRACKED — the blanket
 # release at each top-level query entry must not drop a relation the
 # NEXT query in the chain is about to reuse. Guarded by the same lock.
-_SHARED: dict[str, dict[tuple, tuple[DataFrame, list[int]]]] = {}
+_SHARED: dict[str, dict[tuple, tuple[DataFrame, int | None]]] = {}
 
 # Audit escape hatch: when True, ``shared_stage`` returns ``build()``
 # directly — no checkpoint, no memo — so a plan audit can see the full
@@ -252,34 +205,20 @@ def shared_stage(spark: SparkSession, key: tuple, build) -> DataFrame:
     if sc.getCheckpointDir() is not None:
         # reliable files are the ContextCleaner's to manage — no
         # executor blocks to track
-        out, ids, exact = built.checkpoint(eager=True), [], True
+        out, rdd_id = built.checkpoint(eager=True), None
     else:
-        out, ids, exact = _local_checkpoint_with_ids(built)
+        out, rdd_id = local_checkpoint(built)
     with _TRACKED_LOCK:
         entries = _SHARED.setdefault(app, {})
         winner = entries.get(key)
-        if winner is not None:
-            # A concurrent first call won the race while we were
-            # building: keep ITS frame and release ours, or the loser's
-            # eagerly persisted blocks would be unreachable forever.
-            # An EXACT capture is OUR frame's own LogicalRDD id — it can
-            # never name the winner's block, so release it even if the
-            # winner's diff-captured list over-counted it (otherwise the
-            # loser's duplicate relation stays pinned for the app's
-            # lifetime). Only a diff capture, which may have swept up
-            # the winner's block persisted inside our window, must
-            # subtract the winner's stored ids — releasing the winner's
-            # block would strand the memoized frame (lineage truncated,
-            # blocks gone) for every later consumer. Double drift (both
-            # captures fell back to the diff) leaks the loser's blocks
-            # until release_shared_stages; leaking bounded storage beats
-            # risking the winner's relation.
-            loser_ids = set(ids) if exact else set(ids) - set(winner[1])
-        else:
-            entries[key] = (out, list(ids))
-            loser_ids = set()
+        if winner is None:
+            entries[key] = (out, rdd_id)
     if winner is not None:
-        _unpersist_ids(sc, loser_ids)
+        # A concurrent first call won the race while we were building:
+        # keep ITS frame and release ours, or the loser's eagerly
+        # persisted blocks would be unreachable forever. Our id is our
+        # own frame's pin, so it can never name the winner's blocks.
+        _unpersist_ids(sc, {rdd_id})
         return winner[0]
     return out
 
@@ -324,7 +263,7 @@ def release_shared_stage(spark: SparkSession, key: tuple) -> int:
         entry = _SHARED.get(sc.applicationId, {}).pop(key, None)
     if entry is None:
         return 0
-    return _unpersist_ids(sc, set(entry[1]))
+    return _unpersist_ids(sc, {entry[1]})
 
 
 def release_shared_stages(spark: SparkSession) -> int:
@@ -343,7 +282,7 @@ def release_shared_stages(spark: SparkSession) -> int:
     sc = spark.sparkContext
     with _TRACKED_LOCK:
         frames = _SHARED.pop(sc.applicationId, {})
-    ids = {rdd_id for _, stored in frames.values() for rdd_id in stored}
+    ids = {rdd_id for _, rdd_id in frames.values()}
     return _unpersist_ids(sc, ids)
 
 
@@ -355,33 +294,18 @@ def release_checkpoint(df: DataFrame) -> int:
     symmetric relation FROM it — after which the raw blocks are ~1.5×
     the edge-list memory held as dead weight until the next top-level
     query's blanket release). Removes the frame's pin from the tracked
-    list so the later blanket release doesn't double-release. Uses the
-    block ids captured when the frame was checkpointed; when none exist
-    (the reliable-checkpoint branch, whose files the ContextCleaner
-    owns, or a frame this module didn't checkpoint) it falls back to
-    re-resolving the id, and if THAT fails it logs the skip — an
-    iteration calling this per round (connected components) must not
-    silently degrade to O(rounds·|V|) pinned storage.
+    list so the later blanket release doesn't double-release. The id is
+    re-read from the frame; on the reliable-checkpoint branch it names
+    no persisted RDD (the ContextCleaner owns those files), so nothing
+    is released and 0 is returned.
     """
     sc = df.sparkSession.sparkContext
-    with _TRACKED_LOCK:  # WeakKeyDictionary: see _local_checkpoint_with_ids
-        ids = _FRAME_IDS.pop(df, None)
-    if ids is None:
-        target_id = checkpointed_rdd_id(df)
-        ids = [] if target_id is None else [target_id]
-    if not ids:
-        logger.info(
-            "release_checkpoint: no block ids resolvable for the frame — "
-            "its blocks (if any) stay pinned until the next top-level "
-            "query's blanket release"
-        )
-        return 0
-    id_set = set(ids)
+    rdd_id = _checkpoint_rdd_id(df)
     with _TRACKED_LOCK:
         pins = _TRACKED.get(sc.applicationId)
         if pins:
-            pins[:] = [(rid, o) for rid, o in pins if rid not in id_set]
-    return _unpersist_ids(sc, id_set)
+            pins[:] = [(rid, o) for rid, o in pins if rid != rdd_id]
+    return _unpersist_ids(sc, {rdd_id})
 
 
 def release_stage_checkpoints(

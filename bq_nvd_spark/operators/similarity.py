@@ -70,6 +70,26 @@ def fold_dot(a: Column | str, b: Column | str) -> Column:
     )
 
 
+def sorted_pairs(arr: str, a_name: str, b_name: str) -> Column:
+    """Every (a, b) with a before b in the array column ``arr``, as an
+    array of structs with fields ``a_name`` and ``b_name`` — on a
+    sorted, duplicate-free array, all pairs with a < b:
+    ``flatten(transform(arr, (a, i) -> transform(slice(arr, i + 2,
+    size(arr)), b -> struct(a, b))))``. The two-parameter lambda is the
+    intentional (element, index) form of HOF lambdas. Explode the result
+    for one row per pair, without a self-join.
+    """
+    return F.flatten(
+        F.transform(
+            arr,
+            lambda a, i: F.transform(
+                F.slice(arr, i + 2, F.size(arr)),
+                lambda b: F.struct(a.alias(a_name), b.alias(b_name)),
+            ),
+        )
+    )
+
+
 def _planes_lit() -> Column:
     """All N_BITS hyperplanes as ONE array<array<double>> literal.
 

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bq_nvd_spark.operators.similarity import sorted_pairs
 from bq_nvd_spark.plans.llm import _duck_band_cte, _spark_bands
 from bq_nvd_spark.plans.registry import query
 from bq_nvd_spark.plans.sampling import TRAIN_END as _SPLIT_TRAIN_END
@@ -547,20 +548,9 @@ def cross_source_contamination_matrix(
     # all (a, b) with a < b from the sorted source set — the same rows
     # the old self-join on gram produced, without shuffling the gram
     # relation twice
-    pair_structs = F.flatten(
-        F.transform(
-            "srcs",
-            lambda a, i: F.transform(
-                F.slice(F.col("srcs"), i + 2, F.size("srcs")),
-                lambda b: F.struct(
-                    a.alias("source_a"), b.alias("source_b")
-                ),
-            ),
-        )
-    )
-    pairs = capped.select(F.explode(pair_structs).alias("p")).select(
-        "p.source_a", "p.source_b"
-    )
+    pairs = capped.select(
+        F.explode(sorted_pairs("srcs", "source_a", "source_b")).alias("p")
+    ).select("p.source_a", "p.source_b")
     pa = per_src.select(
         F.col("source").alias("source_a"), F.col("n_grams").alias("na")
     )

@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType, StringType
 
-from bq_nvd_spark.operators.similarity import fold_dot_np
+from bq_nvd_spark.operators.similarity import fold_dot_np, sorted_pairs
 from bq_nvd_spark.plans.registry import query
 from bq_nvd_spark.sources.tables import load_table
 
@@ -465,18 +465,7 @@ def _capped_pairs(
         buckets = rel.groupBy(*keys).agg(
             F.array_sort(F.collect_list("doc_id")).alias("docs")
         )
-        # flatten(transform(docs, (a, i) -> transform(suffix, b -> (a, b))))
-        # — the two-parameter lambda is the *intentional* (element, index)
-        # form of HOF lambdas (contrast _minhash, where it must be avoided).
-        pairs = F.flatten(
-            F.transform(
-                "docs",
-                lambda a, i: F.transform(
-                    F.slice("docs", i + F.lit(2), F.size("docs")),
-                    lambda b: F.struct(a.alias("doc_a"), b.alias("doc_b")),
-                ),
-            )
-        )
+        pairs = sorted_pairs("docs", "doc_a", "doc_b")
         return buckets.select(F.explode(pairs).alias("p")).select(
             F.col("p.doc_a"), F.col("p.doc_b")
         )

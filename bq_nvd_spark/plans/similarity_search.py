@@ -23,6 +23,7 @@ from bq_nvd_spark.operators.similarity import (
     fold_dot,
     fold_dot_np,
     refine_bucket_np,
+    sorted_pairs,
 )
 from bq_nvd_spark.plans.registry import query
 from bq_nvd_spark.sources.tables import load_table
@@ -478,16 +479,7 @@ def _emb_bucket_pairs(sig: DataFrame) -> DataFrame:
                 F.collect_list(F.struct("vec_id", "v", "nrm"))
             ).alias("m")
         )
-        # flatten(transform(m, (a, i) -> transform(m[i+1:], b -> (a, b))))
-        pairs = F.flatten(
-            F.transform(
-                "m",
-                lambda a, i: F.transform(
-                    F.slice("m", i + F.lit(2), F.size("m")),
-                    lambda b: F.struct(a.alias("a"), b.alias("b")),
-                ),
-            )
-        )
+        pairs = sorted_pairs("m", "a", "b")
         return members.select(F.explode(pairs).alias("p")).select(
             F.col("p.a.vec_id").alias("id_a"),
             F.col("p.b.vec_id").alias("id_b"),

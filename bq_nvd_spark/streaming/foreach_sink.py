@@ -247,41 +247,24 @@ class ParquetUpsertStore:
         # over the stateful aggregate trips an attribute-resolution bug
         # in the incremental planner — `key not found: user_id#…` —
         # while the checkpoint's fresh LogicalRDD lineage is immune)
-        # materializes the O(|batch keys|) delta once. Release by the
-        # checkpointed frame's OWN LogicalRDD id when resolvable —
-        # ``batch_df.rdd.unpersist()`` would be a no-op on a fresh
-        # javaToPython wrapper, and a bare before/after diff of the
-        # context-global persistentRdds map would also capture (and
-        # wrongly unpersist) blocks a CONCURRENT query persisted in the
-        # window; the id pin scopes the release to this batch's block.
-        # The diff remains only as the fallback when the plan shape is
-        # not the expected single LogicalRDD.
+        # materializes the O(|batch keys|) delta once; its pin is
+        # released at commit through the engine's one pin path.
         from bq_nvd_spark.operators.checkpoint import (
-            _persistent_rdd_entries,
-            checkpointed_rdd_id,
+            _unpersist_ids,
+            local_checkpoint,
         )
 
-        sc = spark.sparkContext
-        before = {rdd_id for rdd_id, _ in _persistent_rdd_entries(sc)}
         # LAZY checkpoint: the touched-bucket collect below is the first
         # action and materializes it — an eager checkpoint would spend a
         # whole extra job on materialization alone (~one scheduling
         # round-trip per batch on the per-batch floor). The RDD still
         # registers in persistentRdds at call time, so the release
         # bookkeeping is unaffected.
-        batch_df = batch_df.localCheckpoint(eager=False)
-        target_id = checkpointed_rdd_id(batch_df)
-        pinned = [
-            (rdd_id, jrdd)
-            for rdd_id, jrdd in _persistent_rdd_entries(sc)
-            if (rdd_id == target_id)
-            or (target_id is None and rdd_id not in before)
-        ]
+        batch_df, rdd_id = local_checkpoint(batch_df, eager=False)
         try:
             self._merge_cached(batch_df, batch_id, key, delete_col, m, spark)
         finally:
-            for _, jrdd in pinned:
-                jrdd.unpersist(False)
+            _unpersist_ids(spark.sparkContext, {rdd_id})
 
     def _merge_cached(
         self,

@@ -5,7 +5,9 @@ cluster deployment path for the iterative CC / verify plans."""
 from __future__ import annotations
 
 import os
+import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from bq_nvd_spark.operators.checkpoint import stage_checkpoint
@@ -256,53 +258,6 @@ def test_shared_stage_build_race_releases_loser_blocks(spark):
         release_shared_stages(spark)
 
 
-def test_shared_stage_drift_race_releases_exact_loser(spark, monkeypatch):
-    """Drift+race combination: the WINNER's id capture fell back to the
-    before/after diff and swept the loser's block (persisted inside its
-    window) into its stored list. A loser whose own capture is EXACT
-    must still release its block — its LogicalRDD id can never name the
-    winner's block, so appearing in the winner's over-captured list is
-    not a reason to strand a duplicate copy of the relation."""
-    import bq_nvd_spark.operators.checkpoint as cp
-
-    sc = spark.sparkContext
-    app = sc.applicationId
-    key = ("test.drift_race", "k")
-    cp.release_shared_stages(spark)
-
-    # Real checkpointed frames so the block ids are genuinely pinned.
-    w_out, w_ids, _ = cp._local_checkpoint_with_ids(spark.range(5))
-    l_out, l_ids, l_exact = cp._local_checkpoint_with_ids(spark.range(6))
-    assert l_exact and w_ids and l_ids and set(w_ids) != set(l_ids)
-
-    def build():
-        # The racing winner stores its entry while we are "building":
-        # its diff capture over-counted the loser's block.
-        with cp._TRACKED_LOCK:
-            cp._SHARED.setdefault(app, {})[key] = (
-                w_out,
-                list(w_ids) + list(l_ids),
-            )
-        return spark.range(6)
-
-    monkeypatch.setattr(
-        cp,
-        "_local_checkpoint_with_ids",
-        lambda df, eager=True: (l_out, list(l_ids), True),
-    )
-    try:
-        got = cp.shared_stage(spark, key, build)
-        live = {rid for rid, _ in cp._persistent_rdd_entries(sc)}
-        # loser's duplicate blocks released despite the over-capture...
-        assert not (set(l_ids) & live), (l_ids, live)
-        # ...winner's frame kept servable
-        assert set(w_ids) <= live
-        assert got.count() == 5
-    finally:
-        cp.release_shared_stages(spark)
-        cp._unpersist_ids(sc, set(w_ids) | set(l_ids))
-
-
 def test_shared_stage_reliable_dir_leaves_no_pinned_blocks(
     spark, tmp_path
 ):
@@ -404,3 +359,103 @@ def test_shared_stage_survives_interleaved_registry_queries(spark, sf_dir):
         assert rebuilt == first
     finally:
         release_shared_stages(spark)
+
+
+def _persisted(sc) -> set[int]:
+    from bq_nvd_spark.operators.checkpoint import _persistent_rdd_entries
+
+    return {rdd_id for rdd_id, _ in _persistent_rdd_entries(sc)}
+
+
+def test_every_pin_is_one_rdd_named_by_the_frame(spark, tmp_path, monkeypatch):
+    """The one pin path: stage_checkpoint (eager and lazy), a
+    shared_stage build and a merge_batch each pin exactly ONE persisted
+    RDD, and it is the checkpointed frame's own LogicalRDD id. A lookup
+    that names an RDD the checkpoint did not persist raises instead of
+    leaking the real pin."""
+    import bq_nvd_spark.operators.checkpoint as cp
+    from bq_nvd_spark.streaming.foreach_sink import ParquetUpsertStore
+
+    sc = spark.sparkContext
+    cp.release_stage_checkpoints(spark)
+    cp.release_shared_stages(spark)
+    baseline = _persisted(sc)
+
+    for eager in (True, False):
+        out = cp.stage_checkpoint(spark.range(6), eager=eager)
+        assert _persisted(sc) - baseline == {cp._checkpoint_rdd_id(out)}
+        assert out.count() == 6
+        assert cp.release_stage_checkpoints(spark) == 1
+        assert _persisted(sc) == baseline
+
+    try:
+        shared = cp.shared_stage(
+            spark, ("test.one_pin", "k"), lambda: spark.range(4)
+        )
+        assert _persisted(sc) - baseline == {cp._checkpoint_rdd_id(shared)}
+    finally:
+        assert cp.release_shared_stages(spark) == 1
+    assert _persisted(sc) == baseline
+
+    seen: list[tuple[set[int], int]] = []
+    merge_cached = ParquetUpsertStore._merge_cached
+
+    def spy(self, batch_df, *args):
+        seen.append((_persisted(sc) - baseline, cp._checkpoint_rdd_id(batch_df)))
+        return merge_cached(self, batch_df, *args)
+
+    monkeypatch.setattr(ParquetUpsertStore, "_merge_cached", spy)
+    store = ParquetUpsertStore(str(tmp_path / "store"), n_buckets=2)
+    store.merge_batch(
+        spark.createDataFrame([(1, 10)], "user_id long, v long"), 0, "user_id"
+    )
+    assert [pinned for pinned, _ in seen] == [{seen[0][1]}]
+    assert _persisted(sc) == baseline
+
+    monkeypatch.setattr(cp, "_checkpoint_rdd_id", lambda df: -1)
+    try:
+        with pytest.raises(RuntimeError, match="no persistent RDD"):
+            cp.local_checkpoint(spark.range(3))
+        with pytest.raises(RuntimeError, match="no persistent RDD"):
+            cp.stage_checkpoint(spark.range(3))
+    finally:
+        cp._unpersist_ids(sc, _persisted(sc) - baseline)
+    assert cp.release_stage_checkpoints(spark) == 0
+
+
+def test_repeated_query_leaves_no_pinned_blocks(spark, sf_dir):
+    """No-leak bound for a long-lived session: three consumed
+    re-invocations of a stage_checkpointing query, each followed by a
+    top-level entry, leave the persistent-RDD set at its baseline."""
+    from bq_nvd_spark.operators.checkpoint import release_stage_checkpoints
+    from bq_nvd_spark.plans import QUERIES
+
+    sc = spark.sparkContext
+    release_stage_checkpoints(spark)
+    baseline = _persisted(sc)
+    for _ in range(3):
+        QUERIES["customer_rfm_segments"](spark, sf_dir).count()
+        assert _persisted(sc) - baseline, "the query pinned no blocks"
+        QUERIES["agg_count_scalar"](spark, sf_dir).count()
+        assert _persisted(sc) == baseline
+
+
+def test_only_the_checkpoint_module_pins_or_walks_blocks():
+    """Every executor-local pin goes through operators/checkpoint.py:
+    no other engine or script source calls localCheckpoint or walks the
+    persistent-RDD map itself."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    allowed = os.path.join(root, "bq_nvd_spark", "operators", "checkpoint.py")
+    pattern = re.compile(r"localCheckpoint\(|getPersistentRDDs")
+    hits = []
+    for top in ("bq_nvd_spark", "scripts"):
+        for dirpath, _, files in os.walk(os.path.join(root, top)):
+            for name in files:
+                path = os.path.join(dirpath, name)
+                if not name.endswith(".py") or path == allowed:
+                    continue
+                with open(path, encoding="utf-8") as fh:
+                    for lineno, line in enumerate(fh, 1):
+                        if pattern.search(line):
+                            hits.append(f"{os.path.relpath(path, root)}:{lineno}")
+    assert not hits, hits

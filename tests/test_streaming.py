@@ -345,9 +345,9 @@ def test_vacuum_slack_zero_restores_exact_cap(spark, tmp_path):
 def test_merge_batch_releases_checkpoint_blocks(spark, tmp_path):
     """merge_batch materializes the batch delta via localCheckpoint; the
     blocks must actually be RELEASED at commit (DataFrame.rdd.unpersist
-    would be a no-op on a fresh javaToPython wrapper — the fix diffs
-    the context's persistentRdds map), or a long-lived stream leaks one
-    checkpoint block per batch."""
+    would be a no-op on a fresh javaToPython wrapper — the release
+    unpersists the checkpointed frame's own LogicalRDD id), or a
+    long-lived stream leaks one checkpoint block per batch."""
     from bq_nvd_spark.operators.checkpoint import _persistent_rdd_entries
     from bq_nvd_spark.streaming.foreach_sink import ParquetUpsertStore
 
