@@ -72,8 +72,6 @@ def main() -> None:
             .select(F.lit(1).alias("one"))
             .dropDuplicates(["one"]),
             output_mode="append",
-            name_prefix="bench_warm",
-            state_partitions=1,
         )
 
     pruned_timing: list[str] = []

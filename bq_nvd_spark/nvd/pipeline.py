@@ -50,9 +50,15 @@ def ingest_feed(
     read → explode → anti-join); the only driver-side decision is the
     empty-delta short-circuit, which the reference also makes on the
     driver (etl.py:94-96).
+
+    The feed is read FAILFAST, as the reference aborts on bad JSON
+    (bq-nvd.py:116-124): a truncated or corrupt document raises before
+    anything is written, instead of parsing to zero rows and being
+    recorded as "no updates".
     """
     store.ensure()
-    incoming = dedup_within(cve_items(read_feed(spark, feed_path)))
+    feed = read_feed(spark, feed_path, mode="FAILFAST")
+    incoming = dedup_within(cve_items(feed))
     delta = deltas_only(incoming, store.cve_ids()) if deltas else incoming
 
     # Persist so the gz read → explode → anti-join plan executes ONCE:

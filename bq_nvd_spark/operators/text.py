@@ -106,3 +106,13 @@ def char_ngrams(text: Column | str, n: int) -> Column:
         F.sequence(F.lit(1), F.length(col) - (n - 1)),
         lambda i: col.substr(i, F.lit(n)),
     )
+
+
+def word_bigrams(toks: str) -> Column:
+    """Adjacent word bigrams ``"a b"`` of the token-array column named
+    ``toks``, in order. Callers gate arrays shorter than 2 tokens:
+    ``sequence(0, -1)`` steps downward in Spark."""
+    return F.expr(
+        f"transform(sequence(0, size({toks}) - 2),"
+        f" i -> concat(element_at({toks}, i + 1), ' ', element_at({toks}, i + 2)))"
+    )

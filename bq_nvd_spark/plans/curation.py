@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bq_nvd_spark.operators.similarity import sorted_pairs
+from bq_nvd_spark.operators.text import word_bigrams
 from bq_nvd_spark.plans.llm import _duck_band_cte, _spark_bands
 from bq_nvd_spark.plans.registry import query
 from bq_nvd_spark.plans.sampling import TRAIN_END as _SPLIT_TRAIN_END
@@ -694,13 +695,7 @@ def _build_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = docs.filter(F.size("toks") >= 2).select(
         "doc_id",
         "source",
-        F.explode(
-            F.expr(
-                "transform(sequence(0, size(toks) - 2),"
-                " i -> concat(element_at(toks, i + 1), ' ',"
-                " element_at(toks, i + 2)))"
-            )
-        ).alias("gram"),
+        F.explode(word_bigrams("toks")).alias("gram"),
     )
     return (
         grams.groupBy("doc_id", "source", "gram")
@@ -793,14 +788,7 @@ def repetition_gate_census(docs: DataFrame) -> DataFrame:
     toks = docs.select("source", F.split("text", " ").alias("toks"))
     grams = toks.select(
         "source",
-        F.when(
-            F.size("toks") >= 2,
-            F.expr(
-                "transform(sequence(0, size(toks) - 2),"
-                " i -> concat(element_at(toks, i + 1), ' ',"
-                " element_at(toks, i + 2)))"
-            ),
-        )
+        F.when(F.size("toks") >= 2, word_bigrams("toks"))
         .otherwise(F.expr("CAST(array() AS array<string>)"))
         .alias("g"),
     )

@@ -48,6 +48,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType, StringType
 
 from bq_nvd_spark.operators.similarity import fold_dot_np, sorted_pairs
+from bq_nvd_spark.operators.text import word_bigrams
 from bq_nvd_spark.plans.registry import query
 from bq_nvd_spark.sources.tables import load_table
 
@@ -612,12 +613,7 @@ def ngram_jaccard_adjacent(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     shingled = with_toks.select(
         "doc_id",
-        F.array_distinct(
-            F.expr(
-                "transform(sequence(0, size(toks) - 2),"
-                " i -> concat(element_at(toks, i + 1), ' ', element_at(toks, i + 2)))"
-            )
-        ).alias("sh"),
+        F.array_distinct(word_bigrams("toks")).alias("sh"),
     )
     a, b = shingled.alias("a"), shingled.alias("b")
     inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
@@ -2120,12 +2116,7 @@ def repetition_ngram_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bigrams = toks.select(
         "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(0, size(toks) - 2),"
-                " i -> concat(element_at(toks, i + 1), ' ', element_at(toks, i + 2)))"
-            )
-        ).alias("bg"),
+        F.explode(word_bigrams("toks")).alias("bg"),
     )
     counted = bigrams.groupBy("doc_id", "bg").agg(F.count(F.lit(1)).alias("c"))
     top_frac = F.floor(

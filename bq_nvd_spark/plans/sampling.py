@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType
 
+from bq_nvd_spark.operators.text import word_bigrams
 from bq_nvd_spark.plans.registry import query
 from bq_nvd_spark.sources.tables import load_table
 
@@ -641,14 +642,9 @@ def _dsir_feats(side: DataFrame, *keep: str) -> DataFrame:
     toks = side.select(*keep, F.split("text", " ").alias("toks"))
     feats = F.concat(
         F.col("toks"),
-        F.when(
-            F.size("toks") >= 2,
-            F.expr(
-                "transform(sequence(0, size(toks) - 2),"
-                " i -> concat(element_at(toks, i + 1), ' ',"
-                " element_at(toks, i + 2)))"
-            ),
-        ).otherwise(F.expr("CAST(array() AS array<string>)")),
+        F.when(F.size("toks") >= 2, word_bigrams("toks")).otherwise(
+            F.expr("CAST(array() AS array<string>)")
+        ),
     )
     return toks.select(*keep, F.explode(feats).alias("ft")).select(
         *keep,

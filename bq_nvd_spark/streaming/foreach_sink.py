@@ -1,12 +1,12 @@
 """foreachBatch upsert sink — the warehouse-merge half of SURVEY §2.9.
 
-``run_available_now`` (micro_batch.py) covers sinks Spark ships
-(memory/files); the pattern a real deployment needs for the
-reference's "load into the warehouse" step (reference bq.py:171-202
-does a synchronous load per feed) is **foreachBatch**: each
-micro-batch arrives as a plain DataFrame plus a monotonically
-increasing ``batch_id``, and the sink merges it into a keyed store
-transactionally.
+The pattern a real deployment needs for the reference's "load into
+the warehouse" step (reference bq.py:171-202 does a synchronous load
+per feed) is **foreachBatch**: each micro-batch arrives as a plain
+DataFrame plus a monotonically increasing ``batch_id``, and the sink
+merges it into a keyed store transactionally. The stream itself runs
+through ``micro_batch.run_available_now(..., foreach_batch=sink)``,
+the engine's one stream runner.
 
 The implementation here is the canonical exactly-once recipe from the
 Structured Streaming guide, with a copy-on-write *bucketed* layout so
@@ -50,51 +50,40 @@ import json
 import os
 import shutil
 import tempfile
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bq_nvd_spark.plans.registry import query
+from bq_nvd_spark.streaming.micro_batch import run_available_now
 
 
 class ParquetUpsertStore:
     """Keyed, hash-bucketed parquet store with per-bucket versioned
     commits and batch-id replay dedup (copy-on-write MERGE INTO)."""
 
-    def __init__(
-        self,
-        root: str,
-        n_buckets: int = 8,
-        max_history: int = 32,
-        vacuum_slack: int | None = None,
-    ):
+    def __init__(self, root: str, n_buckets: int = 8, max_history: int = 32):
         """``max_history`` bounds snapshot retention: once the manifest
         holds more than this many commits, ``merge_batch`` auto-vacuums
         (a long-lived stream would otherwise grow the manifest and
         superseded bucket-version directories without bound —
         O(batches × n_buckets) disk).
 
-        ``vacuum_slack`` is the hysteresis band: each auto-vacuum trims
-        to ``max_history - vacuum_slack`` snapshots, so the next trigger
-        is ``vacuum_slack + 1`` batches away and the vacuum's
-        full-store directory scan amortizes instead of running on
-        EVERY batch once the stream reaches the cap. Retention is
-        therefore ``max_history - vacuum_slack ≤ retained ≤
-        max_history``; ``read_at`` is only guaranteed for the last
-        ``max_history - vacuum_slack`` commits. The DEFAULT is 0 —
-        exact-cap retention, vacuum every batch at the cap — so the
-        documented ``read_at`` depth of ``max_history`` holds for
-        every caller that doesn't opt out; long-lived streams that
-        prefer amortized vacuums over the last few snapshots of
-        time-travel depth (this package's own streaming upsert/CDC
-        queries do) should pass ``max(1, max_history // 4)``."""
+        ``vacuum_slack = max_history // 4`` is the hysteresis band:
+        each auto-vacuum trims to ``max_history - vacuum_slack``
+        snapshots, so the next trigger is ``vacuum_slack + 1`` batches
+        away and the vacuum's full-store directory scan amortizes
+        instead of running on EVERY batch once the stream reaches the
+        cap. Retention is therefore ``max_history - vacuum_slack ≤
+        retained ≤ max_history``; ``read_at`` is only guaranteed for the
+        last ``max_history - vacuum_slack`` commits (24 at the default
+        cap of 32). Below ``max_history = 4`` the slack is 0: exact-cap
+        retention, vacuum every batch at the cap."""
         self.root = root
         self.n_buckets = n_buckets
         self.max_history = max(int(max_history), 1)
-        if vacuum_slack is None:
-            vacuum_slack = 0
-        self.vacuum_slack = min(max(int(vacuum_slack), 0),
-                                self.max_history - 1)
+        self.vacuum_slack = self.max_history // 4
         # Data-file schema memo (optimization round 17): the merge
         # contract fixes the row schema for the store's lifetime, yet
         # every per-batch touched-bucket read and every current()/
@@ -505,71 +494,56 @@ def _durable_workdir(tag: str) -> str:
     return work
 
 
-def run_upsert_totals_stream(
+def _user_totals(raw: DataFrame, *extra: Column) -> DataFrame:
+    """Per-user partial aggregate of the event stream: event count and
+    integer cents, plus any ``extra`` aggregate columns."""
+    return raw.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum((F.col("value").cast("decimal(18,2)") * 100).cast("bigint")).alias(
+            "cents"
+        ),
+        *extra,
+    )
+
+
+def _merge_stream(
     spark: SparkSession,
     sf_dir: str,
     work: str,
     n_chunks: int,
-    progress: list | None = None,
+    partials: Callable[[DataFrame], DataFrame],
+    delete_col: str | None = None,
 ) -> DataFrame:
-    """The upsert-totals pipeline with a parameterizable micro-batch
-    count: stage the events into ``n_chunks`` file chunks, stream them
-    through a foreachBatch merge sink (one batch per chunk), and return
-    the final store's lazy scan. Shared by the registered query (n=4)
-    and scripts/streaming_floor.py, which sweeps n to separate the
-    streaming engine's fixed per-batch cost from per-row work.
-
-    ``progress``, when passed, receives one StreamingQueryProgress dict
-    per micro-batch (the engine's own durationMs decomposition) —
-    scripts/streaming_floor_profile.py uses it to attribute the
-    per-batch floor to planning / WAL / state / sink."""
+    """The body both merge streams share: stage the events into
+    ``n_chunks`` file chunks, stream them (one micro-batch per chunk)
+    through ``partials`` into a foreachBatch merge sink keyed on
+    ``user_id``, and return the final store's lazy scan."""
     stage, schema = _shared_event_stage(spark, sf_dir, n_chunks)
-    store = ParquetUpsertStore(
-        os.path.join(work, "store"),
-        # long-lived stream: amortize the at-cap vacuum scan, trading
-        # the last max_history//4 snapshots of read_at depth
-        vacuum_slack=8,
-    )
-
+    store = ParquetUpsertStore(os.path.join(work, "store"))
     raw = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(os.path.join(stage, "chunk=*"))
     )
-    partials = raw.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum((F.col("value").cast("decimal(18,2)") * 100).cast("bigint")).alias(
-            "cents"
-        ),
-    )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        store.merge_batch(batch_df, batch_id, key="user_id")
+        store.merge_batch(batch_df, batch_id, key="user_id", delete_col=delete_col)
 
-    ckpt = os.path.join(work, "ckpt")
-    # Size the state-store count to the keyspace (~150 users), not the
-    # session's batch-shuffle width — same rationale and conf-restore
-    # discipline as run_available_now(state_partitions=...): 32 stores
-    # x per-batch snapshot I/O dominates a small-state stream.
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            partials.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        if progress is not None:
-            progress.extend(json.loads(p.json) for p in q.recentProgress)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
+    run_available_now(partials(raw), output_mode="update", foreach_batch=sink)
     final = store.current(spark)
-    if final is None:  # empty source -> empty store, not a crash
+    if final is None:  # empty source or all tombstoned -> empty, not a crash
         return spark.createDataFrame([], "user_id long, n_events long, cents bigint")
     return final.select("user_id", "n_events", "cents")
+
+
+def run_upsert_totals_stream(
+    spark: SparkSession, sf_dir: str, work: str, n_chunks: int
+) -> DataFrame:
+    """The upsert-totals pipeline with a parameterizable micro-batch
+    count. Shared by the registered query (n=4) and
+    scripts/streaming_floor.py, which sweeps n to separate the
+    streaming engine's fixed per-batch cost from per-row work."""
+    return _merge_stream(spark, sf_dir, work, n_chunks, _user_totals)
 
 
 @query(
@@ -595,6 +569,19 @@ def streaming_upsert_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_upsert_totals_stream(spark, sf_dir, work, n_chunks=4)
 
 
+def _cdc_totals(raw: DataFrame) -> DataFrame:
+    """User totals plus the tombstone verdict: the user's latest event
+    (by event_id) is an ``error``."""
+    return _user_totals(
+        raw, F.max_by("event_type", "event_id").alias("last_type")
+    ).select(
+        "user_id",
+        "n_events",
+        "cents",
+        (F.col("last_type") == "error").alias("is_deleted"),
+    )
+
+
 @query(
     "streaming_cdc_user_totals",
     oracle="""
@@ -617,64 +604,14 @@ def streaming_cdc_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     reappears in batch 3 when a newer non-error event arrives.  That
     makes the final store split-independent — it must equal the batch
     oracle for ANY chunking of the events — which is exactly the
-    replay-safe CDC contract.  Same bucketed copy-on-write store as
-    ``streaming_upsert_user_totals``; deletes rewrite only the buckets
-    the tombstoned keys hash into.
+    replay-safe CDC contract.  Same bucketed copy-on-write store and
+    stream body as ``streaming_upsert_user_totals``; deletes rewrite
+    only the buckets the tombstoned keys hash into.
 
     Consume-before-reinvoke: the returned DataFrame reads this
     process's scratch store, which the NEXT in-process invocation of
     this query wipes — collect the result before re-invoking."""
     work = _durable_workdir("cdc")
-    stage, schema = _shared_event_stage(spark, sf_dir, 4)
-    store = ParquetUpsertStore(
-        os.path.join(work, "store"),
-        # long-lived stream: amortize the at-cap vacuum scan, trading
-        # the last max_history//4 snapshots of read_at depth
-        vacuum_slack=8,
+    return _merge_stream(
+        spark, sf_dir, work, 4, _cdc_totals, delete_col="is_deleted"
     )
-
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(stage, "chunk=*"))
-    )
-    partials = (
-        raw.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(
-                (F.col("value").cast("decimal(18,2)") * 100).cast("bigint")
-            ).alias("cents"),
-            F.max_by("event_type", "event_id").alias("last_type"),
-        )
-        .select(
-            "user_id",
-            "n_events",
-            "cents",
-            (F.col("last_type") == "error").alias("is_deleted"),
-        )
-    )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        store.merge_batch(
-            batch_df, batch_id, key="user_id", delete_col="is_deleted"
-        )
-
-    ckpt = os.path.join(work, "ckpt")
-    saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        (
-            partials.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved)
-    final = store.current(spark)
-    if final is None:  # every user tombstoned -> empty result, not a crash
-        return spark.createDataFrame([], "user_id long, n_events long, cents bigint")
-    return final.select("user_id", "n_events", "cents")

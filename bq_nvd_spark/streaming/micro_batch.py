@@ -23,9 +23,12 @@ Streaming forms of the batch plans, each equivalent to its twin:
 - ``stateful.py`` (sibling module) — the applyInPandasWithState custom
   stateful operator.
 
-The registered queries run the stream to completion
-against a memory sink and returns the result as a plain DataFrame, so
-the driver's DuckDB oracle hash-checks the streaming path end to end.
+Every stream in the engine, memory sink or foreachBatch, starts in
+``run_available_now``: it owns the drain's temporary checkpoint, the
+AvailableNow trigger, ``awaitTermination`` and the state-store width
+(``STATE_PARTITIONS``). The registered queries here drain into a
+memory sink and return the result as a plain DataFrame, so the
+driver's DuckDB oracle hash-checks the streaming path end to end.
 
 Scale notes (100 TB): the file source lists and checkpoints incremental
 files only — a steady-state activation reads the delta, not the lake.
@@ -39,6 +42,7 @@ from __future__ import annotations
 
 import itertools
 import tempfile
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -84,6 +88,14 @@ EVENTS_STREAM_SCHEMA = StructType(
 
 _SINK_IDS = itertools.count()
 
+#: State-store count of every stream. A streaming query pins its
+#: state-store count to ``spark.sql.shuffle.partitions`` at first start,
+#: and each store commits its own snapshot files per batch, so a stream
+#: whose state is thousands of keys wants a handful of stores, not the
+#: session's batch-shuffle width (32 stores × file I/O dominates
+#: small-state micro-batches; a 100 TB keyspace would size this UP).
+STATE_PARTITIONS = 8
+
 
 def stream_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """Footer-schema file-source stream over one store table.
@@ -124,42 +136,38 @@ def run_available_now(
     df: DataFrame,
     *,
     output_mode: str,
-    name_prefix: str,
-    state_partitions: int | None = None,
-) -> DataFrame:
-    """Drain a streaming DataFrame with Trigger.AvailableNow into a memory
-    sink and return the materialized result as a batch DataFrame.
+    foreach_batch: Callable[[DataFrame, int], None] | None = None,
+) -> DataFrame | None:
+    """Drain a streaming DataFrame with Trigger.AvailableNow — the one
+    place in the engine that starts a stream.
 
-    ``state_partitions`` sizes the stateful-operator parallelism: a
-    streaming query pins its state-store count to
-    ``spark.sql.shuffle.partitions`` at first start, and each store
-    commits its own snapshot files per batch — so a query whose state is
-    thousands of keys wants a handful of stores, not the session's
-    batch-shuffle width (32 stores × file I/O dominates small-state
-    micro-batches; a 100 TB keyspace would instead size this UP). The
-    conf is restored once the stream terminates: micro-batches plan
+    Without ``foreach_batch`` the drain lands in a memory sink and the
+    materialized result comes back as a batch DataFrame; with it, each
+    micro-batch goes to ``foreach_batch(batch_df, batch_id)`` and the
+    call returns None. The checkpoint is a temporary directory that
+    lives for the drain only.
+
+    The stateful-operator width is ``STATE_PARTITIONS`` for the drain
+    and the session's ``spark.sql.shuffle.partitions`` is restored
+    afterwards, also when the stream fails: micro-batches plan
     asynchronously after ``start()``, and the stream runs synchronously
     to completion here, so nothing else compiles plans in between.
     """
     spark = df.sparkSession
-    name = f"{name_prefix}_{next(_SINK_IDS)}"
+    writer = df.writeStream.outputMode(output_mode).trigger(availableNow=True)
+    if foreach_batch is None:
+        name = f"available_now_{next(_SINK_IDS)}"
+        writer = writer.format("memory").queryName(name)
+    else:
+        writer = writer.foreachBatch(foreach_batch)
     saved = spark.conf.get("spark.sql.shuffle.partitions")
-    with tempfile.TemporaryDirectory(prefix="bq_nvd_ckpt_") as ckpt:
-        sink = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-        )
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        try:
-            sink.start().awaitTermination()
-        finally:
-            if state_partitions is not None:
-                spark.conf.set("spark.sql.shuffle.partitions", saved)
-    return spark.table(name)
+    spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
+    try:
+        with tempfile.TemporaryDirectory(prefix="bq_nvd_ckpt_") as ckpt:
+            writer.option("checkpointLocation", ckpt).start().awaitTermination()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
+    return spark.table(name) if foreach_batch is None else None
 
 
 # --------------------------------------------------------------------------
@@ -184,12 +192,7 @@ def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("w.start").alias("window_start"), "event_type", "n_events"
         )
     )
-    return run_available_now(
-        agg,
-        output_mode="complete",
-        name_prefix="stream_tumbling",
-        state_partitions=8,
-    )
+    return run_available_now(agg, output_mode="complete")
 
 
 # --------------------------------------------------------------------------
@@ -200,8 +203,8 @@ def stream_cve_ingest(spark: SparkSession, staging_dir: str) -> DataFrame:
     (``dropDuplicates`` state = the first-write-wins contract of
     etl.py:87-88, held across every file the stream ever reads), drain
     with AvailableNow per activation. Returns the deduped ID stream;
-    callers sink it with ``run_available_now`` or ``foreachBatch`` into
-    an ``NvdStore``.
+    callers drain it with ``run_available_now`` — into its memory sink,
+    or through ``foreach_batch`` into an ``NvdStore``.
     """
     from bq_nvd_spark.nvd.etl import ID_COL, NVD_TIMESTAMP_FORMAT
     from bq_nvd_spark.nvd.schema import nvd_schema
@@ -225,12 +228,7 @@ def streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = ev.select("user_id", "event_type").dropDuplicates(
         ["user_id", "event_type"]
     )
-    return run_available_now(
-        deduped,
-        output_mode="append",
-        name_prefix="stream_dedup",
-        state_partitions=8,
-    )
+    return run_available_now(deduped, output_mode="append")
 
 
 # --------------------------------------------------------------------------
@@ -255,12 +253,7 @@ def streaming_dedup_within_watermark(
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    return run_available_now(
-        deduped,
-        output_mode="append",
-        name_prefix="stream_dedup_wm",
-        state_partitions=8,
-    )
+    return run_available_now(deduped, output_mode="append")
 
 
 # --------------------------------------------------------------------------
@@ -292,12 +285,7 @@ def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("w.start").alias("window_start"), "n_events")
     )
-    return run_available_now(
-        agg,
-        output_mode="complete",
-        name_prefix="stream_sliding",
-        state_partitions=8,
-    )
+    return run_available_now(agg, output_mode="complete")
 
 
 # --------------------------------------------------------------------------
@@ -331,12 +319,7 @@ def streaming_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id", F.col("w.start").alias("session_start"), "n_events"
         )
     )
-    return run_available_now(
-        agg,
-        output_mode="complete",
-        name_prefix="stream_session",
-        state_partitions=8,
-    )
+    return run_available_now(agg, output_mode="complete")
 
 
 # --------------------------------------------------------------------------
@@ -389,12 +372,7 @@ def streaming_click_error_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") <= F.col("e_ts") + F.expr("INTERVAL 10 MINUTES")),
         "inner",
     ).select("error_id", "click_id", "user_id")
-    return run_available_now(
-        joined,
-        output_mode="append",
-        name_prefix="stream_join",
-        state_partitions=8,
-    )
+    return run_available_now(joined, output_mode="append")
 
 
 # --------------------------------------------------------------------------
@@ -434,12 +412,7 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_cents"
         ),
     )
-    return run_available_now(
-        agg,
-        output_mode="complete",
-        name_prefix="stream_enrich",
-        state_partitions=8,
-    )
+    return run_available_now(agg, output_mode="complete")
 
 
 # --------------------------------------------------------------------------
@@ -475,12 +448,7 @@ def streaming_approx_daily_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.approx_count_distinct("user_id", RSD).alias("approx_users"))
         .select(F.col("w.start").cast("date").alias("day"), "approx_users")
     )
-    streamed = run_available_now(
-        agg,
-        output_mode="complete",
-        name_prefix="stream_approx_users",
-        state_partitions=8,
-    )
+    streamed = run_available_now(agg, output_mode="complete")
     exact = (
         load_table(spark, sf_dir, "events")
         .groupBy(F.col("ts").cast("date").alias("day"))
@@ -514,8 +482,6 @@ def streaming_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(
         scrub_census(stream_table(spark, sf_dir, "documents")),
         output_mode="complete",
-        name_prefix="stream_pii",
-        state_partitions=8,
     )
 
 
@@ -536,8 +502,6 @@ def streaming_repetition_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(
         repetition_gate_census(stream_table(spark, sf_dir, "documents")),
         output_mode="complete",
-        name_prefix="stream_repgate",
-        state_partitions=8,
     )
 
 
@@ -554,8 +518,6 @@ def streaming_gopher_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(
         gopher_census_kernel(stream_table(spark, sf_dir, "documents")),
         output_mode="complete",
-        name_prefix="stream_gopher",
-        state_partitions=8,
     )
 
 
@@ -571,8 +533,6 @@ def streaming_c4_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(
         c4_census_kernel(stream_table(spark, sf_dir, "documents")),
         output_mode="complete",
-        name_prefix="stream_c4",
-        state_partitions=8,
     )
 
 
@@ -595,5 +555,4 @@ def streaming_c4_kept_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             c4_rules_kernel(stream_table(spark, sf_dir, "documents"))
         ),
         output_mode="append",
-        name_prefix="stream_c4kept",
     )

@@ -108,12 +108,7 @@ def stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch aggregate."""
     ev = stream_events(spark, sf_dir).select("user_id", "event_id", "value")
     totals = running_user_totals(ev)
-    out = run_available_now(
-        totals,
-        output_mode="update",
-        name_prefix="stateful_totals",
-        state_partitions=8,
-    )
+    out = run_available_now(totals, output_mode="update")
     # An AvailableNow drain may span several micro-batches (file splits);
     # 'update' emits a row per touched key per batch — keep each key's
     # final (largest-count) emission.
@@ -231,12 +226,7 @@ def streaming_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    out = run_available_now(
-        snap,
-        output_mode="update",
-        name_prefix="streaming_funnel",
-        state_partitions=8,
-    )
+    out = run_available_now(snap, output_mode="update")
     final = out.groupBy("user_id").agg(
         F.min("mv").alias("mv"), F.min("mc").alias("mc"), F.min("mp").alias("mp")
     )

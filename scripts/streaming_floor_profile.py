@@ -5,7 +5,8 @@ n_batches (~1.1 s/batch at sf0.1, local[32]). This harness answers
 WHERE that floor goes, two ways:
 
 1. **The engine's own per-batch decomposition**: run the registered
-   upsert pipeline capturing StreamingQueryProgress — ``durationMs``
+   upsert pipeline with a StreamingQueryListener capturing each
+   StreamingQueryProgress — ``durationMs``
    splits every trigger into triggerExecution / queryPlanning /
    getBatch (source listing) / walCommit + commitOffsets (checkpoint
    fsyncs) / addBatch (the batch's actual plan execution, which for
@@ -33,6 +34,7 @@ import os
 import shutil
 import sys
 import tempfile
+import threading
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -60,13 +62,16 @@ def main() -> None:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    from pyspark.sql import functions as F
+    from pyspark.sql.streaming import StreamingQueryListener
 
     from bq_nvd_spark.session import tune_session
     from bq_nvd_spark.streaming.foreach_sink import (
+        ParquetUpsertStore,
         _staged_event_chunks,
+        _user_totals,
         run_upsert_totals_stream,
     )
+    from bq_nvd_spark.streaming.micro_batch import run_available_now
 
     tune_session(spark)
 
@@ -78,8 +83,6 @@ def main() -> None:
         in the sink body — the merge variant otherwise absorbs the
         chunk-staging batch write plus a final store scan and its
         delta vs noop overstates the merge sink."""
-        from bq_nvd_spark.streaming.foreach_sink import ParquetUpsertStore
-
         work = tempfile.mkdtemp(prefix=f"floorprof_{kind}_")
         try:
             stage = os.path.join(work, "stage")
@@ -91,47 +94,42 @@ def main() -> None:
                 .option("maxFilesPerTrigger", 1)
                 .parquet(os.path.join(stage, "chunk=*"))
             )
+            sink = lambda df, bid: df.count()  # noqa: E731
             if kind == "noagg":
                 out, mode = raw, "append"
-                sink = lambda df, bid: df.count()  # noqa: E731
             else:
-                out = raw.groupBy("user_id").agg(
-                    F.count(F.lit(1)).alias("n_events"),
-                    F.sum(
-                        (F.col("value").cast("decimal(18,2)") * 100).cast(
-                            "bigint"
-                        )
-                    ).alias("cents"),
+                out, mode = _user_totals(raw), "update"
+            if kind == "merge":  # the real store sink, same as the query
+                store = ParquetUpsertStore(os.path.join(work, "store"))
+                sink = lambda df, bid: store.merge_batch(  # noqa: E731
+                    df, bid, key="user_id"
                 )
-                mode = "update"
-                if kind == "noop":
-                    sink = lambda df, bid: df.count()  # noqa: E731
-                else:  # merge — the real store sink, same as the query
-                    store = ParquetUpsertStore(
-                        os.path.join(work, "store"), vacuum_slack=8
-                    )
-                    sink = lambda df, bid: store.merge_batch(  # noqa: E731
-                        df, bid, key="user_id"
-                    )
-            saved = spark.conf.get("spark.sql.shuffle.partitions")
-            spark.conf.set("spark.sql.shuffle.partitions", "8")
-            try:
-                start = time.perf_counter()
-                (
-                    out.writeStream.foreachBatch(sink)
-                    .outputMode(mode)
-                    .option(
-                        "checkpointLocation", os.path.join(work, "ckpt")
-                    )
-                    .trigger(availableNow=True)
-                    .start()
-                    .awaitTermination()
-                )
-                return time.perf_counter() - start
-            finally:
-                spark.conf.set("spark.sql.shuffle.partitions", saved)
+            start = time.perf_counter()
+            run_available_now(out, output_mode=mode, foreach_batch=sink)
+            return time.perf_counter() - start
         finally:
             shutil.rmtree(work, ignore_errors=True)
+
+    class ProgressListener(StreamingQueryListener):
+        """One StreamingQueryProgress dict per micro-batch; ``done`` is
+        set once the query's termination event arrives (listener events
+        are delivered asynchronously, in order)."""
+
+        def __init__(self):
+            self.progress: list[dict] = []
+            self.done = threading.Event()
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            self.progress.append(json.loads(event.progress.json))
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            self.done.set()
 
     # Warm every path once (codegen, state-store provider, sink classes).
     for kind in ("noagg", "noop", "merge"):
@@ -143,14 +141,16 @@ def main() -> None:
     }
 
     # Engine decomposition from one instrumented merge run.
-    prog: list[dict] = []
+    listener = ProgressListener()
+    spark.streams.addListener(listener)
     work = tempfile.mkdtemp(prefix="floorprof_instr_")
     try:
-        run_upsert_totals_stream(
-            spark, args.sf, work, n_chunks=args.chunks, progress=prog
-        ).count()
+        run_upsert_totals_stream(spark, args.sf, work, n_chunks=args.chunks).count()
+        listener.done.wait(timeout=30)
     finally:
+        spark.streams.removeListener(listener)
         shutil.rmtree(work, ignore_errors=True)
+    prog = listener.progress
     dur_keys = sorted({k for p in prog for k in p.get("durationMs", {})})
     durations = {
         k: [p["durationMs"].get(k) for p in prog] for k in dur_keys

@@ -268,6 +268,25 @@ def test_corrupt_feed_audit_and_failfast(spark, tmp_path):
         read_feed(spark, bad, mode="FAILFAST").count()
 
 
+def test_ingest_of_truncated_feed_raises_and_leaves_store(spark, tmp_path):
+    """A year feed cut off mid-document must fail the ingest loudly and
+    leave the store as it was, not ingest as an empty "no updates"
+    delta (the year would otherwise be missing for good)."""
+    with gzip.open(YEAR_FEED, "rb") as fh:
+        doc = fh.read()
+    truncated = str(tmp_path / "nvdcve-1.1-2024.json.gz")
+    with gzip.open(truncated, "wb") as fh:
+        fh.write(doc[: len(doc) // 2])
+
+    store = NvdStore(spark, str(tmp_path / "store"))
+    ingest_feed(spark, store, RECENT_FEED)
+    before = store.count_cves()
+    assert before > 0
+    with pytest.raises(Exception, match="FAILFAST|Malformed|malformed"):
+        ingest_feed(spark, store, truncated)
+    assert store.count_cves() == before
+
+
 # --------------------------------------------------------------------------
 # Scale rehearsal: a synthetic multi-year backfill (~100k CVEs, the size
 # of the real NVD corpus) through bootstrap → incremental →

@@ -8,6 +8,11 @@ engine (isStreaming, bounded trigger)."""
 
 from __future__ import annotations
 
+import os
+import re
+
+import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
 from bq_nvd_spark.sources.tables import load_table
@@ -17,6 +22,7 @@ from bq_nvd_spark.streaming import (
     streaming_dedup_keys,
     streaming_tumbling_counts,
 )
+from bq_nvd_spark.streaming.micro_batch import STATE_PARTITIONS
 
 
 def _as_set(df):
@@ -58,7 +64,6 @@ def test_available_now_rerun_is_stable(spark, sf_dir):
             ["user_id", "event_type"]
         ),
         output_mode="append",
-        name_prefix="stability",
     )
     second = streaming_dedup_keys(spark, sf_dir)
     assert _as_set(first) == _as_set(second)
@@ -80,12 +85,7 @@ def test_stream_cve_ingest_first_write_wins(spark, tmp_path):
 
     stream = stream_cve_ingest(spark, staging)
     assert stream.isStreaming
-    got = run_available_now(
-        stream.select("ID"),
-        output_mode="append",
-        name_prefix="cve_ingest",
-        state_partitions=4,
-    )
+    got = run_available_now(stream.select("ID"), output_mode="append")
     got_ids = {r.ID for r in got.collect()}
     want_ids = {r[0] for r in items.select(ID_COL).collect()}
     assert got_ids == want_ids
@@ -303,9 +303,8 @@ def test_auto_vacuum_hysteresis_amortizes_scans(spark, tmp_path):
     [max_history - s, max_history] band."""
     from bq_nvd_spark.streaming.foreach_sink import ParquetUpsertStore
 
-    store = ParquetUpsertStore(
-        str(tmp_path / "store"), n_buckets=2, max_history=8, vacuum_slack=3
-    )
+    store = ParquetUpsertStore(str(tmp_path / "store"), n_buckets=2, max_history=8)
+    assert store.vacuum_slack == 2  # derived: max_history // 4
     calls = []
     inner = store.vacuum
     store.vacuum = lambda keep_last=1: calls.append(keep_last) or inner(
@@ -318,8 +317,8 @@ def test_auto_vacuum_hysteresis_amortizes_scans(spark, tmp_path):
         )
         store.merge_batch(df, batch_id=bid, key="user_id")
         assert len(store._manifest()["history"]) <= store.max_history + 1
-    # triggers at history lengths 9, then every slack+1 = 4 batches:
-    # 16 batches -> first trigger at batch 8, then 12 (len 9 again) ...
+    # triggers at history length 9, then every slack+1 = 3 batches:
+    # 16 batches -> first trigger at batch 8, then 11 (len 9 again) ...
     expected = (n - store.max_history - 1) // (store.vacuum_slack + 1) + 1
     assert len(calls) == expected
     assert all(k == store.max_history - store.vacuum_slack for k in calls)
@@ -333,9 +332,8 @@ def test_auto_vacuum_hysteresis_amortizes_scans(spark, tmp_path):
 def test_vacuum_slack_zero_restores_exact_cap(spark, tmp_path):
     from bq_nvd_spark.streaming.foreach_sink import ParquetUpsertStore
 
-    store = ParquetUpsertStore(
-        str(tmp_path / "store"), n_buckets=2, max_history=2, vacuum_slack=0
-    )
+    store = ParquetUpsertStore(str(tmp_path / "store"), n_buckets=2, max_history=2)
+    assert store.vacuum_slack == 0  # derived: max_history // 4
     for bid in range(5):
         df = spark.createDataFrame([(0, bid)], "user_id long, cents long")
         store.merge_batch(df, batch_id=bid, key="user_id")
@@ -367,3 +365,53 @@ def test_merge_batch_releases_checkpoint_blocks(spark, tmp_path):
         r["user_id"]: r["v"] for r in store.current(spark).collect()
     }
     assert got == {1: 12, 2: 22}
+
+
+def test_runner_restores_shuffle_width_after_failing_sink(spark, sf_dir):
+    """The runner sets the state-store width for the drain and restores
+    the session's shuffle width afterwards, also when a foreachBatch
+    sink raises (and the failure reaches the caller)."""
+    key = "spark.sql.shuffle.partitions"
+    previous = spark.conf.get(key)
+    seen = []
+
+    def failing_sink(batch_df, batch_id):
+        seen.append(spark.conf.get(key))
+        raise ValueError("sink failed")
+
+    spark.conf.set(key, "3")
+    try:
+        with pytest.raises(StreamingQueryException, match="sink failed"):
+            run_available_now(
+                stream_events(spark, sf_dir).select("user_id"),
+                output_mode="append",
+                foreach_batch=failing_sink,
+            )
+        assert seen == [str(STATE_PARTITIONS)]
+        assert spark.conf.get(key) == "3"
+    finally:
+        spark.conf.set(key, previous)
+
+
+def test_only_the_runner_starts_streams():
+    """Every stream starts in streaming/micro_batch.py::run_available_now:
+    no other engine or script source opens a writeStream, awaits a
+    query or sets the session's shuffle width (a builder ``.config`` of
+    it, as in session.py, is not a set)."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    allowed = os.path.join(root, "bq_nvd_spark", "streaming", "micro_batch.py")
+    pattern = re.compile(
+        r"\.writeStream|awaitTermination\(|conf\.set\([^)]*shuffle\.partitions"
+    )
+    hits = []
+    for top in ("bq_nvd_spark", "scripts"):
+        for dirpath, _, files in os.walk(os.path.join(root, top)):
+            for name in files:
+                path = os.path.join(dirpath, name)
+                if not name.endswith(".py") or path == allowed:
+                    continue
+                with open(path, encoding="utf-8") as fh:
+                    for lineno, line in enumerate(fh, 1):
+                        if pattern.search(line):
+                            hits.append(f"{os.path.relpath(path, root)}:{lineno}")
+    assert not hits, hits
