@@ -6,9 +6,8 @@ feature-extract / frame-sample run as Python stages over ``mapInPandas``
 so each task sees whole Arrow batches (one Python roundtrip per batch,
 never per row).
 
-The real decoders (PIL / libav / librosa) are not available in this
-container, so ``decode_image_real`` raises ``NotImplementedError`` and
-the pipeline runs a **deterministic fake decode** over the raw bytes:
+The real decoders (PIL / libav / librosa) are not installed, so the
+pipeline runs a **deterministic fake decode** over the raw bytes:
 every derived feature is exact integer math on the byte values, which
 lets the DuckDB oracle mirror the computation character-by-character and
 hash-check the whole mapInPandas path (schema, batching, one-to-one and
@@ -23,7 +22,7 @@ binary column before anything wide (join/agg) happens downstream.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -67,14 +66,6 @@ RESIZE_SCHEMA = StructType(
 )
 
 
-def decode_image_real(payload: bytes) -> dict:
-    """Real image decode (PIL) — unavailable in this environment."""
-    raise NotImplementedError(
-        "image decoding requires PIL/pillow, which is not installed; "
-        "the pipeline uses the deterministic fake decode instead"
-    )
-
-
 def _fake_decode(payload: bytes) -> tuple[int, int, int, int]:
     """Deterministic stand-in for a media header parse + stats pass.
 
@@ -90,25 +81,46 @@ def _fake_decode(payload: bytes) -> tuple[int, int, int, int]:
     return n, width, height, mean_x100
 
 
-def decode_media(media: DataFrame) -> DataFrame:
-    """Decode a ``(doc_id, payload binary)`` frame into per-media features.
-
-    One output row per input row; batches stay in Arrow end to end.
-    """
+def _map_payloads(
+    media: DataFrame,
+    schema: StructType,
+    rows: Callable[[int, bytes], Iterable[tuple]],
+) -> DataFrame:
+    """``mapInPandas`` over ``(doc_id, payload)`` batches: ``rows`` maps
+    one payload to its output rows, the batch leaves as int64 Arrow."""
+    columns = [f.name for f in schema.fields]
 
     def batches(parts: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in parts:
             if pdf.empty:
                 continue
-            rows = [
-                (doc_id, *_fake_decode(payload))
+            out = [
+                row
                 for doc_id, payload in zip(pdf["doc_id"], pdf["payload"])
+                for row in rows(doc_id, payload)
             ]
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in DECODE_SCHEMA.fields]
-            ).astype("int64")
+            yield pd.DataFrame(out, columns=columns).astype("int64")
 
-    return media.mapInPandas(batches, DECODE_SCHEMA)
+    return media.mapInPandas(batches, schema)
+
+
+def decode_media(media: DataFrame) -> DataFrame:
+    """Decode a ``(doc_id, payload binary)`` frame into per-media features.
+
+    One output row per input row; batches stay in Arrow end to end.
+    """
+    return _map_payloads(
+        media,
+        DECODE_SCHEMA,
+        lambda doc_id, payload: [(doc_id, *_fake_decode(payload))],
+    )
+
+
+def _thumb_digest(doc_id: int, payload: bytes) -> list[tuple[int, int, int]]:
+    buf = np.frombuffer(payload, dtype=np.uint8)
+    stride = max(buf.size // THUMB_BYTES, 1)
+    thumb = buf[::stride][:THUMB_BYTES]
+    return [(doc_id, int(thumb.size), int(thumb.sum(dtype=np.int64)))]
 
 
 def resize_thumb(media: DataFrame) -> DataFrame:
@@ -117,24 +129,12 @@ def resize_thumb(media: DataFrame) -> DataFrame:
     real implementation would interpolate pixels; the stride sample
     keeps the arithmetic oracle-reproducible). Emits the thumb's length
     and byte-sum as the verifiable digest."""
+    return _map_payloads(media, RESIZE_SCHEMA, _thumb_digest)
 
-    def batches(parts: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in parts:
-            if pdf.empty:
-                continue
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                buf = np.frombuffer(payload, dtype=np.uint8)
-                stride = max(buf.size // THUMB_BYTES, 1)
-                thumb = buf[::stride][:THUMB_BYTES]
-                rows.append(
-                    (doc_id, int(thumb.size), int(thumb.sum(dtype=np.int64)))
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in RESIZE_SCHEMA.fields]
-            ).astype("int64")
 
-    return media.mapInPandas(batches, RESIZE_SCHEMA)
+def _frames(doc_id: int, payload: bytes) -> Iterator[tuple[int, int, int]]:
+    frames = np.frombuffer(payload, dtype=np.uint8)[::FRAME_STRIDE]
+    return ((doc_id, idx, int(val)) for idx, val in enumerate(frames))
 
 
 def frame_sample(media: DataFrame) -> DataFrame:
@@ -144,19 +144,4 @@ def frame_sample(media: DataFrame) -> DataFrame:
     ``ceil(n_bytes / FRAME_STRIDE)`` frame rows — the shape a real
     video-frame or audio-window sampler produces.
     """
-
-    def batches(parts: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in parts:
-            if pdf.empty:
-                continue
-            out: list[tuple[int, int, int]] = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                frames = np.frombuffer(payload, dtype=np.uint8)[::FRAME_STRIDE]
-                out.extend(
-                    (doc_id, idx, int(val)) for idx, val in enumerate(frames)
-                )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in FRAME_SCHEMA.fields]
-            ).astype("int64")
-
-    return media.mapInPandas(batches, FRAME_SCHEMA)
+    return _map_payloads(media, FRAME_SCHEMA, _frames)

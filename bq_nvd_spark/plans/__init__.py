@@ -1,231 +1,14 @@
 """Query plans: the engine's user-facing query surface.
 
 Importing this package populates the registry (``QUERIES`` / ``ORACLES``)
-with every declared operator from SURVEY.md §2.
+with every declared operator from SURVEY.md §2; ``query()`` keeps the
+``DRIVER_WINDOW`` names first whatever the import order.
 """
 
-from bq_nvd_spark.plans.registry import ORACLES, QUERIES
+from bq_nvd_spark.plans.registry import DRIVER_WINDOW, ORACLES, QUERIES
 
-# The external correctness driver verifies the FIRST 50 registered queries
-# (registration order == dict insertion order). Rotation rule, learned
-# over rounds 4-11: queries whose CODE changed this round lead (their
-# old green rows describe code that no longer exists), then
-# never-checked and re-oracled names, then the stalest backlog; only
-# truly-unchanged names may defer to the next round.
-_DRIVER_PRIORITY = [
-    # -- round 17 window (VERDICT r16 task 1, the rotation
-    # pre-computed at r16 close, adjusted per the standing
-    # code-change-outranks-backlog rule): r17-code-changed names
-    # first (3 from the build round's task-5 refactor + 3 from
-    # optimization batch 8 + 1 from the continuation-2 HOF
-    # pre-filter), then the 11 never-driver-checked r16 additions,
-    # then the 9 r12-era deferrals (evidence age 4 rounds — the
-    # oldest backlog), then the 23 alphabetically-first r13-era
-    # names = 50 exactly.
-    # Post-r16 evidence distribution (from CORRECTNESS_r01-r16,
-    # recomputed at r17 open): 11 never-checked + 9 @r12 + 50 @r13
-    # + 49 @r14 + 50 @r15 + 50 @r16.
-    # Code changed in r17 (VERDICT r16 task 5): the Gopher rules
-    # relation is now shared_stage'd across its FIVE batch
-    # consumers — doc_gopher_quality_profile, gopher_quality_census,
-    # quality_gate_agreement, doc_line_repetition_profile,
-    # line_repetition_census (the last three already below in the
-    # never-checked tier) — and the census kernel was split into
-    # kernel + aggregation halves; streaming_gopher_gate shares the
-    # kernel composition, so its r16 row describes a superseded
-    # code path too. All six re-mirrored x3 SFs post-change.
-    # Also code changed in r17: bloom_decontamination_census (its
-    # probe half extracted into bloom_flagged_ids for the fast-path
-    # transform; in the never-checked tier below, re-mirrored x3
-    # SFs post-refactor).
-    # Deferral note: the 26 r13-era names outside this window defer
-    # to r18 with evidence age 5 rounds —
-    # nvd_av_severity_matrix (evicted by the continuation-2
-    # code-changed entrant hof_filter_transform_fold; unchanged code),
-    # nvd_cwe_counts, nvd_modification_lag, nvd_reference_tag_counts
-    # (evicted by optimization batch 8's three code-changed entrants;
-    # unchanged code), nvd_v2_v3_score_gap, nvd_version_bounds,
-    # order_price_percentiles_exact, order_price_quantiles,
-    # orders_above_customer_avg, orders_mom_growth,
-    # range_join_clicks_after_error, regex_normalize_parts,
-    # rollup_orders_by_month, salted_distinct_users_per_type,
-    # semantic_dedup_survivors, ship_delay_by_month,
-    # sliding_window_hourly_30m,
-    # streaming_click_error_join, streaming_dedup_keys,
-    # streaming_session_counts, streaming_sliding_counts,
-    # streaming_tumbling_counts, text_quality_stats,
-    # train_val_test_split, tumbling_window_hourly,
-    # unpivot_lineitem_measures. (simhash_signatures left this list
-    # for the window's code-changed tier — batch 8 rebased it onto
-    # the shared signature relation.) They are the oldest backlog
-    # after this window and MUST lead the r18 window (all unchanged;
-    # the pre-batch-8 set was re-verified against CORRECTNESS_r01-r16
-    # after a review catch — 23 names, then 25 with batch 8's
-    # evictions and simhash_signatures' departure, now 26 with
-    # nvd_av_severity_matrix).
-    # Added in round 17 BEYOND the window, owed to the r18 window as
-    # never-driver-checked (each mirror-green x3 SFs on add):
-    # doc_c4_quality_profile + c4_quality_census + c4_kept_docs +
-    # streaming_c4_gate (the C4 rule set — Raffel et al. 2020 §2.2
-    # line-drop/page-drop gate + kept-lines transform + ingest twin,
-    # E4 in plans/curation.py + streaming/micro_batch.py, VERDICT
-    # r16 task 3);
-    # proto_pruned_survivors + proto_pruning_census (D4-style
-    # prototypicality pruning over the shared IVF quantizer —
-    # SemDeDup's published companion stage, E3xE6 in
-    # plans/similarity_search.py, VERDICT r16 task 4);
-    # bloom_decontaminated_docs (the production Bloom-only
-    # decontamination transform — bloom_flagged_ids anti-join,
-    # E6xE7 in plans/sampling.py, VERDICT r16 task 6; its sibling
-    # census was re-mirrored x3 SFs after the kernel-split
-    # refactor and sits in this window's never-checked tier);
-    # ffd_packed_docs + ffd_packing_census (first-fit-decreasing
-    # whole-document bin packing vs the concat-chunk baseline —
-    # grouped-applyInPandas trace, recursive-CTE oracle, E6 in
-    # plans/sampling.py, VERDICT r16 task 8);
-    # ivf_recall_census (beyond-brief: per-query recall@K of the
-    # IVF index vs the exact brute top-K — the IVF_NPROBE tuning
-    # artifact beside ivf_cell_census, E3 in
-    # plans/similarity_search.py);
-    # curation_funnel_census (beyond-brief: per-source sequential
-    # attrition through the stacked C4 -> Gopher -> repetition
-    # gates, all verdicts from the shared memos, E4/E6 in
-    # plans/curation.py);
-    # ivf_nprobe_sweep (beyond-brief: the full recall-vs-probe-
-    # budget tuning curve for 1..IVF_NPROBE in one pass, E3 in
-    # plans/similarity_search.py);
-    # zipf_rank_census (beyond-brief: power-of-two rank-bucketed
-    # token frequency census — the Zipf companion to
-    # vocab_growth_curve's Heaps curve, E4+ in plans/curation.py);
-    # streaming_c4_kept_docs (beyond-brief: the C4 transform as an
-    # append-mode zero-state ingest stream — the scrub family's
-    # first row-emitting transform twin, T4xE4 in
-    # streaming/micro_batch.py);
-    # d4_pipeline_survivors (beyond-brief: the composed
-    # SemDeDup -> prototypicality-prune recipe with the quota
-    # re-derived over the post-dedup cell population, E2xE3xE6 in
-    # plans/similarity_search.py; semdedup_survivors — in this
-    # window's never-checked tier — had its dropped-set derivation
-    # factored into _semdedup_dropped and was re-mirrored x3 SFs
-    # post-refactor);
-    # gate_agreement_cube (beyond-brief: the full 2^3 three-gate
-    # contingency the pairwise matrix and the funnel marginalize,
-    # E4/E6 in plans/curation.py).
-    # -- code changed in r17 (task 5 shared_stage refactor; old
-    #    green rows describe code that no longer exists) --
-    "doc_gopher_quality_profile",
-    "gopher_quality_census",
-    "streaming_gopher_gate",
-    # -- code changed in r17 optimization batch 8 (shared simhash
-    #    signature relation; shared BM25-MQ contrib relation): their
-    #    pre-r17 green rows describe superseded plans. The other two
-    #    batch-8-changed names (bm25_multi_query_topk,
-    #    cross_source_contamination_matrix) already sit in this
-    #    window's r13-backlog tier below. To keep the window at 50
-    #    these three evict the alphabetical tail of the r13 tier
-    #    (nvd_cwe_counts, nvd_modification_lag,
-    #    nvd_reference_tag_counts — unchanged code), which joins the
-    #    r18-owed deferral list in the note above. All five
-    #    batch-8-changed names re-mirrored x3 SFs post-change. --
-    "simhash_signatures",
-    "simhash_near_dup_pairs",
-    "rrf_fusion_topk",
-    # -- code changed in r17 optimization continuation-2 (q > 25
-    #    pre-filter pushed below the array build — plan now scans
-    #    with PushedFilters on l_quantity; mirror-green x3 SFs
-    #    post-change; evicts nvd_av_severity_matrix to the r18
-    #    deferral list above) --
-    "hof_filter_transform_fold",
-    # -- never driver-checked (r16 additions, each mirror-green x3
-    #    SFs on add; quality_gate_agreement also r17-code-changed) --
-    "bloom_decontamination_census",
-    "boilerplate_excised_docs",
-    "boilerplate_lines_census",
-    "doc_line_repetition_profile",
-    "ivf_cell_census",
-    "line_repetition_census",
-    "quality_gate_agreement",
-    "semdedup_pairs",
-    "semdedup_survivors",
-    "snapshot_dup_delta",
-    "tokenizer_fertility_census",
-    # -- last driver row r12 (the 9 logged r16 deferrals, evidence
-    #    age 4 rounds — oldest backlog) --
-    "sketch_distinct_accuracy",
-    "streaming_approx_daily_users",
-    "textrank_keywords",
-    "theta_overlap_users",
-    "token_length_histogram",
-    "topk_orders_by_price",
-    "vocab_growth_curve",
-    "window_running_order_total",
-    "window_top3_customers_per_nation",
-    # -- last driver row r13 (alphabetically first 23 after the
-    #    code-changed tiers' four evictions) --
-    "asof_last_error_per_click",
-    "bag_intersect_order_dates",
-    "bm25_multi_query_topk",
-    "bm25_topk_docs",
-    "bpe_token_stats",
-    "collocation_pmi_top",
-    "cross_source_contamination_matrix",
-    "dedup_cluster_size_histogram",
-    "dedup_survivors",
-    "dedup_survivors_by_quality",
-    "deterministic_sample_docs",
-    "doc_length_percentiles_by_lang",
-    "doc_rolling_fingerprint",
-    "edit_distance_verified_pairs",
-    "json_extract_props",
-    "lang_group_profile",
-    "langid_ngram_pred",
-    "multimodal_binary_meta",
-    "multimodal_decode_features",
-    "multimodal_frame_sample",
-    "multimodal_resize_thumb",
-    "ngram_jaccard_adjacent",
-    "nvd_assigner_stats",
-]
-
-def _reorder(registry: dict) -> None:
-    head = {k: registry[k] for k in _DRIVER_PRIORITY if k in registry}
-    tail = {k: v for k, v in registry.items() if k not in head}
-    registry.clear()
-    registry.update(head)
-    registry.update(tail)
-
-
-def finalize_registry() -> None:
-    """Assert the driver window is intact, then put it first.
-
-    A typo or a renamed query in _DRIVER_PRIORITY would otherwise be
-    dropped silently by _reorder's ``if k in registry``, quietly
-    shrinking the verified first-50 window. Checked against QUERIES
-    only: ORACLES legitimately lacks the oracle=None entries.
-
-    Called from the bottom of this module (the ``import plans`` path)
-    AND from the bottom of ``bq_nvd_spark.streaming`` (the
-    ``import streaming`` path): whichever package finishes registering
-    LAST runs the reorder over the complete registry, so the window
-    order no longer depends on which package a caller imports first —
-    previously a streaming-first import reordered before the streaming
-    queries existed, pushing them out of the first-50 window.
-    Idempotent.
-    """
-    unknown = set(_DRIVER_PRIORITY) - QUERIES.keys()
-    if unknown:  # a real raise, not assert: survives python -O
-        raise ValueError(
-            f"_DRIVER_PRIORITY names not in QUERIES: {sorted(unknown)}"
-        )
-    _reorder(QUERIES)
-    _reorder(ORACLES)
-
-
-# These imports populate QUERIES/ORACLES as a side effect; they sit
-# BELOW the finalize_registry definition so the circular
-# streaming -> micro_batch -> plans import can call it when streaming
-# registration completes.
-from bq_nvd_spark.plans import (  # noqa: E402,F401
+# These imports populate QUERIES/ORACLES as a side effect.
+from bq_nvd_spark.plans import (  # noqa: F401
     classify,
     clustering,
     curation,
@@ -249,13 +32,6 @@ from bq_nvd_spark.plans import (  # noqa: E402,F401
     temporal_joins,
     warehouse,
 )
-from bq_nvd_spark import streaming  # noqa: E402,F401  (registers streaming queries)
+from bq_nvd_spark import streaming  # noqa: F401  (registers streaming queries)
 
-if getattr(streaming, "_REGISTERED", False):
-    # plans-first import: streaming finished above, registry complete.
-    # (streaming-first import: streaming.__init__ is still mid-flight
-    # here and calls finalize_registry itself once its last module
-    # registers.)
-    finalize_registry()
-
-__all__ = ["QUERIES", "ORACLES", "finalize_registry"]
+__all__ = ["DRIVER_WINDOW", "QUERIES", "ORACLES"]

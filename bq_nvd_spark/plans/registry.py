@@ -22,6 +22,76 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
+#: The external driver oracle-checks only the first 50 registered
+#: queries; ``query()`` keeps these first, in this order. Rotate only at
+#: a round's open: code-changed names first, then never-checked names,
+#: then the stalest ``CORRECTNESS_r*.json`` evidence.
+DRIVER_WINDOW = (
+    "doc_gopher_quality_profile",
+    "gopher_quality_census",
+    "streaming_gopher_gate",
+    "simhash_signatures",
+    "simhash_near_dup_pairs",
+    "rrf_fusion_topk",
+    "hof_filter_transform_fold",
+    "bloom_decontamination_census",
+    "boilerplate_excised_docs",
+    "boilerplate_lines_census",
+    "doc_line_repetition_profile",
+    "ivf_cell_census",
+    "line_repetition_census",
+    "quality_gate_agreement",
+    "semdedup_pairs",
+    "semdedup_survivors",
+    "snapshot_dup_delta",
+    "tokenizer_fertility_census",
+    "sketch_distinct_accuracy",
+    "streaming_approx_daily_users",
+    "textrank_keywords",
+    "theta_overlap_users",
+    "token_length_histogram",
+    "topk_orders_by_price",
+    "vocab_growth_curve",
+    "window_running_order_total",
+    "window_top3_customers_per_nation",
+    "asof_last_error_per_click",
+    "bag_intersect_order_dates",
+    "bm25_multi_query_topk",
+    "bm25_topk_docs",
+    "bpe_token_stats",
+    "collocation_pmi_top",
+    "cross_source_contamination_matrix",
+    "dedup_cluster_size_histogram",
+    "dedup_survivors",
+    "dedup_survivors_by_quality",
+    "deterministic_sample_docs",
+    "doc_length_percentiles_by_lang",
+    "doc_rolling_fingerprint",
+    "edit_distance_verified_pairs",
+    "json_extract_props",
+    "lang_group_profile",
+    "langid_ngram_pred",
+    "multimodal_binary_meta",
+    "multimodal_decode_features",
+    "multimodal_frame_sample",
+    "multimodal_resize_thumb",
+    "ngram_jaccard_adjacent",
+    "nvd_assigner_stats",
+)
+_WINDOW_RANK = {name: rank for rank, name in enumerate(DRIVER_WINDOW)}
+
+
+def _register(registry: dict, name: str, value) -> None:
+    """Insert ``name``; window names lead in window order, the rest keep
+    registration order, so the result is independent of import order."""
+    registry[name] = value
+    if name in _WINDOW_RANK:
+        last = len(DRIVER_WINDOW)
+        ranked = sorted(registry.items(), key=lambda kv: _WINDOW_RANK.get(kv[0], last))
+        registry.clear()
+        registry.update(ranked)
+
+
 # Registered queries compose (dedup_survivors calls dedup_clusters, both
 # registered), so the per-entry checkpoint release below must fire only
 # at the TOP-LEVEL invocation — releasing mid-build would drop blocks
@@ -71,9 +141,9 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
                 if depth == 0:
                     _ckpt._CURRENT_QUERY.name = None
 
-        QUERIES[name] = wrapper
+        _register(QUERIES, name, wrapper)
         if oracle is not None:
-            ORACLES[name] = oracle
+            _register(ORACLES, name, oracle)
         return wrapper
 
     return deco

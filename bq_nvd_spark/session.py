@@ -17,6 +17,23 @@ from pyspark.sql import SparkSession
 _LOG = logging.getLogger(__name__)
 
 
+#: Runtime-settable confs every session gets: ``get_spark`` builds them
+#: in, and ``tune_session`` applies them to a session the driver built.
+RUNTIME_CONFS = (
+    ("spark.sql.adaptive.enabled", "true"),
+    ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
+    ("spark.sql.adaptive.skewJoin.enabled", "true"),
+    # The driver testdata's events.ts carries parquet TIMESTAMP(NANOS),
+    # which Spark rejects by default; with this flag it scans as
+    # epoch-nanos longs and the scan layer converts to microseconds.
+    # Set at session prep — never as a side effect of a table read.
+    ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+    # Arrow-batch the Python UDTF boundary (plans/python_udfs.py::
+    # udtf_token_chunks) — pickled row-at-a-time transfer otherwise.
+    ("spark.sql.execution.pythonUDTF.arrow.enabled", "true"),
+)
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -36,38 +53,22 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # Dimension tables (region/nation/customer/supplier/part at test SFs,
         # and the dedup ID-set in the NVD pipeline) should broadcast, never
         # shuffle. 64 MiB is safe for 128 GiB executors.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
-        # The driver testdata's events.ts carries parquet TIMESTAMP(NANOS),
-        # which Spark rejects by default; with this flag it scans as
-        # epoch-nanos longs and the scan layer converts to microseconds.
-        # Set once here — never as a side effect of a table read.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config(map=dict(RUNTIME_CONFS))
     )
     return builder.getOrCreate()
 
 
 def tune_session(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable tuning to an externally-provided session."""
-    for key, value in (
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        ("spark.sql.adaptive.skewJoin.enabled", "true"),
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        # Arrow-batch the Python UDTF boundary (plans/python_udfs.py::
-        # udtf_token_chunks) — pickled row-at-a-time transfer otherwise.
-        ("spark.sql.execution.pythonUDTF.arrow.enabled", "true"),
-    ):
+    for key, value in RUNTIME_CONFS:
         try:
             spark.conf.set(key, value)
         except Exception as exc:  # pragma: no cover - conf may be static

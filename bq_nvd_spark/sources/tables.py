@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructType
 
@@ -84,15 +84,22 @@ def table_schema(spark: SparkSession, path: str) -> StructType:
     return schema
 
 
+def nanos_to_timestamp(col: str) -> Column:
+    """Epoch-nanos long column ``col`` as a microsecond timestamp.
+
+    `div` truncates toward zero; for negative (pre-1970) nanos we need
+    floor semantics, so shift negatives down by 999 first.
+    """
+    micros = F.expr(f"if({col} >= 0, {col} div 1000, ({col} - 999) div 1000)")
+    return F.timestamp_micros(micros)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = f"{sf_dir}/{name}.parquet"
     df = spark.read.schema(table_schema(spark, path)).parquet(path)
     for col in _NANOS_TS_COLUMNS.get(name, ()):
         if isinstance(df.schema[col].dataType, LongType):
-            # `div` truncates toward zero; for negative (pre-1970) nanos we
-            # need floor semantics, so shift negatives down by 999 first.
-            micros = F.expr(f"if({col} >= 0, {col} div 1000, ({col} - 999) div 1000)")
-            df = df.withColumn(col, F.timestamp_micros(micros))
+            df = df.withColumn(col, nanos_to_timestamp(col))
     return df
 
 

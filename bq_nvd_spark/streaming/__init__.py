@@ -1,7 +1,6 @@
 """Structured Streaming surface: readStream twins of the batch plans."""
 
 from bq_nvd_spark.streaming.micro_batch import (  # noqa: F401
-    EVENTS_STREAM_SCHEMA,
     run_available_now,
     stream_cve_ingest,
     stream_events,
@@ -17,13 +16,3 @@ from bq_nvd_spark.streaming.stateful import (  # noqa: F401
     running_user_totals,
     stateful_user_totals,
 )
-
-# Registration-complete handshake with bq_nvd_spark.plans: whichever
-# package finishes last runs the driver-window reorder over the full
-# registry (see plans.finalize_registry). Must be the LAST statements
-# in this module.
-_REGISTERED = True
-
-from bq_nvd_spark.plans import finalize_registry  # noqa: E402
-
-finalize_registry()

@@ -46,13 +46,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import LongType
 
 from bq_nvd_spark.plans.curation import (
     C4_CENSUS_ORACLE,
@@ -67,24 +61,7 @@ from bq_nvd_spark.plans.curation import (
 )
 from bq_nvd_spark.plans.privacy import PII_CENSUS_ORACLE, scrub_census
 from bq_nvd_spark.plans.registry import query
-
-#: Streaming file sources require an explicit schema (no inference at
-#: plan time). The generated events table has shipped ``ts`` both as
-#: TIMESTAMP(NANOS) (scans as epoch-nanos long under
-#: spark.sql.legacy.parquet.nanosAsLong) and as plain TIMESTAMP(MICROS);
-#: ``stream_events`` reads the batch footer once at plan time and applies
-#: the nanos repair only when the column really is a long — the same
-#: LongType gate as the batch scan layer (sources/tables.py).
-EVENTS_STREAM_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts", LongType()),
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-        StructField("props", StringType()),
-    ]
-)
+from bq_nvd_spark.sources.tables import nanos_to_timestamp, table_schema
 
 _SINK_IDS = itertools.count()
 
@@ -107,8 +84,6 @@ def stream_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     lays tables out as single files, so glob the table file (a glob
     makes the source anchor basePath at ``sf_dir``).
     """
-    from bq_nvd_spark.sources.tables import table_schema
-
     batch_schema = table_schema(spark, f"{sf_dir}/{table}.parquet")
     return (
         spark.readStream.schema(batch_schema)
@@ -122,8 +97,7 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     raw = stream_table(spark, sf_dir, "events")
     if isinstance(raw.schema["ts"].dataType, LongType):
-        micros = F.expr("if(ts >= 0, ts div 1000, (ts - 999) div 1000)")
-        raw = raw.withColumn("ts", F.timestamp_micros(micros))
+        raw = raw.withColumn("ts", nanos_to_timestamp("ts"))
     else:
         # TIMESTAMP_NTZ footer: watermarks demand TIMESTAMP (LTZ) —
         # EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE otherwise. The cast is an

@@ -287,6 +287,23 @@ def test_ingest_of_truncated_feed_raises_and_leaves_store(spark, tmp_path):
     assert store.count_cves() == before
 
 
+def test_half_created_store_reads_empty_then_bootstraps(spark, tmp_path):
+    """A store directory a crashed first write left holding only
+    ``_temporary/0/`` counts as created (``exists()`` is "dir non-empty")
+    but scans as empty, so the next run bootstraps it cleanly: all 8
+    fixture CVEs load and no ID lands twice."""
+    path = tmp_path / "store"
+    (path / "_temporary" / "0").mkdir(parents=True)
+    store = NvdStore(spark, str(path))
+    assert store.exists()
+    assert store.count_cves() == 0
+
+    results = run(spark, store, [YEAR_FEED], RECENT_FEED, bootstrap_threshold=5)
+    assert [r.loaded for r in results] == [8]
+    assert store.count_cves() == 8
+    assert store.read().groupBy(ID_COL).count().filter("count > 1").count() == 0
+
+
 # --------------------------------------------------------------------------
 # Scale rehearsal: a synthetic multi-year backfill (~100k CVEs, the size
 # of the real NVD corpus) through bootstrap → incremental →

@@ -11,6 +11,11 @@ Runs at sf0.001 for speed; the driver repeats this at sf0.01.
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
+import sys
+
 import duckdb
 import pytest
 
@@ -20,8 +25,11 @@ from bq_nvd_spark.oracle_compare import (
     schema_mismatches,
     spark_schema_map,
 )
-from bq_nvd_spark.plans import ORACLES, QUERIES
+from bq_nvd_spark.plans import DRIVER_WINDOW, ORACLES, QUERIES
 from bq_nvd_spark.sources.tables import TABLES
+
+
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -82,3 +90,40 @@ def test_registry_consistency():
     assert QUERIES, "no queries registered"
     orphan_oracles = set(ORACLES) - set(QUERIES)
     assert not orphan_oracles
+
+
+def test_driver_window_leads_the_registry():
+    """The driver oracle-checks the first 50 registered names: they must
+    be exactly ``DRIVER_WINDOW``, every one registered, none twice."""
+    assert len(set(DRIVER_WINDOW)) == len(DRIVER_WINDOW)
+    assert set(DRIVER_WINDOW) <= QUERIES.keys()
+    assert list(QUERIES)[:50] == list(DRIVER_WINDOW)
+
+
+def _registry_order(first_import: str) -> list[list[str]]:
+    probe = (
+        f"import {first_import}\n"
+        "import json\n"
+        "from bq_nvd_spark.plans import ORACLES, QUERIES\n"
+        "print(json.dumps([list(QUERIES), list(ORACLES)]))\n"
+    )
+    env = dict(os.environ, PYTHONDONTWRITEBYTECODE="1", PYTHONPATH=REPO_ROOT)
+    proc = subprocess.run(
+        [sys.executable, "-c", probe],
+        capture_output=True,
+        text=True,
+        timeout=120,
+        env=env,
+        cwd=REPO_ROOT,
+    )
+    assert proc.returncode == 0, proc.stderr
+    return json.loads(proc.stdout.splitlines()[-1])
+
+
+def test_registry_order_is_independent_of_import_order():
+    """``import bq_nvd_spark.streaming`` first re-enters ``plans`` midway
+    through streaming's own registration; both orders must give the same
+    registry, and the same one this process sees."""
+    plans_first = _registry_order("bq_nvd_spark.plans")
+    assert _registry_order("bq_nvd_spark.streaming") == plans_first
+    assert plans_first == [list(QUERIES), list(ORACLES)]
