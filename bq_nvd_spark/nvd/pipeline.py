@@ -18,6 +18,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 from bq_nvd_spark.nvd.etl import (
     NvdStore,
@@ -54,10 +55,14 @@ def ingest_feed(
     The feed is read FAILFAST, as the reference aborts on bad JSON
     (bq-nvd.py:116-124): a truncated or corrupt document raises before
     anything is written, instead of parsing to zero rows and being
-    recorded as "no updates".
+    recorded as "no updates". A document without a ``CVE_Items`` key
+    parses to a null array, which fails the same way inside the plan
+    (no extra job); ``"CVE_Items": []`` is a real empty feed and skips.
     """
     store.ensure()
     feed = read_feed(spark, feed_path, mode="FAILFAST")
+    feed = feed.withColumn("CVE_Items", F.coalesce(
+        "CVE_Items", F.raise_error(F.lit(f"feed has no CVE_Items: {feed_path}"))))
     incoming = dedup_within(cve_items(feed))
     delta = deltas_only(incoming, store.cve_ids()) if deltas else incoming
 

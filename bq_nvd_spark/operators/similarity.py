@@ -166,8 +166,8 @@ def fold_dot_np(a: pd.Series, b: pd.Series) -> pd.Series:
 # duplicate cluster's center) would split the cluster IDENTICALLY in
 # every band, defeating the multi-band recovery; independent per-band
 # refine planes make the split boundaries differ, and the union of the
-# per-band stars reconnects the cluster (measured by
-# scripts/emb_recall_probe.py).
+# per-band stars reconnects the cluster (pinned by
+# tests/test_similarity_ops.py::test_emb_refine_protects_cluster_from_outsider_anchor).
 REFINE_BITS = 16
 _REFINE_PLANES_ALL = [
     [_plane_component(N_BITS + bit, i) for i in range(DIM)]

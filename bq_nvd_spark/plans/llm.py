@@ -452,8 +452,8 @@ def _capped_pairs(
     output stays O(m); the refined branches carry only
     oversized-bucket rows. With ``refine_docs=None`` (callers without
     document text, e.g. synthetic band relations) oversized buckets
-    are dropped as before. Recall measured on planted near-dups:
-    scripts/minhash_recall_probe.py.
+    are dropped as before. Recall on planted near-dups is pinned by
+    tests/test_similarity_ops.py::test_minhash_recall_gate_on_planted_near_dups.
     """
     from pyspark.sql.window import Window
 
@@ -509,13 +509,14 @@ def _capped_pairs(
     # member whose refine signature is unique in every band's bucket
     # would vanish from the candidate set entirely despite its level-1
     # evidence (measured: ~1% of a planted 120-member cluster isolated;
-    # scripts/minhash_recall_probe.py), and two ≤CAP sub-cliques of one
-    # bucket would rely solely on other bands for connectivity. The
-    # core anchor — NOT the raw bucket min — is the cut vertex because
-    # a moderately similar below-threshold doc shares the band bucket
-    # with probability J^BAND_SIZE and could hold the min id, and an
-    # outsider cut vertex fails every verification, re-isolating the
-    # singletons (the round-10 embedding star defect in new clothes).
+    # SCALE.md, pinned by test_minhash_recall_gate_on_planted_near_dups),
+    # and two ≤CAP sub-cliques of one bucket would rely solely on other
+    # bands for connectivity. The core anchor — NOT the raw bucket min —
+    # is the cut vertex because a moderately similar below-threshold doc
+    # shares the band bucket with probability J^BAND_SIZE and could hold
+    # the min id, and an outsider cut vertex fails every verification,
+    # re-isolating the singletons (the round-10 embedding star defect in
+    # new clothes).
     # The largest sub-bucket's members agree on 2·BAND_SIZE hashes
     # (P = J^8), so its anchor is the bucket's most-corroborated member;
     # an all-singleton bucket degenerates to the min id, the best guess

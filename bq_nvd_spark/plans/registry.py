@@ -1,10 +1,11 @@
 """Registry pairing each Spark query plan with its ANSI-SQL oracle.
 
-Contract (``/root/repo/__spark_entry__.py``): the driver executes the Spark
-callable and the DuckDB oracle side by side and compares row-count + schema
-+ order-insensitive value-hash, so every computed column MUST carry the same
-alias in both formulations, and float-producing expressions are rounded
-identically on both sides to make the hash deterministic.
+Contract (``__spark_entry__.py`` at the repository root): the driver
+executes the Spark callable and the DuckDB oracle side by side and compares
+row-count + schema + order-insensitive value-hash, so every computed column
+MUST carry the same alias in both formulations, and float-producing
+expressions are rounded identically on both sides to make the hash
+deterministic.
 """
 
 from __future__ import annotations

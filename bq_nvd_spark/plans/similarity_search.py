@@ -408,8 +408,8 @@ SIMILAR_COS = 0.40
 # 8-bit level-1 bucket (see _emb_bucket_pairs — starring the RAW bucket
 # could anchor on such an outsider and lose the whole cluster), while
 # per-bucket output stays O(m). Fixture max bucket sizes: 9 at sf0.01,
-# 28 at sf0.1 — the refined path is exercised at bench scale, by the
-# degenerate-bucket property tests, and by scripts/emb_recall_probe.py.
+# 28 at sf0.1 — the refined path is exercised at bench scale and by the
+# degenerate-bucket and recall tests in tests/test_similarity_ops.py.
 EMB_BUCKET_CAP = 20
 
 
@@ -435,8 +435,8 @@ def _emb_bucket_pairs(sig: DataFrame) -> DataFrame:
       mass-duplicate sub-bucket costs O(m) output rows, never an
       O(m·dim) collect_list that would blow the 2 GB row limit).
 
-    WHY the refinement exists (round 11, found by
-    scripts/emb_recall_probe.py): a level-1 bucket is only an 8-bit
+    WHY the refinement exists (round 11, found by the retired embedding
+    recall probe, SCALE.md): a level-1 bucket is only an 8-bit
     signature, so a mass-duplicate cluster shares its bucket with
     unrelated vectors; starring the RAW bucket anchors on the min-id
     member, which can be such an outsider — every star pair is then
@@ -631,11 +631,11 @@ def embedding_similar_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold prunes before anything aggregates. Near-identical vectors
     agree on all bands, so recall at 0.99 cosine is near-exact.
 
-    The recall contract, measured by scripts/emb_recall_probe.py
-    (numbers in SCALE.md): a similar pair in an oversized bucket whose
-    refined sub-bucket still exceeds the cap is scored only against the
-    sub-bucket's min-id anchor — by construction a near-duplicate of
-    both, so mass-duplicate clusters stay fully connected for
+    The recall contract (numbers in SCALE.md; pinned by
+    test_emb_star_recall_via_other_bands): a similar pair in an
+    oversized bucket whose refined sub-bucket still exceeds the cap is
+    scored only against the sub-bucket's min-id anchor — by
+    construction a near-duplicate of both, so mass-duplicate clusters stay fully connected for
     semantic_dedup_survivors even when unrelated vectors share their
     level-1 bucket (the round-10 raw-bucket star could anchor on such
     an outsider and lose every cluster pair to the threshold). Pairs

@@ -231,7 +231,7 @@ class ParquetUpsertStore:
         # materialization each consumer re-executes the upstream
         # micro-batch plan INCLUDING the stateful aggregation's
         # state-store read — measured at ~0.3 s/batch of pure recompute
-        # at sf0.1 (scripts/streaming_floor_profile.py). localCheckpoint
+        # at sf0.1 (SCALE.md, streaming floor). localCheckpoint
         # (NOT persist: caching a streaming batch plan with a projection
         # over the stateful aggregate trips an attribute-resolution bug
         # in the incremental planner — `key not found: user_id#…` —
@@ -536,16 +536,6 @@ def _merge_stream(
     return final.select("user_id", "n_events", "cents")
 
 
-def run_upsert_totals_stream(
-    spark: SparkSession, sf_dir: str, work: str, n_chunks: int
-) -> DataFrame:
-    """The upsert-totals pipeline with a parameterizable micro-batch
-    count. Shared by the registered query (n=4) and
-    scripts/streaming_floor.py, which sweeps n to separate the
-    streaming engine's fixed per-batch cost from per-row work."""
-    return _merge_stream(spark, sf_dir, work, n_chunks, _user_totals)
-
-
 @query(
     "streaming_upsert_user_totals",
     oracle="""
@@ -566,7 +556,7 @@ def streaming_upsert_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     process's scratch store, which the NEXT in-process invocation of
     this query wipes — collect the result before re-invoking."""
     work = _durable_workdir("upsert")
-    return run_upsert_totals_stream(spark, sf_dir, work, n_chunks=4)
+    return _merge_stream(spark, sf_dir, work, 4, _user_totals)
 
 
 def _cdc_totals(raw: DataFrame) -> DataFrame:

@@ -36,7 +36,8 @@ import ast
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 PKG = "bq_nvd_spark"
 
@@ -230,7 +231,8 @@ CLASSIFIED: dict[tuple[str, str, str], tuple[str, str]] = {
 def sites() -> list[tuple[str, int, str, str]]:
     """(relpath, lineno, enclosing function, arg source) per F.broadcast."""
     out = []
-    for root, _, files in os.walk(PKG):
+    pkg_dir = os.path.join(ROOT, PKG)
+    for root, _, files in os.walk(pkg_dir):
         for f in sorted(files):
             if not f.endswith(".py"):
                 continue
@@ -257,7 +259,7 @@ def sites() -> list[tuple[str, int, str, str]]:
                             best = (hi - lo, name)
                     out.append(
                         (
-                            os.path.relpath(p, PKG),
+                            os.path.relpath(p, pkg_dir),
                             node.lineno,
                             best[1] if best else "<module>",
                             ast.unparse(node.args[0]) if node.args else "?",

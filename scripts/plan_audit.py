@@ -21,10 +21,12 @@ Usage: python scripts/plan_audit.py [--sf /root/testdata/sf0.001]
 from __future__ import annotations
 
 import argparse
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def plan_of(df) -> str:
@@ -34,7 +36,7 @@ def plan_of(df) -> str:
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.001")
-    ap.add_argument("--out", default="/root/repo/PLANS.md")
+    ap.add_argument("--out", default=os.path.join(ROOT, "PLANS.md"))
     args = ap.parse_args()
 
     from bq_nvd_spark.plans import QUERIES

@@ -287,6 +287,75 @@ def test_ingest_of_truncated_feed_raises_and_leaves_store(spark, tmp_path):
     assert store.count_cves() == before
 
 
+def _drop_cve_items(doc):
+    doc["CVE_Items_v2"] = doc.pop("CVE_Items")
+
+
+def _empty_cve_items(doc):
+    doc["CVE_Items"] = []
+
+
+def _string_base_score(doc):
+    for it in doc["CVE_Items"]:
+        it["impact"]["baseMetricV3"]["cvssV3"]["baseScore"] = "high"
+
+
+def _bad_published_date(doc):
+    for it in doc["CVE_Items"]:
+        it["publishedDate"] = "last tuesday"
+
+
+def _array_cve_data_meta(doc):
+    for it in doc["CVE_Items"]:
+        it["cve"]["CVE_data_meta"] = [it["cve"]["CVE_data_meta"]]
+
+
+def _drop_last_modified(doc):
+    for it in doc["CVE_Items"]:
+        del it["lastModifiedDate"]
+
+
+@pytest.mark.parametrize(
+    "drift, raises, loaded",
+    [
+        (_drop_cve_items, "no CVE_Items", 0),
+        (_empty_cve_items, None, 0),
+        (_string_base_score, "FAILFAST|Malformed|malformed", 0),
+        (_bad_published_date, "FAILFAST|Malformed|malformed", 0),
+        (_array_cve_data_meta, "FAILFAST|Malformed|malformed", 0),
+        (_drop_last_modified, None, 8),
+    ],
+    ids=["no_cve_items", "empty_cve_items", "string_base_score",
+         "bad_published_date", "array_cve_data_meta", "no_last_modified"],
+)
+def test_feed_schema_drift_fails_loudly_or_loads(spark, tmp_path, drift, raises, loaded):
+    """Feed schema drift either fails the ingest before anything is
+    written or loads what the schema can read: a feed without
+    ``CVE_Items`` must not pass as "no updates" (in a bootstrap the year
+    would be missing for good), while an empty ``CVE_Items`` does."""
+    with gzip.open(YEAR_FEED, "rt") as fh:
+        doc = json.load(fh)
+    drift(doc)
+    drifted = str(tmp_path / "nvdcve-1.1-2024.json.gz")
+    with gzip.open(drifted, "wt") as fh:
+        json.dump(doc, fh)
+
+    store = NvdStore(spark, str(tmp_path / "store"))
+    _synth_feed_gz(str(tmp_path / "seed.json.gz"), 2023, 3)
+    ingest_feed(spark, store, str(tmp_path / "seed.json.gz"))
+    before = store.count_cves()
+    assert before == 3
+    if raises:
+        with pytest.raises(Exception, match=raises):
+            ingest_feed(spark, store, drifted)
+    else:
+        result = ingest_feed(spark, store, drifted)
+        assert (result.loaded, result.skipped) == (loaded, loaded == 0)
+    assert store.count_cves() == before + loaded
+    if loaded:
+        assert store.read().filter(F.col("lastModifiedDate").isNull()).count() == loaded
+
+
 def test_half_created_store_reads_empty_then_bootstraps(spark, tmp_path):
     """A store directory a crashed first write left holding only
     ``_temporary/0/`` counts as created (``exists()`` is "dir non-empty")
