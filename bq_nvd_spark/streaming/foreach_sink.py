@@ -29,6 +29,11 @@ merge cost scales with the delta, not the store:
   safe: the new version directory is unreferenced until the commit,
   and replace-by-key re-merge is idempotent (update output mode
   delivers full cumulative values, not increments);
+- each bucket keeps one live version on disk: right after the manifest
+  flip, every other version directory of each touched bucket is
+  deleted (nothing reads a superseded version once the commit lands).
+  A crash between a commit and that cleanup leaves a stray version,
+  which the next merge touching the bucket removes;
 - the merge itself is a keyed UPSERT (replace-by-key): the store side
   is pruned to the touched buckets *before* the anti-join, so the
   shuffle is |touched-bucket rows| + |batch rows|, exactly what
@@ -63,34 +68,16 @@ class ParquetUpsertStore:
     """Keyed, hash-bucketed parquet store with per-bucket versioned
     commits and batch-id replay dedup (copy-on-write MERGE INTO)."""
 
-    def __init__(self, root: str, n_buckets: int = 8, max_history: int = 32):
-        """``max_history`` bounds snapshot retention: once the manifest
-        holds more than this many commits, ``merge_batch`` auto-vacuums
-        (a long-lived stream would otherwise grow the manifest and
-        superseded bucket-version directories without bound —
-        O(batches × n_buckets) disk).
-
-        ``vacuum_slack = max_history // 4`` is the hysteresis band:
-        each auto-vacuum trims to ``max_history - vacuum_slack``
-        snapshots, so the next trigger is ``vacuum_slack + 1`` batches
-        away and the vacuum's full-store directory scan amortizes
-        instead of running on EVERY batch once the stream reaches the
-        cap. Retention is therefore ``max_history - vacuum_slack ≤
-        retained ≤ max_history``; ``read_at`` is only guaranteed for the
-        last ``max_history - vacuum_slack`` commits (24 at the default
-        cap of 32). Below ``max_history = 4`` the slack is 0: exact-cap
-        retention, vacuum every batch at the cap."""
+    def __init__(self, root: str, n_buckets: int = 8):
         self.root = root
         self.n_buckets = n_buckets
-        self.max_history = max(int(max_history), 1)
-        self.vacuum_slack = self.max_history // 4
         # Data-file schema memo (optimization round 17): the merge
         # contract fixes the row schema for the store's lifetime, yet
-        # every per-batch touched-bucket read and every current()/
-        # read_at() scan re-ran parquet footer inference (~120 ms of
-        # driver time each). Captured from the first read; explicit
-        # schema reads skip the inference thereafter. Metadata only —
-        # the data itself is re-scanned on every action.
+        # every per-batch touched-bucket read and every current() scan
+        # re-ran parquet footer inference (~120 ms of driver time each).
+        # Captured from the first read; explicit schema reads skip the
+        # inference thereafter. Metadata only — the data itself is
+        # re-scanned on every action.
         self._data_schema = None
         os.makedirs(root, exist_ok=True)
 
@@ -105,7 +92,7 @@ class ParquetUpsertStore:
     def _manifest(self) -> dict:
         path = os.path.join(self.root, "manifest.json")
         if not os.path.exists(path):
-            return {"last_batch_id": -1, "buckets": {}, "history": []}
+            return {"last_batch_id": -1, "buckets": {}}
         with open(path) as fh:
             m = json.load(fh)
         if "buckets" not in m:
@@ -116,7 +103,6 @@ class ParquetUpsertStore:
                 f"{path} is a legacy single-version store manifest; "
                 "migrate it by re-ingesting into a fresh store directory"
             )
-        m.setdefault("history", [])
         return m
 
     def _commit(self, manifest: dict) -> None:
@@ -138,69 +124,6 @@ class ParquetUpsertStore:
         if not m["buckets"]:
             return None
         return self._read(spark, self._bucket_paths(m["buckets"]))
-
-    def read_at(self, spark: SparkSession, batch_id: int) -> DataFrame | None:
-        """Snapshot read: the store AS OF the commit for ``batch_id``
-        (time travel). Version directories are immutable and commits
-        only add new ones, so every snapshot in ``history`` stays
-        readable until ``vacuum`` retires it — the same contract a
-        lakehouse table's ``VERSION AS OF`` gives. Returns ``None``
-        when no RETAINED snapshot covers ``batch_id`` (either the store
-        never saw a batch that early, or vacuum trimmed the history
-        past it); raises only when a retained snapshot's bucket-version
-        directories are missing on disk (a half-deleted snapshot —
-        i.e. files were removed behind the manifest's back)."""
-        m = self._manifest()
-        snap: dict | None = None
-        for entry in m["history"]:
-            if entry["batch_id"] <= batch_id:
-                snap = entry
-        if snap is None:
-            return None
-        paths = self._bucket_paths(snap["buckets"])
-        missing = [p for p in paths if not os.path.isdir(p)]
-        if missing:
-            raise ValueError(
-                f"snapshot for batch_id<={batch_id} was vacuumed "
-                f"(missing {len(missing)} bucket versions)"
-            )
-        return self._read(spark, paths) if paths else None
-
-    def vacuum(self, keep_last: int = 1) -> int:
-        """Delete bucket-version directories referenced ONLY by commits
-        older than the last ``keep_last`` snapshots; returns the number
-        of directories removed. The manifest's retained history shrinks
-        accordingly, so ``read_at`` fails cleanly (never reads a
-        half-deleted snapshot) for retired versions."""
-        m = self._manifest()
-        keep = m["history"][-max(keep_last, 1):]
-        live: set[str] = set()
-        for entry in keep:
-            live.update(self._bucket_paths(entry["buckets"]))
-        live.update(self._bucket_paths(m["buckets"]))
-        # Commit the trimmed history BEFORE deleting: vacuum now runs on
-        # the streaming hot path (merge_batch auto-vacuum), and a crash
-        # between delete and commit would leave "retained" entries
-        # pointing at missing directories (read_at would raise on a
-        # snapshot the manifest still advertises). Commit-first is
-        # crash-safe: a crash after the commit merely leaves orphan
-        # version dirs that the directory scan below — being
-        # filesystem-driven, not manifest-driven — removes on the next
-        # vacuum.
-        self._commit({**m, "history": keep})
-        removed = 0
-        for bucket_dir in sorted(os.listdir(self.root)):
-            if not bucket_dir.startswith("b"):
-                continue
-            bpath = os.path.join(self.root, bucket_dir)
-            if not os.path.isdir(bpath):
-                continue
-            for v in sorted(os.listdir(bpath)):
-                vpath = os.path.join(bpath, v)
-                if vpath not in live:
-                    shutil.rmtree(vpath, ignore_errors=True)
-                    removed += 1
-        return removed
 
     def merge_batch(
         self,
@@ -327,27 +250,21 @@ class ParquetUpsertStore:
                 buckets[str(k)] = new_version
             else:
                 # Tombstones emptied this bucket: no partition dir was
-                # written, so retire the bucket from the live map (the
-                # old version stays on disk for snapshot reads).
+                # written, so retire the bucket from the live map.
                 buckets.pop(str(k), None)
         shutil.rmtree(delta_root, ignore_errors=True)
-        history = m["history"] + [{"batch_id": batch_id, "buckets": buckets}]
-        self._commit(
-            {"last_batch_id": batch_id, "buckets": buckets, "history": history}
-        )
-        if len(history) > self.max_history:
-            # Retention: without this a long-lived stream accumulates
-            # one snapshot (manifest entry + superseded bucket version
-            # dirs) per batch forever. Runs after the commit so a crash
-            # mid-vacuum never loses the batch itself. Trimming BELOW
-            # the cap (hysteresis) keeps the vacuum's full-store
-            # directory scan off the per-batch hot path: the next
-            # trigger is vacuum_slack + 1 batches away, so the O(all
-            # bucket-version dirs) walk amortizes to O(dirs / slack)
-            # per batch instead of running on every commit at the cap.
-            self.vacuum(
-                keep_last=max(self.max_history - self.vacuum_slack, 1)
-            )
+        self._commit({"last_batch_id": batch_id, "buckets": buckets})
+        # One live version per bucket. The write job above has finished
+        # and current() lists only live versions, so nothing reads a
+        # superseded version of a touched bucket after the commit; drop
+        # them all (an emptied bucket keeps none), including a stray one
+        # a crash left between an earlier commit and its cleanup.
+        for k in touched:
+            bucket_dir = os.path.join(self.root, f"b{k}")
+            live = f"v{buckets[str(k)]}" if str(k) in buckets else None
+            for v in os.listdir(bucket_dir):
+                if v != live:
+                    shutil.rmtree(os.path.join(bucket_dir, v), ignore_errors=True)
 
 
 def _staged_event_chunks(spark: SparkSession, sf_dir: str, stage_dir: str, n: int):

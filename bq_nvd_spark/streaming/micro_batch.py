@@ -116,10 +116,12 @@ def run_available_now(
     place in the engine that starts a stream.
 
     Without ``foreach_batch`` the drain lands in a memory sink and the
-    materialized result comes back as a batch DataFrame; with it, each
-    micro-batch goes to ``foreach_batch(batch_df, batch_id)`` and the
-    call returns None. The checkpoint is a temporary directory that
-    lives for the drain only.
+    materialized result comes back as a batch DataFrame; the sink's
+    session view is dropped before returning (the DataFrame keeps the
+    resolved sink plan), so drains leave no temp views behind. With
+    ``foreach_batch``, each micro-batch goes to
+    ``foreach_batch(batch_df, batch_id)`` and the call returns None. The
+    checkpoint is a temporary directory that lives for the drain only.
 
     The stateful-operator width is ``STATE_PARTITIONS`` for the drain
     and the session's ``spark.sql.shuffle.partitions`` is restored
@@ -139,9 +141,11 @@ def run_available_now(
     try:
         with tempfile.TemporaryDirectory(prefix="bq_nvd_ckpt_") as ckpt:
             writer.option("checkpointLocation", ckpt).start().awaitTermination()
+        return spark.table(name) if foreach_batch is None else None
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", saved)
-    return spark.table(name) if foreach_batch is None else None
+        if foreach_batch is None:
+            spark.catalog.dropTempView(name)
 
 
 # --------------------------------------------------------------------------

@@ -379,8 +379,9 @@ def test_duplicate_spans_match_python_reference(spark, docs):
 
 # --------------------------------------------------------------------------
 # Upsert store: arbitrary sequences of upsert/tombstone batches (with
-# replays and NULL keys) must leave the store equal to a dict reference
-# model — the replace-by-key MERGE contract under any batch shaping.
+# replays, of the latest and of the oldest batch, and NULL keys) must
+# leave the store equal to a dict reference model — the replace-by-key
+# MERGE contract under any batch shaping.
 
 _BATCHES = st.lists(
     st.lists(
@@ -427,114 +428,12 @@ def test_upsert_store_matches_dict_model(spark, tmp_path_factory, batches, repla
                 model.pop(k, None)
             else:
                 model[k] = v
+    if replay:  # an OLDER batch id redelivered after later ones: no-op too
+        df0 = spark.createDataFrame(batches[0], schema)
+        store.merge_batch(df0, batch_id=0, key="user_id", delete_col="is_deleted")
     final = store.current(spark)
     got = {} if final is None else {r["user_id"]: r["cents"] for r in final.collect()}
     assert got == model
-
-
-# --------------------------------------------------------------------------
-# Upsert store: interleaved replay + vacuum + read_at. After ANY mix of
-# commits, replays (including of vacuumed batches), and vacuums, (a) the
-# live store equals the dict model, (b) read_at at EVERY batch id ever
-# applied returns the newest RETAINED snapshot at-or-before that id (or
-# None once vacuum trimmed past it) and matches the model's snapshot at
-# that point, and (c) a replayed batch id — even one whose snapshot was
-# vacuumed away — is a no-op.
-
-_VACUUMS = st.lists(
-    st.one_of(st.none(), st.integers(min_value=1, max_value=3)),
-    min_size=4,
-    max_size=4,
-)
-
-
-@given(batches=_BATCHES, vacuums=_VACUUMS, replay_oldest=st.booleans())
-@_UPSERT_SETTINGS
-def test_upsert_store_replay_vacuum_read_at_interplay(
-    spark, tmp_path_factory, batches, vacuums, replay_oldest
-):
-    from bq_nvd_spark.streaming.foreach_sink import ParquetUpsertStore
-
-    root = tmp_path_factory.mktemp("upsert_rv")
-    store = ParquetUpsertStore(str(root), n_buckets=3)
-    schema = "user_id long, cents long, is_deleted boolean"
-    model: dict = {}
-    snapshots: dict[int, dict] = {}  # applied batch id -> model state after it
-    applied: list[int] = []
-
-    def check_read_at() -> None:
-        retained = [e["batch_id"] for e in store._manifest()["history"]]
-        for bid in applied:
-            covered = [b for b in retained if b <= bid]
-            got = store.read_at(spark, bid)
-            if not covered:
-                assert got is None, f"read_at({bid}) should predate retention"
-                continue
-            expect = snapshots[max(covered)]
-            rows = {} if got is None else {
-                r["user_id"]: r["cents"] for r in got.collect()
-            }
-            # an all-tombstoned snapshot has no bucket dirs -> None scan
-            assert rows == expect, f"read_at({bid})"
-
-    for bid, rows in enumerate(batches):
-        df = spark.createDataFrame(rows, schema)
-        store.merge_batch(df, batch_id=bid, key="user_id", delete_col="is_deleted")
-        for k, v, dead in rows:
-            if dead:
-                model.pop(k, None)
-            else:
-                model[k] = v
-        applied.append(bid)
-        snapshots[bid] = dict(model)
-        keep = vacuums[bid % len(vacuums)]
-        if keep is not None:
-            store.vacuum(keep_last=keep)
-            check_read_at()
-        if replay_oldest:
-            # replay the OLDEST batch (its snapshot may be vacuumed):
-            # last_batch_id gating must skip it without touching disk.
-            df0 = spark.createDataFrame(batches[0], schema)
-            store.merge_batch(
-                df0, batch_id=0, key="user_id", delete_col="is_deleted"
-            )
-
-    final = store.current(spark)
-    got = {} if final is None else {r["user_id"]: r["cents"] for r in final.collect()}
-    assert got == model
-    check_read_at()
-
-
-def test_upsert_store_auto_vacuum_caps_history(spark, tmp_path):
-    """max_history: a long-lived stream must not grow the manifest or
-    superseded version directories without bound — merge_batch
-    auto-vacuums past the cap, retired snapshots read as None, and the
-    live store stays correct."""
-    import os
-
-    from bq_nvd_spark.streaming.foreach_sink import ParquetUpsertStore
-
-    store = ParquetUpsertStore(str(tmp_path / "store"), n_buckets=2, max_history=2)
-    for bid in range(5):
-        df = spark.createDataFrame([(bid % 3, bid * 10)], "user_id long, cents long")
-        store.merge_batch(df, batch_id=bid, key="user_id")
-    m = store._manifest()
-    assert len(m["history"]) <= 2
-    # superseded version dirs beyond the retained snapshots are gone
-    vdirs = [
-        v
-        for b in os.listdir(store.root)
-        if b.startswith("b") and os.path.isdir(os.path.join(store.root, b))
-        for v in os.listdir(os.path.join(store.root, b))
-    ]
-    retained_versions = {
-        v for e in m["history"] for v in e["buckets"].values()
-    } | set(m["buckets"].values())
-    assert all(int(v[1:]) in retained_versions for v in vdirs)
-    # batch 0's snapshot predates retention -> None, not an exception
-    assert store.read_at(spark, 0) is None
-    got = {r["user_id"]: r["cents"] for r in store.current(spark).collect()}
-    assert got == {0: 30, 1: 40, 2: 20}
 
 
 # --------------------------------------------------------------------------

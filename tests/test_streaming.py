@@ -208,9 +208,6 @@ def test_upsert_store_cdc_deletes(spark, tmp_path):
     )
     store.merge_batch(b2, batch_id=2, key="user_id", delete_col="is_deleted")
     assert store.current(spark) is None  # live map fully retired
-    # snapshot of batch 1 still readable (versions are immutable)
-    snap = {r["user_id"]: r["cents"] for r in store.read_at(spark, 1).collect()}
-    assert snap == got
 
     # replaying the delete batch is a no-op
     store.merge_batch(b2, batch_id=2, key="user_id", delete_col="is_deleted")
@@ -262,82 +259,62 @@ def test_upsert_store_rejects_legacy_manifest(spark, tmp_path):
         store.current(spark)
 
 
-def test_upsert_store_time_travel_and_vacuum(spark, tmp_path):
-    """Snapshot reads: read_at(batch) sees the store as of that commit
-    (version dirs are immutable), and vacuum retires old snapshots while
-    keeping the live view intact — retired reads fail cleanly."""
+def test_upsert_store_keeps_only_live_bucket_versions(spark, tmp_path):
+    """One live version per bucket: after every merge each bucket dir
+    holds only the version the manifest names, a stray version (as a
+    crash between a commit and its cleanup would leave) goes the next
+    time its bucket is touched, and an emptied bucket keeps none."""
+    import json
+
     from bq_nvd_spark.streaming.foreach_sink import ParquetUpsertStore
 
-    store = ParquetUpsertStore(str(tmp_path / "store"), n_buckets=4)
-    b0 = spark.createDataFrame(
-        [(1, 1, 10), (2, 1, 20)], "user_id long, n_events long, cents long"
-    )
-    store.merge_batch(b0, batch_id=0, key="user_id")
-    b1 = spark.createDataFrame(
-        [(1, 3, 99), (5, 1, 50)], "user_id long, n_events long, cents long"
-    )
-    store.merge_batch(b1, batch_id=1, key="user_id")
+    root = tmp_path / "store"
+    store = ParquetUpsertStore(str(root), n_buckets=2)
+    schema = "user_id long, cents long, is_deleted boolean"
 
-    at0 = {r["user_id"]: r["cents"] for r in store.read_at(spark, 0).collect()}
-    assert at0 == {1: 10, 2: 20}  # pre-update snapshot
-    at1 = {r["user_id"]: r["cents"] for r in store.read_at(spark, 1).collect()}
-    assert at1 == {1: 99, 2: 20, 5: 50}
-    assert store.read_at(spark, -1) is None  # before any commit
+    def on_disk() -> dict:
+        return {
+            b.name[1:]: sorted(v.name for v in b.iterdir())
+            for b in root.iterdir()
+            if b.is_dir() and b.name.startswith("b")
+        }
 
-    removed = store.vacuum(keep_last=1)
-    assert removed >= 1  # batch-0's superseded bucket version retired
-    # live view unaffected; the retired snapshot is gone from history so
-    # read_at resolves to no-snapshot rather than a half-deleted scan
-    live = {r["user_id"]: r["cents"] for r in store.current(spark).collect()}
-    assert live == at1
-    assert store.read_at(spark, 0) is None
-    still = {r["user_id"]: r["cents"] for r in store.read_at(spark, 1).collect()}
-    assert still == at1
-
-
-def test_auto_vacuum_hysteresis_amortizes_scans(spark, tmp_path):
-    """At the retention cap, vacuum must NOT run on every batch: with
-    slack s, each auto-vacuum trims to max_history - s, so over
-    2×max_history steady-state batches the full-store scan fires about
-    once per s+1 commits, while retention stays inside the documented
-    [max_history - s, max_history] band."""
-    from bq_nvd_spark.streaming.foreach_sink import ParquetUpsertStore
-
-    store = ParquetUpsertStore(str(tmp_path / "store"), n_buckets=2, max_history=8)
-    assert store.vacuum_slack == 2  # derived: max_history // 4
-    calls = []
-    inner = store.vacuum
-    store.vacuum = lambda keep_last=1: calls.append(keep_last) or inner(
-        keep_last
-    )
-    n = 2 * store.max_history
-    for bid in range(n):
-        df = spark.createDataFrame(
-            [(bid % 3, bid)], "user_id long, cents long"
+    for bid in range(6):
+        rows = [(bid % 4, bid, False), (bid % 4 + 4, bid, False)]
+        store.merge_batch(
+            spark.createDataFrame(rows, schema), bid, "user_id", "is_deleted"
         )
-        store.merge_batch(df, batch_id=bid, key="user_id")
-        assert len(store._manifest()["history"]) <= store.max_history + 1
-    # triggers at history length 9, then every slack+1 = 3 batches:
-    # 16 batches -> first trigger at batch 8, then 11 (len 9 again) ...
-    expected = (n - store.max_history - 1) // (store.vacuum_slack + 1) + 1
-    assert len(calls) == expected
-    assert all(k == store.max_history - store.vacuum_slack for k in calls)
-    retained = len(store._manifest()["history"])
-    assert store.max_history - store.vacuum_slack <= retained <= store.max_history
-    # live view correct after all the churn
-    got = {r["user_id"]: r["cents"] for r in store.current(spark).collect()}
-    assert got == {0: 15, 1: 13, 2: 14}
+        live = json.loads((root / "manifest.json").read_text())["buckets"]
+        assert on_disk() == {k: [f"v{v}"] for k, v in live.items()}, bid
+
+    for k in live:
+        (root / f"b{k}" / "v999").mkdir()
+    keys = [r["user_id"] for r in store.current(spark).collect()]
+    tombstones = spark.createDataFrame([(u, 0, True) for u in keys], schema)
+    store.merge_batch(tombstones, 6, "user_id", "is_deleted")
+    assert store.current(spark) is None
+    assert on_disk() == {k: [] for k in live}
 
 
-def test_vacuum_slack_zero_restores_exact_cap(spark, tmp_path):
-    from bq_nvd_spark.streaming.foreach_sink import ParquetUpsertStore
+def test_memory_sink_drains_leave_no_temp_views(spark, sf_dir):
+    """A memory-sink drain drops its session view before returning, also
+    when the stream fails, and the returned DataFrame still reads the
+    drained rows."""
+    from bq_nvd_spark.streaming.stateful import streaming_funnel_conversion
 
-    store = ParquetUpsertStore(str(tmp_path / "store"), n_buckets=2, max_history=2)
-    assert store.vacuum_slack == 0  # derived: max_history // 4
-    for bid in range(5):
-        df = spark.createDataFrame([(0, bid)], "user_id long, cents long")
-        store.merge_batch(df, batch_id=bid, key="user_id")
-        assert len(store._manifest()["history"]) <= 2
+    def temp_views() -> set:
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = temp_views()
+    keys = streaming_dedup_keys(spark, sf_dir)
+    funnel = streaming_funnel_conversion(spark, sf_dir)
+    with pytest.raises(StreamingQueryException, match="drain failed"):
+        run_available_now(
+            stream_events(spark, sf_dir).select(F.raise_error(F.lit("drain failed"))),
+            output_mode="append",
+        )
+    assert sorted(temp_views() - before) == []
+    assert keys.count() > 0 and funnel.count() == 1
 
 
 def test_merge_batch_releases_checkpoint_blocks(spark, tmp_path):
