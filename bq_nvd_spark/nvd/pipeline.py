@@ -9,8 +9,7 @@ feed. Re-runs are idempotent because ingest dedups against stored IDs
 entirely ("no updates to load", reference bq-nvd.py:141-143).
 
 The reference's 20-minute CronJob (cronjob.yml:6) maps to re-invoking
-``run()`` on a schedule; ``bq_nvd_spark.streaming`` carries the
-``readStream`` + Trigger.AvailableNow formulation of the same loop.
+``run()`` on a schedule.
 """
 
 from __future__ import annotations

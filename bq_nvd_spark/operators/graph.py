@@ -29,10 +29,16 @@ optimizations; this dependency-free form keeps the repo self-contained.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bq_nvd_spark.operators.checkpoint import release_checkpoint, stage_checkpoint
+from bq_nvd_spark.operators.checkpoint import (
+    release_checkpoint,
+    shared_stage,
+    stage_checkpoint,
+)
 
 
 def connected_components(
@@ -122,3 +128,47 @@ def connected_components(
             "raise max_iter (rounds are cheap: one join + groupBy-min each)"
         )
     return labels.select("id", F.col("rep").alias("cluster_id"))
+
+
+def near_dup_clusters(
+    spark: SparkSession,
+    family: str,
+    sf_dir: str,
+    pairs: Callable[[], DataFrame],
+    a: str,
+    b: str,
+) -> DataFrame:
+    """(id, cluster_id): the near-duplicate closure of one dedup family —
+    connected components over the verified pair relation ``pairs()``,
+    whose columns ``a`` and ``b`` hold the two ids of a pair.
+
+    Memoized per (family, sf_dir) via ``shared_stage``: every consumer
+    of a family (the survivor rules, the size histogram, the composed
+    D4 pipeline) reads one closure per session, and ``pairs`` is called
+    only inside the build, so a memo hit runs nothing upstream. A row
+    is a dropped duplicate when ``id != cluster_id`` (min-id
+    survivorship). The oracle twin is ``duck_near_dup_closure``.
+    """
+    return shared_stage(
+        spark,
+        ("near_dup_clusters", family, sf_dir),
+        lambda: connected_components(pairs(), a, b, max_iter=10),
+    )
+
+
+def duck_near_dup_closure(rel: str, a: str, b: str) -> str:
+    """DuckDB twin of ``near_dup_clusters`` as two CTEs: ``sym``, the
+    pair relation ``rel(a, b)`` in both directions, and the recursive
+    ``walk(id, rep)`` reachability closure, whose ``MIN(rep)`` per id is
+    the component's minimum id. The caller's query must be ``WITH
+    RECURSIVE``."""
+    return f"""sym AS (
+      SELECT {a} AS a, {b} AS b FROM {rel}
+      UNION ALL
+      SELECT {b} AS a, {a} AS b FROM {rel}
+    ),
+    walk(id, rep) AS (
+      SELECT a, a FROM sym
+      UNION
+      SELECT s.a, w.rep FROM sym s JOIN walk w ON w.id = s.b
+    )"""

@@ -34,15 +34,17 @@ import hashlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, DoubleType, IntegerType
+from pyspark.sql.window import Window
 
 DIM = 64
 N_BANDS = 4
 BITS_PER_BAND = 8
 N_BITS = N_BANDS * BITS_PER_BAND
+TOP_K = 10  # neighbours kept per query by every E3 top-k query
 
 
 def _plane_component(bit: int, i: int) -> float:
@@ -67,6 +69,19 @@ def fold_dot(a: Column | str, b: Column | str) -> Column:
     """Sequential left-fold dot product — deterministic float order."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+    )
+
+
+def top_k_per_query(scored: DataFrame) -> DataFrame:
+    """The ``TOP_K`` best rows per query of a (q_id, vec_id, sim)
+    relation: ``sim`` descending, ties to the smaller ``vec_id``, so
+    the kept set is unique and cross-engine hashable. The oracle twin
+    is ``DUCK_TOP_K_TAIL``."""
+    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("vec_id"))
+    return (
+        scored.select("q_id", "vec_id", "sim", F.row_number().over(w).alias("rn"))
+        .filter(F.col("rn") <= TOP_K)
+        .drop("rn")
     )
 
 
@@ -254,6 +269,18 @@ def band_buckets_np(vecs: pd.Series) -> pd.Series:
 
 
 # -- DuckDB oracle side ----------------------------------------------------
+#: Twin of ``top_k_per_query``: the tail of an oracle whose ``scored``
+#: CTE holds (q_id, vec_id, sim), placed after the caller's ``SELECT``
+#: list.
+DUCK_TOP_K_TAIL = f"""FROM (
+      SELECT q_id, vec_id, sim,
+             ROW_NUMBER() OVER (PARTITION BY q_id
+                                ORDER BY sim DESC, vec_id) AS rn
+      FROM scored
+    )
+    WHERE rn <= {TOP_K}"""
+
+
 def duck_fold_dot(a: str, b: str) -> str:
     return (
         f"list_reduce(list_prepend(0.0, list_transform(range(1, {DIM + 1}), "

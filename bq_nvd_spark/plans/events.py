@@ -55,10 +55,9 @@ def tumbling_window_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # T4: sliding window (1h length, 30m slide) — each event lands in exactly
 # two windows. Oracle formulation: a window starting at trunc30(ts) and one
-# 30 minutes earlier both satisfy start <= ts < start + 1h.
-@query(
-    "sliding_window_hourly_30m",
-    oracle="""
+# 30 minutes earlier both satisfy start <= ts < start + 1h. Shared with
+# the streaming twin (``streaming/micro_batch.py::streaming_sliding_counts``).
+SLIDING_COUNTS_ORACLE = """
     SELECT window_start, COUNT(*) AS n_events
     FROM (
       SELECT UNNEST([
@@ -71,8 +70,10 @@ def tumbling_window_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM events
     )
     GROUP BY window_start
-    """,
-)
+    """
+
+
+@query("sliding_window_hourly_30m", oracle=SLIDING_COUNTS_ORACLE)
 def sliding_window_hourly_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     return (

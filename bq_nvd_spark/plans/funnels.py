@@ -28,9 +28,10 @@ from bq_nvd_spark.plans.registry import query
 from bq_nvd_spark.sources.tables import load_table
 
 
-@query(
-    "funnel_conversion",
-    oracle="""
+#: Shared funnel oracle — also the oracle of the streaming twin
+#: (``streaming/stateful.py::streaming_funnel_conversion``), whose final
+#: per-user state must equal the batch funnel for any micro-batch split.
+FUNNEL_CONVERSION_ORACLE = """
     WITH pu AS (
       SELECT user_id,
              MIN(CASE WHEN event_type = 'view' THEN ts END)     AS mv,
@@ -46,8 +47,10 @@ from bq_nvd_spark.sources.tables import load_table
            CAST(COUNT(CASE WHEN mc > mv AND mp > mc THEN 1 END) AS BIGINT)
              AS n_full_funnel
     FROM pu
-    """,
-)
+    """
+
+
+@query("funnel_conversion", oracle=FUNNEL_CONVERSION_ORACLE)
 def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered view -> click -> purchase funnel, first-touch semantics.
 

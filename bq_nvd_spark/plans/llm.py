@@ -47,7 +47,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType, StringType
 
-from bq_nvd_spark.operators.similarity import fold_dot_np, sorted_pairs
+from bq_nvd_spark.operators.graph import duck_near_dup_closure, near_dup_clusters
+from bq_nvd_spark.operators.similarity import (
+    fold_dot_np,
+    sorted_pairs,
+    top_k_per_query,
+)
 from bq_nvd_spark.operators.text import word_bigrams
 from bq_nvd_spark.plans.registry import query
 from bq_nvd_spark.sources.tables import load_table
@@ -685,10 +690,10 @@ def _simhash_sig_rel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shared_stage(spark, ("simhash_sigs", sf_dir), build)
 
 
-@query(
-    "simhash_signatures",
-    oracle="""
-    WITH toks AS (
+#: The SimHash signature relation ``sigs(doc_id, simhash)`` as oracle
+#: CTEs, shared by the signature census and the near-dup pair query.
+_DUCK_SIMHASH = """
+    toks AS (
       SELECT doc_id, UNNEST(list_distinct(string_split(text, ' '))) AS tok
       FROM documents
     ),
@@ -698,13 +703,23 @@ def _simhash_sig_rel(spark: SparkSession, sf_dir: str) -> DataFrame:
                       THEN 1 ELSE -1 END) AS w
       FROM toks, (SELECT UNNEST(range(1, 33)) AS i)
       GROUP BY doc_id, i
+    ),
+    sigs AS (
+      SELECT doc_id,
+             CAST(SUM(CASE WHEN w > 0
+                           THEN CAST(1 AS BIGINT) << CAST(i - 1 AS INTEGER)
+                           ELSE 0 END) AS BIGINT) AS simhash
+      FROM votes
+      GROUP BY doc_id
     )
-    SELECT doc_id,
-           CAST(SUM(CASE WHEN w > 0
-                         THEN CAST(1 AS BIGINT) << CAST(i - 1 AS INTEGER)
-                         ELSE 0 END) AS BIGINT) AS simhash
-    FROM votes
-    GROUP BY doc_id
+"""
+
+
+@query(
+    "simhash_signatures",
+    oracle=f"""
+    WITH {_DUCK_SIMHASH}
+    SELECT doc_id, simhash FROM sigs
     """,
 )
 def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -750,8 +765,6 @@ _DUCK_DOT = (
     """,
 )
 def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
@@ -774,12 +787,7 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             fold_dot_np("qv", "cv") / (F.col("qn") * F.col("cn")), 4
         ).alias("sim"),
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        scored.select("q_id", "vec_id", "sim", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= 10)
-        .drop("rn")
-    )
+    return top_k_per_query(scored)
 
 
 # --------------------------------------------------------------------------
@@ -1514,28 +1522,6 @@ def _simhash_np(texts: "pd.Series") -> "pd.Series":
         out.append(int(np.where(votes > 0, bit_vals, 0).sum()))
     return pd.Series(out)
 
-_DUCK_SIMHASH = """
-    toks AS (
-      SELECT doc_id, UNNEST(list_distinct(string_split(text, ' '))) AS tok
-      FROM documents
-    ),
-    votes AS (
-      SELECT doc_id, i,
-             SUM(CASE WHEN ascii(substr(md5(tok), i, 1)) % 2 = 1
-                      THEN 1 ELSE -1 END) AS w
-      FROM toks, (SELECT UNNEST(range(1, 33)) AS i)
-      GROUP BY doc_id, i
-    ),
-    sigs AS (
-      SELECT doc_id,
-             CAST(SUM(CASE WHEN w > 0
-                           THEN CAST(1 AS BIGINT) << CAST(i - 1 AS INTEGER)
-                           ELSE 0 END) AS BIGINT) AS simhash
-      FROM votes
-      GROUP BY doc_id
-    )
-"""
-
 
 @query(
     "simhash_near_dup_pairs",
@@ -1685,8 +1671,8 @@ def jaccard_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # The verified relation is itself a shared chain stage: four
     # downstream queries (clusters, both survivor rules, the histogram)
-    # consume it through dedup_clusters' own shared stage
-    # ("llm.dedup_clusters", built from this relation), and the verify
+    # consume it through dedup_clusters' own shared stage (the "minhash"
+    # near_dup_clusters family, built from this relation), and the verify
     # join is the chain's second-most expensive stage after the
     # signatures.
     return shared_stage(
@@ -1822,43 +1808,32 @@ def edit_distance_verified_pairs(
 # component. Spark runs distributed min-label propagation
 # (operators/graph.py); the oracle computes the same fixpoint as a
 # recursive-CTE reachability closure. Pure integer math — exact match.
+_DUCK_MINHASH_CLOSURE = duck_near_dup_closure("vpairs", "doc_a", "doc_b")
+
+
 @query(
     "dedup_clusters",
     oracle=_duck_band_cte().replace("WITH ", "WITH RECURSIVE ", 1)
     + _DUCK_VERIFIED_PAIRS_CTES
-    + """
-    , sym AS (
-      SELECT doc_a AS a, doc_b AS b FROM vpairs
-      UNION ALL
-      SELECT doc_b AS a, doc_a AS b FROM vpairs
-    ),
-    walk(id, rep) AS (
-      SELECT a, a FROM sym
-      UNION
-      SELECT s.a, w.rep FROM sym s JOIN walk w ON w.id = s.b
-    )
+    + f"""
+    , {_DUCK_MINHASH_CLOSURE}
     SELECT id AS doc_id, MIN(rep) AS cluster_id
     FROM walk
     GROUP BY id
     """,
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bq_nvd_spark.operators.checkpoint import shared_stage
-
-    def _build() -> DataFrame:
-        from bq_nvd_spark.operators.graph import connected_components
-
-        pairs = jaccard_verified_pairs(spark, sf_dir)
-        edges = pairs.select(
-            F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-        )
-        cc = connected_components(edges, max_iter=10)
-        return cc.select(F.col("id").alias("doc_id"), "cluster_id")
-
     # Third shared link of the chain: both survivor rules and the size
-    # histogram consume the cluster relation; the CC iteration (joins +
-    # per-round checkpoints) re-ran for each of them before round 12.
-    return shared_stage(spark, ("llm.dedup_clusters", sf_dir), _build)
+    # histogram consume the memoized cluster relation.
+    cc = near_dup_clusters(
+        spark,
+        "minhash",
+        sf_dir,
+        lambda: jaccard_verified_pairs(spark, sf_dir),
+        "doc_a",
+        "doc_b",
+    )
+    return cc.select(F.col("id").alias("doc_id"), "cluster_id")
 
 
 # --------------------------------------------------------------------------
@@ -1875,17 +1850,8 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_survivors",
     oracle=_duck_band_cte().replace("WITH ", "WITH RECURSIVE ", 1)
     + _DUCK_VERIFIED_PAIRS_CTES
-    + """
-    , sym AS (
-      SELECT doc_a AS a, doc_b AS b FROM vpairs
-      UNION ALL
-      SELECT doc_b AS a, doc_a AS b FROM vpairs
-    ),
-    walk(id, rep) AS (
-      SELECT a, a FROM sym
-      UNION
-      SELECT s.a, w.rep FROM sym s JOIN walk w ON w.id = s.b
-    ),
+    + f"""
+    , {_DUCK_MINHASH_CLOSURE},
     dropped AS (
       SELECT id FROM walk GROUP BY id HAVING id != MIN(rep)
     )
@@ -1917,17 +1883,8 @@ def dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_survivors_by_quality",
     oracle=_duck_band_cte().replace("WITH ", "WITH RECURSIVE ", 1)
     + _DUCK_VERIFIED_PAIRS_CTES
-    + """
-    , sym AS (
-      SELECT doc_a AS a, doc_b AS b FROM vpairs
-      UNION ALL
-      SELECT doc_b AS a, doc_a AS b FROM vpairs
-    ),
-    walk(id, rep) AS (
-      SELECT a, a FROM sym
-      UNION
-      SELECT s.a, w.rep FROM sym s JOIN walk w ON w.id = s.b
-    ),
+    + f"""
+    , {_DUCK_MINHASH_CLOSURE},
     clusters AS (
       SELECT id, MIN(rep) AS rep FROM walk GROUP BY id
     ),
@@ -1973,17 +1930,8 @@ def dedup_survivors_by_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_cluster_size_histogram",
     oracle=_duck_band_cte().replace("WITH ", "WITH RECURSIVE ", 1)
     + _DUCK_VERIFIED_PAIRS_CTES
-    + """
-    , sym AS (
-      SELECT doc_a AS a, doc_b AS b FROM vpairs
-      UNION ALL
-      SELECT doc_b AS a, doc_a AS b FROM vpairs
-    ),
-    walk(id, rep) AS (
-      SELECT a, a FROM sym
-      UNION
-      SELECT s.a, w.rep FROM sym s JOIN walk w ON w.id = s.b
-    ),
+    + f"""
+    , {_DUCK_MINHASH_CLOSURE},
     clusters AS (
       SELECT id, MIN(rep) AS rep FROM walk GROUP BY id
     ),

@@ -47,17 +47,19 @@ from pyspark.sql.window import Window
 
 from bq_nvd_spark.operators.checkpoint import stage_checkpoint
 from bq_nvd_spark.operators.similarity import (
+    DUCK_TOP_K_TAIL,
     PQ_M,
+    TOP_K,
     duck_fold_dot,
     fold_dot_np,
     make_pq_encoder,
     subspace_dots_np,
+    top_k_per_query,
 )
 from bq_nvd_spark.plans.registry import query
 from bq_nvd_spark.sources.tables import load_table
 
 K_CENTROIDS = 64
-TOP_K = 10
 SHORTLIST_MIN = 100  # ADC shortlist: max(SHORTLIST_MIN, corpus/10)
 _QUERY_MAX_ID = 5  # same query/corpus split as the other E3 queries
 RECALL_MIN = 0.5  # measured >= 0.6 per query at sf0.001/0.01/0.1
@@ -80,13 +82,7 @@ _PQ_ORACLE = f"""
       FROM c CROSS JOIN q
     )
     SELECT q_id, vec_id, sim, TRUE AS recall_ok
-    FROM (
-      SELECT q_id, vec_id, sim,
-             ROW_NUMBER() OVER (PARTITION BY q_id
-                                ORDER BY sim DESC, vec_id) AS rn
-      FROM scored
-    )
-    WHERE rn <= {TOP_K}
+    {DUCK_TOP_K_TAIL}
 """
 
 
@@ -227,24 +223,14 @@ def pq_adc_recall_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("sim"),
         )
     )
-    w_ex = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    exact_top = (
-        exact_scored.select(
-            "q_id", "vec_id", "sim", F.row_number().over(w_ex).alias("rn")
-        )
-        .filter(F.col("rn") <= TOP_K)
-        .drop("rn")
-    )
+    exact_top = top_k_per_query(exact_scored)
 
     # Refine: exact re-rank of the ADC shortlist = the PQ pipeline's
     # final answer. (In production only these rows would ever read the
     # float vectors; here they reuse the already-computed exact scores.)
-    pq_top = (
+    pq_top = top_k_per_query(
         exact_scored.join(shortlist, ["q_id", "vec_id"], "left_semi")
-        .select("q_id", "vec_id", F.row_number().over(w_ex).alias("rn"))
-        .filter(F.col("rn") <= TOP_K)
-        .select("q_id", "vec_id", F.lit(1).alias("hit"))
-    )
+    ).select("q_id", "vec_id", F.lit(1).alias("hit"))
 
     recall = (
         exact_top.join(pq_top, ["q_id", "vec_id"], "left")

@@ -25,7 +25,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bq_nvd_spark.operators.similarity import fold_dot_np
+from bq_nvd_spark.operators.similarity import (
+    DUCK_TOP_K_TAIL,
+    fold_dot_np,
+    top_k_per_query,
+)
 from bq_nvd_spark.plans.registry import query
 from bq_nvd_spark.sources.tables import load_table
 
@@ -114,7 +118,6 @@ def embedding_int8_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TOP_K = 10
 _QUERY_MAX_ID = 5  # same query/corpus split as similarity_search.py
 
 
@@ -156,13 +159,7 @@ _QUERY_MAX_ID = 5  # same query/corpus split as similarity_search.py
         ON q.vec_id < {_QUERY_MAX_ID} AND c.vec_id >= {_QUERY_MAX_ID}
     )
     SELECT q_id, vec_id, sim
-    FROM (
-      SELECT q_id, vec_id, sim,
-             ROW_NUMBER() OVER (PARTITION BY q_id
-                                ORDER BY sim DESC, vec_id) AS rn
-      FROM scored
-    )
-    WHERE rn <= {TOP_K}
+    {DUCK_TOP_K_TAIL}
     """,
 )
 def quantized_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -171,8 +168,6 @@ def quantized_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-the-queries shape: the corpus never shuffles, each row
     pays one fold per query, and the scale cost model is identical to
     the exact version (the quantization is a per-row projection)."""
-    from pyspark.sql.window import Window
-
     emb = (
         load_table(spark, sf_dir, "embeddings")
         .repartition(spark.sparkContext.defaultParallelism, "vec_id")
@@ -223,9 +218,4 @@ def quantized_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             / 10000
         ).alias("sim"),
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        scored.select("q_id", "vec_id", "sim", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= TOP_K)
-        .drop("rn")
-    )
+    return top_k_per_query(scored)

@@ -15,7 +15,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bq_nvd_spark.operators.graph import duck_near_dup_closure, near_dup_clusters
 from bq_nvd_spark.operators.similarity import (
+    DUCK_TOP_K_TAIL,
+    TOP_K,
     band_buckets_np,
     duck_band_buckets,
     duck_fold_dot,
@@ -24,11 +27,10 @@ from bq_nvd_spark.operators.similarity import (
     fold_dot_np,
     refine_bucket_np,
     sorted_pairs,
+    top_k_per_query,
 )
 from bq_nvd_spark.plans.registry import query
 from bq_nvd_spark.sources.tables import load_table
-
-TOP_K = 10
 
 
 def _spread_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -66,10 +68,10 @@ def _emb_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shared_stage(spark, ("emb_sig", sf_dir), build)
 
 
-@query(
-    "ann_lsh_topk",
-    oracle=f"""
-    WITH e AS (
+#: The sign-LSH signature relation as oracle CTEs: ``e`` (raw vectors),
+#: ``sig`` (norm + band buckets) and ``buckets`` (one row per band) —
+#: one text for ann_lsh_topk and the embedding-pair chain.
+_DUCK_LSH_BUCKETS_CTE = f"""e AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
     ),
     sig AS MATERIALIZED (
@@ -81,7 +83,13 @@ def _emb_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets AS (
       SELECT vec_id, v, nrm, b.band_idx, bands[b.band_idx + 1] AS bucket
       FROM sig, (SELECT UNNEST(range(0, 4)) AS band_idx) b
-    ),
+    )"""
+
+
+@query(
+    "ann_lsh_topk",
+    oracle=f"""
+    WITH {_DUCK_LSH_BUCKETS_CTE},
     q AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn, band_idx, bucket
           FROM buckets WHERE vec_id < {_QUERY_MAX_ID}),
     c AS (SELECT vec_id, v AS cv, nrm AS cn, band_idx, bucket
@@ -97,21 +105,13 @@ def _emb_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM cand
     )
     SELECT q_id, vec_id, sim
-    FROM (
-      SELECT q_id, vec_id, sim,
-             ROW_NUMBER() OVER (PARTITION BY q_id
-                                ORDER BY sim DESC, vec_id) AS rn
-      FROM scored
-    )
-    WHERE rn <= {TOP_K}
+    {DUCK_TOP_K_TAIL}
     """,
 )
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed top-k: signatures are a per-row projection, candidate
     generation is an equi-join on (band, bucket) — never a corpus cross
     join — and only bucket-sharing pairs pay the exact cosine."""
-    from pyspark.sql.window import Window
-
     # Signatures + norms via the Arrow/numpy twins: one matmul (and one
     # cumsum fold) per batch instead of ~4k interpreted HOF lambda
     # evaluations per row (HOFs never codegen; fold_dot_np reproduces
@@ -157,17 +157,22 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        scored.select("q_id", "vec_id", "sim", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= TOP_K)
-        .drop("rn")
-    )
+    return top_k_per_query(scored)
 
 
 IVF_CELLS = 16  # centroid count; cells ≈ corpus/16
 IVF_NPROBE = 4  # cells probed per query
 _CENT_MAX_ID = _QUERY_MAX_ID + IVF_CELLS
+
+
+#: The normalized embedding relation as oracle CTEs (``e`` raw,
+#: ``n`` = (vec_id, v, nrm)) — the oracle twin of ``_ivf_norms``.
+_DUCK_NORMS_CTE = f"""e AS (
+      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+    ),
+    n AS MATERIALIZED (
+      SELECT vec_id, v, SQRT({duck_fold_dot('v', 'v')}) AS nrm FROM e
+    )"""
 
 
 #: the deterministic IVF coarse quantizer as oracle CTEs — ONE text,
@@ -331,12 +336,7 @@ def _ivf_assign_and_probes(spark: SparkSession, sf_dir: str):
 @query(
     "ivf_topk",
     oracle=f"""
-    WITH e AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ),
-    n AS MATERIALIZED (
-      SELECT vec_id, v, SQRT({duck_fold_dot('v', 'v')}) AS nrm FROM e
-    ),
+    WITH {_DUCK_NORMS_CTE},
     {_IVF_QUANTIZER_CTE},
     scored AS (
       SELECT p.q_id, a.vec_id,
@@ -345,13 +345,7 @@ def _ivf_assign_and_probes(spark: SparkSession, sf_dir: str):
       FROM probes p JOIN assign a ON a.cell = p.cell
     )
     SELECT q_id, vec_id, sim
-    FROM (
-      SELECT q_id, vec_id, sim,
-             ROW_NUMBER() OVER (PARTITION BY q_id
-                                ORDER BY sim DESC, vec_id) AS rn
-      FROM scored
-    )
-    WHERE rn <= {TOP_K}
+    {DUCK_TOP_K_TAIL}
     """,
 )
 def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -372,8 +366,6 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tunable against executor memory the same way N_BITS tunes LSH
     buckets.
     """
-    from pyspark.sql.window import Window
-
     assign, probes = _ivf_assign_and_probes(spark, sf_dir)
     scored = assign.join(F.broadcast(probes), "cell").select(
         "q_id",
@@ -386,12 +378,7 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             / 10000
         ).alias("sim"),
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        scored.select("q_id", "vec_id", "sim", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= TOP_K)
-        .drop("rn")
-    )
+    return top_k_per_query(scored)
 
 
 SIMILAR_COS = 0.40
@@ -538,19 +525,7 @@ def _duck_emb_pairs_cte() -> str:
     ``embedding_similar_pairs`` and ``semantic_dedup_survivors`` so the
     cap/star semantics can never drift between the two oracles."""
     return f"""
-    e AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ),
-    sig AS MATERIALIZED (
-      SELECT vec_id, v,
-             SQRT({duck_fold_dot('v', 'v')}) AS nrm,
-             {duck_band_buckets('v')}        AS bands
-      FROM e
-    ),
-    buckets AS (
-      SELECT vec_id, v, nrm, b.band_idx, bands[b.band_idx + 1] AS bucket
-      FROM sig, (SELECT UNNEST(range(0, 4)) AS band_idx) b
-    ),
+    {_DUCK_LSH_BUCKETS_CTE},
     sized AS (
       SELECT band_idx, bucket, COUNT(*) AS c
       FROM buckets GROUP BY band_idx, bucket HAVING COUNT(*) >= 2
@@ -732,12 +707,7 @@ _SCORE_SCALE = 1_000_000_000_000  # cos → integer at 1e-12 — exact int sums
 @query(
     "ivf_refined_topk",
     oracle=f"""
-    WITH e AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ),
-    n AS MATERIALIZED (
-      SELECT vec_id, v, SQRT({duck_fold_dot('v', 'v')}) AS nrm FROM e
-    ),
+    WITH {_DUCK_NORMS_CTE},
     cents AS (
       SELECT vec_id AS cent_id, v AS cv, nrm AS cnrm
       FROM n WHERE vec_id >= {_QUERY_MAX_ID} AND vec_id < {_CENT_MAX_ID}
@@ -808,13 +778,7 @@ _SCORE_SCALE = 1_000_000_000_000  # cos → integer at 1e-12 — exact int sums
       FROM probes p JOIN reassign a ON a.rcell = p.rcell
     )
     SELECT q_id, vec_id, sim
-    FROM (
-      SELECT q_id, vec_id, sim,
-             ROW_NUMBER() OVER (PARTITION BY q_id
-                                ORDER BY sim DESC, vec_id) AS rn
-      FROM scored
-    )
-    WHERE rn <= {TOP_K}
+    {DUCK_TOP_K_TAIL}
     """,
 )
 def ivf_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -976,12 +940,7 @@ def ivf_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             / 10000
         ).alias("sim"),
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        scored.select("q_id", "vec_id", "sim", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= TOP_K)
-        .drop("rn")
-    )
+    return top_k_per_query(scored)
 
 
 # --------------------------------------------------------------------------
@@ -1000,16 +959,7 @@ def ivf_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge AS (
       SELECT id_a, id_b FROM pairs WHERE sim >= {SIMILAR_COS}
     ),
-    sym AS (
-      SELECT id_a AS a, id_b AS b FROM edge
-      UNION ALL
-      SELECT id_b AS a, id_a AS b FROM edge
-    ),
-    walk(id, rep) AS (
-      SELECT a, a FROM sym
-      UNION
-      SELECT s.a, w.rep FROM sym s JOIN walk w ON w.id = s.b
-    ),
+    {duck_near_dup_closure("edge", "id_a", "id_b")},
     dropped AS (
       SELECT id FROM walk GROUP BY id HAVING id != MIN(rep)
     )
@@ -1021,12 +971,15 @@ def ivf_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def semantic_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The semantically deduplicated embedding corpus: every vector
     survives except non-minimum members of cosine-similarity clusters."""
-    from bq_nvd_spark.operators.graph import connected_components
-
-    pairs = embedding_similar_pairs(spark, sf_dir)
-    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     dropped = (
-        connected_components(edges, max_iter=10)
+        near_dup_clusters(
+            spark,
+            "emb_lsh",
+            sf_dir,
+            lambda: embedding_similar_pairs(spark, sf_dir),
+            "id_a",
+            "id_b",
+        )
         .filter(F.col("id") != F.col("cluster_id"))
         .select(F.col("id").alias("vec_id"))
     )
@@ -1654,26 +1607,23 @@ def _semdedup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _semdedup_dropped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Non-minimum members of the within-cell cosine clusters — the
     vec_ids SemDeDup removes. Shared by the survivor transform and
-    the composed D4 pipeline below. Optimization round 17: the
-    connected-components CLOSURE is itself ``shared_stage``-memoized —
-    the edge relation already was, but both consumers re-ran the CC
-    driver loop (one join + agg job per iteration) on every
-    invocation; the dropped set is exactly as immutable as the edges
-    it derives from."""
-    from bq_nvd_spark.operators.checkpoint import shared_stage
-    from bq_nvd_spark.operators.graph import connected_components
-
-    def build() -> DataFrame:
-        edges = _semdedup_edges(spark, sf_dir).select(
-            F.col("id_a").alias("src"), F.col("id_b").alias("dst")
+    the composed D4 pipeline below, both reading the one memoized
+    closure of the family."""
+    return (
+        near_dup_clusters(
+            spark,
+            "semdedup",
+            sf_dir,
+            lambda: _semdedup_edges(spark, sf_dir),
+            "id_a",
+            "id_b",
         )
-        return (
-            connected_components(edges, max_iter=10)
-            .filter(F.col("id") != F.col("cluster_id"))
-            .select(F.col("id").alias("vec_id"))
-        )
+        .filter(F.col("id") != F.col("cluster_id"))
+        .select(F.col("id").alias("vec_id"))
+    )
 
-    return shared_stage(spark, ("semdedup_dropped", sf_dir), build)
+
+_DUCK_SEMDEDUP_CLOSURE = duck_near_dup_closure("sd_edges", "id_a", "id_b")
 
 
 @query(
@@ -1695,16 +1645,7 @@ def semdedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "semdedup_survivors",
     oracle=f"""
     WITH RECURSIVE {_SEMDEDUP_PAIRS_CTE},
-    sym AS (
-      SELECT id_a AS a, id_b AS b FROM sd_edges
-      UNION ALL
-      SELECT id_b AS a, id_a AS b FROM sd_edges
-    ),
-    walk(id, rep) AS (
-      SELECT a, a FROM sym
-      UNION
-      SELECT s.a, w.rep FROM sym s JOIN walk w ON w.id = s.b
-    ),
+    {_DUCK_SEMDEDUP_CLOSURE},
     dropped AS (
       SELECT id FROM walk GROUP BY id HAVING id != MIN(rep)
     )
@@ -1745,12 +1686,7 @@ def semdedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ivf_cell_census",
     oracle=f"""
-    WITH e AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ),
-    n AS MATERIALIZED (
-      SELECT vec_id, v, SQRT({duck_fold_dot('v', 'v')}) AS nrm FROM e
-    ),
+    WITH {_DUCK_NORMS_CTE},
     {_IVF_QUANTIZER_CTE}
     SELECT cell,
            CAST(COUNT(*) AS BIGINT) AS n_vecs,
@@ -2007,12 +1943,7 @@ _BRUTE_TOP_CTES = f"""bscored AS (
 @query(
     "ivf_recall_census",
     oracle=f"""
-    WITH e AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ),
-    n AS MATERIALIZED (
-      SELECT vec_id, v, SQRT({duck_fold_dot('v', 'v')}) AS nrm FROM e
-    ),
+    WITH {_DUCK_NORMS_CTE},
     {_IVF_QUANTIZER_CTE},
     iscored AS (
       SELECT p.q_id, a.vec_id,
@@ -2120,12 +2051,7 @@ def _brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ivf_nprobe_sweep",
     oracle=f"""
-    WITH e AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ),
-    n AS MATERIALIZED (
-      SELECT vec_id, v, SQRT({duck_fold_dot('v', 'v')}) AS nrm FROM e
-    ),
+    WITH {_DUCK_NORMS_CTE},
     {_IVF_QUANTIZER_CTE},
     pr AS (
       SELECT p.q_id, p.qv, p.qn, p.cell,
@@ -2249,16 +2175,7 @@ def ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     "d4_pipeline_survivors",
     oracle=f"""
     WITH RECURSIVE {_SEMDEDUP_PAIRS_CTE},
-    sym AS (
-      SELECT id_a AS a, id_b AS b FROM sd_edges
-      UNION ALL
-      SELECT id_b AS a, id_a AS b FROM sd_edges
-    ),
-    walk(id, rep) AS (
-      SELECT a, a FROM sym
-      UNION
-      SELECT s.a, w.rep FROM sym s JOIN walk w ON w.id = s.b
-    ),
+    {_DUCK_SEMDEDUP_CLOSURE},
     dropped AS (
       SELECT id FROM walk GROUP BY id HAVING id != MIN(rep)
     ),

@@ -2,7 +2,6 @@
 
 from bq_nvd_spark.streaming.micro_batch import (  # noqa: F401
     run_available_now,
-    stream_cve_ingest,
     stream_events,
     streaming_dedup_keys,
     streaming_static_enrich,

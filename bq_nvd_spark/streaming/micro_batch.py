@@ -18,8 +18,6 @@ Streaming forms of the batch plans, each equivalent to its twin:
   reference etl.py:87-88) via ``dropDuplicates`` state. Projected to the
   key columns so the emitted row-set is deterministic (which *row* wins
   under arrival order is not; which *keys* exist is).
-- ``stream_cve_ingest`` — the NVD staging-dir ingest loop as a stream
-  (tested for batch equality, not oracle-registered).
 - ``stateful.py`` (sibling module) — the applyInPandasWithState custom
   stateful operator.
 
@@ -59,6 +57,7 @@ from bq_nvd_spark.plans.curation import (
     gopher_census_kernel,
     repetition_gate_census,
 )
+from bq_nvd_spark.plans.events import SLIDING_COUNTS_ORACLE
 from bq_nvd_spark.plans.privacy import PII_CENSUS_ORACLE, scrub_census
 from bq_nvd_spark.plans.registry import query
 from bq_nvd_spark.sources.tables import nanos_to_timestamp, table_schema
@@ -174,28 +173,6 @@ def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# T1+T3 streaming, NVD form: the reference's CronJob loop as a stream.
-def stream_cve_ingest(spark: SparkSession, staging_dir: str) -> DataFrame:
-    """The NVD incremental loop (reference bq-nvd.py:98-104) in streaming
-    form: watch an NDJSON staging dir, keep the first row per CVE ID
-    (``dropDuplicates`` state = the first-write-wins contract of
-    etl.py:87-88, held across every file the stream ever reads), drain
-    with AvailableNow per activation. Returns the deduped ID stream;
-    callers drain it with ``run_available_now`` — into its memory sink,
-    or through ``foreach_batch`` into an ``NvdStore``.
-    """
-    from bq_nvd_spark.nvd.etl import ID_COL, NVD_TIMESTAMP_FORMAT
-    from bq_nvd_spark.nvd.schema import nvd_schema
-
-    raw = (
-        spark.readStream.schema(nvd_schema())
-        .option("timestampFormat", NVD_TIMESTAMP_FORMAT)
-        .json(staging_dir)
-    )
-    return raw.withColumn("ID", F.col(ID_COL)).dropDuplicates(["ID"])
-
-
-# --------------------------------------------------------------------------
 # T3 streaming: keyed dedup via dropDuplicates state.
 @query(
     "streaming_dedup_keys",
@@ -236,23 +213,7 @@ def streaming_dedup_within_watermark(
 
 # --------------------------------------------------------------------------
 # T4 streaming: sliding event-time window over the stream.
-@query(
-    "streaming_sliding_counts",
-    oracle="""
-    SELECT window_start, COUNT(*) AS n_events
-    FROM (
-      SELECT UNNEST([
-        DATE_TRUNC('hour', ts) + CASE WHEN EXTRACT(minute FROM ts) >= 30
-                                      THEN INTERVAL 30 MINUTE ELSE INTERVAL 0 MINUTE END,
-        DATE_TRUNC('hour', ts) + CASE WHEN EXTRACT(minute FROM ts) >= 30
-                                      THEN INTERVAL 30 MINUTE ELSE INTERVAL 0 MINUTE END
-          - INTERVAL 30 MINUTE
-      ]) AS window_start
-      FROM events
-    )
-    GROUP BY window_start
-    """,
-)
+@query("streaming_sliding_counts", oracle=SLIDING_COUNTS_ORACLE)
 def streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding windows double the per-event state writes (each event
     lands in two windows); complete mode keeps the AvailableNow drain

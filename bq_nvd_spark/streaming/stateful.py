@@ -36,6 +36,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from bq_nvd_spark.plans.funnels import FUNNEL_CONVERSION_ORACLE
 from bq_nvd_spark.plans.registry import query
 from bq_nvd_spark.streaming.micro_batch import run_available_now, stream_events
 
@@ -193,26 +194,7 @@ def _funnel_update(
     )
 
 
-@query(
-    "streaming_funnel_conversion",
-    oracle="""
-    WITH pu AS (
-      SELECT user_id,
-             MIN(CASE WHEN event_type = 'view' THEN ts END)     AS mv,
-             MIN(CASE WHEN event_type = 'click' THEN ts END)    AS mc,
-             MIN(CASE WHEN event_type = 'purchase' THEN ts END) AS mp
-      FROM events
-      GROUP BY user_id
-    )
-    SELECT CAST(COUNT(CASE WHEN mv IS NOT NULL THEN 1 END) AS BIGINT)
-             AS n_view_users,
-           CAST(COUNT(CASE WHEN mc > mv THEN 1 END) AS BIGINT)
-             AS n_view_then_click,
-           CAST(COUNT(CASE WHEN mc > mv AND mp > mc THEN 1 END) AS BIGINT)
-             AS n_full_funnel
-    FROM pu
-    """,
-)
+@query("streaming_funnel_conversion", oracle=FUNNEL_CONVERSION_ORACLE)
 def streaming_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The batch funnel (``plans/funnels.py``) maintained as streaming
     state: one AvailableNow drain, then the conversion counts off the

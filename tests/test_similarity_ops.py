@@ -750,6 +750,58 @@ def test_d4_pipeline_rederives_quota_over_semdedup_survivors(spark, sf_dir):
     assert dict(got) == {c: n for c, n in expect.items() if n > 0}
 
 
+def test_dedup_and_retrieval_idioms_have_one_definition():
+    """The near-dup closure and the top-k-per-query window each have one
+    home (operators/graph.py, operators/similarity.py) that every dedup
+    and retrieval family calls: one ``connected_components`` call site,
+    one recursive ``walk`` CTE, one (sim DESC, vec_id ASC) top-k window
+    and one ``TOP_K`` in the engine."""
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    needles = {
+        "connected_components(": 0,
+        "walk(id, rep) AS (": 0,
+        'partitionBy("q_id").orderBy(F.desc("sim"), F.asc("vec_id"))': 0,
+        "TOP_K = 10": 0,
+    }
+    for dirpath, _, files in os.walk(os.path.join(root, "bq_nvd_spark")):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            with open(os.path.join(dirpath, name), encoding="utf-8") as fh:
+                for line in fh:
+                    for needle in needles:
+                        if needle in line and "def connected_components(" not in line:
+                            needles[needle] += 1
+    assert needles == dict.fromkeys(needles, 1), needles
+
+
+def test_semantic_dedup_closure_is_memoized(spark, sf_dir, monkeypatch):
+    """A second semantic_dedup_survivors build reads the memoized closure:
+    no connected-components round (no ``stage_checkpoint`` in
+    operators/graph.py) runs again, and the result is unchanged."""
+    from bq_nvd_spark.operators import graph
+    from bq_nvd_spark.operators.checkpoint import release_shared_stages
+    from bq_nvd_spark.plans import QUERIES
+
+    calls = []
+    real = graph.stage_checkpoint
+
+    def counting(df, **kw):
+        calls.append(1)
+        return real(df, **kw)
+
+    monkeypatch.setattr(graph, "stage_checkpoint", counting)
+    release_shared_stages(spark)
+    first = sorted(QUERIES["semantic_dedup_survivors"](spark, sf_dir).collect())
+    cold = len(calls)
+    second = sorted(QUERIES["semantic_dedup_survivors"](spark, sf_dir).collect())
+    assert cold > 0
+    assert len(calls) == cold
+    assert first and first == second
+
+
 # --------------------------------------------------------------------------
 # Optimization round 17: the PQ encode moved from a corpus×K crossJoin
 # + groupBy-argmin (two 64-dim vectors through Arrow per candidate

@@ -69,28 +69,6 @@ def test_available_now_rerun_is_stable(spark, sf_dir):
     assert _as_set(first) == _as_set(second)
 
 
-def test_stream_cve_ingest_first_write_wins(spark, tmp_path):
-    """The NVD loop in streaming form: NDJSON staging dir → dropDuplicates
-    state on CVE ID → AvailableNow drain equals the batch dedup."""
-    import json
-
-    from bq_nvd_spark.nvd import cve_items, read_feed, write_ndjson
-    from bq_nvd_spark.nvd.etl import ID_COL
-    from bq_nvd_spark.streaming import stream_cve_ingest
-
-    fixture = "tests/fixtures/nvd/nvdcve-1.1-2024.json.gz"
-    staging = str(tmp_path / "staging")
-    items = cve_items(read_feed(spark, fixture))
-    write_ndjson(items, staging)
-
-    stream = stream_cve_ingest(spark, staging)
-    assert stream.isStreaming
-    got = run_available_now(stream.select("ID"), output_mode="append")
-    got_ids = {r.ID for r in got.collect()}
-    want_ids = {r[0] for r in items.select(ID_COL).collect()}
-    assert got_ids == want_ids
-
-
 def test_upsert_store_replay_and_merge(spark, tmp_path):
     """ParquetUpsertStore: replace-by-key merge, and a replayed batch id
     (post-recovery at-least-once delivery) is skipped without touching
