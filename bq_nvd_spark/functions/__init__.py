@@ -13,11 +13,9 @@ from bq_nvd_spark.functions.text_metrics import (
     token_count,
 )
 from bq_nvd_spark.operators.similarity import fold_dot
-from bq_nvd_spark.operators.text import char_ngrams
 
 __all__ = [
     "avg_token_len",
-    "char_ngrams",
     "fold_dot",
     "rolling_fingerprint",
     "stopword_ratio",

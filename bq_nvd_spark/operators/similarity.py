@@ -1,4 +1,19 @@
-"""E3 similarity search — the bucketed ANN scale path.
+"""E3 similarity search — the vector kit and the bucketed ANN scale path.
+
+**The vector kit** is the one definition of each retrieval idiom that
+every E3 plan module (``plans/similarity_search.py``, ``plans/pq.py``,
+``plans/quantization.py``, ``plans/llm.py::cosine_topk``) calls, Spark
+side and oracle side:
+
+- ``QUERY_MAX_ID`` — the query/corpus split (vec_id < 5 are queries);
+- ``cosine`` / ``cos_e4`` and ``duck_cosine`` / ``duck_cos_e4`` — the
+  fold-ordered cosine and its e4 floor, ``floor(cos * 10000 + 0.5)``;
+- ``normed_corpus`` / ``DUCK_NORMS_CTE`` — the session-memoized
+  (vec_id, v, nrm) relation;
+- ``score_query_set`` / ``DUCK_QUERY_SET_SCORED`` — the query set
+  broadcast against the corpus and scored;
+- ``top_k_per_query`` / ``DUCK_TOP_K_TAIL`` — the (sim DESC, vec_id
+  ASC) top-``TOP_K`` window.
 
 Brute-force cosine top-k (``plans/llm.py::cosine_topk``) is exact but
 O(N·Q): every query batch rescans the full corpus. This module adds the
@@ -34,11 +49,14 @@ import hashlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, DoubleType, IntegerType
 from pyspark.sql.window import Window
+
+from bq_nvd_spark.operators.checkpoint import shared_stage
+from bq_nvd_spark.sources.tables import load_table
 
 DIM = 64
 N_BANDS = 4
@@ -286,6 +304,95 @@ def duck_fold_dot(a: str, b: str) -> str:
         f"list_reduce(list_prepend(0.0, list_transform(range(1, {DIM + 1}), "
         f"i -> {a}[i] * {b}[i])), (x, y) -> x + y)"
     )
+
+
+# -- The E3 vector kit -----------------------------------------------------
+QUERY_MAX_ID = 5  # vec_id < 5 are the query set, the rest the corpus
+
+
+def cosine(a: str, b: str, na: str, nb: str) -> Column:
+    """Cosine of the vector columns ``a``/``b`` with norm columns
+    ``na``/``nb``: the Arrow fold dot over the norm product."""
+    return fold_dot_np(a, b) / (F.col(na) * F.col(nb))
+
+
+def cos_e4(a: str, b: str, na: str, nb: str) -> Column:
+    """``cosine`` floored to integer 1e-4 units, ``floor(cos * 10000 +
+    0.5)`` — bit-identical in both engines, where ROUND is not (see
+    plans/nested.py). A double: callers divide by 10000 for a display
+    sim or cast to long for integer compares."""
+    return F.floor(cosine(a, b, na, nb) * 10000 + 0.5)
+
+
+def duck_cosine(a: str, b: str, na: str, nb: str) -> str:
+    """DuckDB twin of ``cosine``."""
+    return f"{duck_fold_dot(a, b)} / ({na} * {nb})"
+
+
+def duck_cos_e4(a: str, b: str, na: str, nb: str) -> str:
+    """DuckDB twin of ``cos_e4``."""
+    return f"FLOOR({duck_cosine(a, b, na, nb)} * 10000 + 0.5)"
+
+
+def normed_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, v: array<double>, nrm) over the embeddings table — the
+    normed relation every E3 consumer reads, ``shared_stage``-memoized
+    per (application, sf_dir). The repartition spreads a toy
+    single-file corpus across cores for the Arrow norm kernel; real
+    inputs arrive already partitioned and skip straight through."""
+
+    def build() -> DataFrame:
+        emb = (
+            load_table(spark, sf_dir, "embeddings")
+            .repartition(spark.sparkContext.defaultParallelism, "vec_id")
+            .select(
+                "vec_id",
+                F.transform("embedding", lambda x: x.cast("double")).alias("v"),
+            )
+        )
+        return emb.select(
+            "vec_id", "v", F.sqrt(fold_dot_np("v", "v")).alias("nrm")
+        )
+
+    return shared_stage(spark, ("ivf_norms", sf_dir), build)
+
+
+def score_query_set(normed: DataFrame, *keep: str) -> DataFrame:
+    """Every (query, corpus) pair of a (vec_id, v, nrm) relation,
+    scored: the ``QUERY_MAX_ID``-bounded query set is broadcast against
+    the corpus side, so the corpus never shuffles and each corpus row
+    pays one fold per query. Returns (q_id, vec_id, *keep, sim_e4),
+    ``keep`` naming corpus columns to carry along and ``sim_e4`` the
+    ``cos_e4`` double. The oracle twin is ``DUCK_QUERY_SET_SCORED``."""
+    q = normed.filter(F.col("vec_id") < QUERY_MAX_ID).select(
+        F.col("vec_id").alias("q_id"),
+        F.col("v").alias("qv"),
+        F.col("nrm").alias("qn"),
+    )
+    c = normed.filter(F.col("vec_id") >= QUERY_MAX_ID)
+    return c.crossJoin(F.broadcast(q)).select(
+        "q_id", "vec_id", *keep, cos_e4("qv", "v", "qn", "nrm").alias("sim_e4")
+    )
+
+
+#: Twin of ``normed_corpus`` as oracle CTEs: ``e`` (raw vectors) and
+#: ``n`` = (vec_id, v, nrm).
+DUCK_NORMS_CTE = f"""e AS (
+      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
+    ),
+    n AS MATERIALIZED (
+      SELECT vec_id, v, SQRT({duck_fold_dot('v', 'v')}) AS nrm FROM e
+    )"""
+
+#: Twin of ``score_query_set`` over an ``n`` = (vec_id, v, nrm) CTE, as
+#: the ``scored`` (q_id, vec_id, sim) CTE that ``DUCK_TOP_K_TAIL``
+#: reads; sim is the e4 floor over 10000.
+DUCK_QUERY_SET_SCORED = f"""scored AS (
+      SELECT q.vec_id AS q_id, c.vec_id,
+             {duck_cos_e4('q.v', 'c.v', 'q.nrm', 'c.nrm')} / 10000 AS sim
+      FROM n q JOIN n c
+        ON q.vec_id < {QUERY_MAX_ID} AND c.vec_id >= {QUERY_MAX_ID}
+    )"""
 
 
 def duck_band_buckets(vec: str) -> str:

@@ -98,16 +98,6 @@ def langid_predict_sql(text_expr: str) -> str:
     return "CASE " + " ".join(branches) + f" ELSE '{langs[-1]}' END"
 
 
-def char_ngrams(text: Column | str, n: int) -> Column:
-    """All overlapping character n-grams of a string column (built-in
-    formulation, for callers that want the JVM-side path)."""
-    col = F.col(text) if isinstance(text, str) else text
-    return F.transform(
-        F.sequence(F.lit(1), F.length(col) - (n - 1)),
-        lambda i: col.substr(i, F.lit(n)),
-    )
-
-
 def word_bigrams(toks: str) -> Column:
     """Adjacent word bigrams ``"a b"`` of the token-array column named
     ``toks``, in order. Callers gate arrays shorter than 2 tokens:

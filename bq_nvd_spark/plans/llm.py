@@ -49,7 +49,11 @@ from pyspark.sql.types import ArrayType, LongType, StringType
 
 from bq_nvd_spark.operators.graph import duck_near_dup_closure, near_dup_clusters
 from bq_nvd_spark.operators.similarity import (
-    fold_dot_np,
+    DUCK_NORMS_CTE,
+    DUCK_QUERY_SET_SCORED,
+    DUCK_TOP_K_TAIL,
+    normed_corpus,
+    score_query_set,
     sorted_pairs,
     top_k_per_query,
 )
@@ -731,61 +735,23 @@ def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# E3: brute-force cosine top-k — query set broadcast against the candidate
-# corpus; dot/norm are sequential left-folds so both engines produce
-# bit-identical doubles (embeddings are 64-dim float32, cast to double).
-_DUCK_DOT = (
-    "list_reduce(list_transform(range(1, 65), i -> {a}[i] * {b}[i]), (x, y) -> x + y)"
-)
-
-
+# E3: brute-force cosine top-k — the query set broadcast against the
+# corpus and scored through the E3 vector kit (operators/similarity.py):
+# dot/norm are sequential left-folds, so both engines produce
+# bit-identical doubles, and sims are e4-floored (not ROUND, which the
+# engines round differently at half boundaries).
 @query(
     "cosine_topk",
     oracle=f"""
-    WITH e AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ),
-    n AS (
-      SELECT vec_id, v, SQRT({_DUCK_DOT.format(a='v', b='v')}) AS nrm FROM e
-    ),
-    q AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn FROM n WHERE vec_id < 5),
-    c AS (SELECT vec_id, v AS cv, nrm AS cn FROM n WHERE vec_id >= 5),
-    scored AS (
-      SELECT q.q_id, c.vec_id,
-             ROUND({_DUCK_DOT.format(a='qv', b='cv')} / (qn * cn), 4) AS sim
-      FROM c CROSS JOIN q
-    )
+    WITH {DUCK_NORMS_CTE},
+    {DUCK_QUERY_SET_SCORED}
     SELECT q_id, vec_id, sim
-    FROM (
-      SELECT q_id, vec_id, sim,
-             ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) AS rn
-      FROM scored
-    )
-    WHERE rn <= 10
+    {DUCK_TOP_K_TAIL}
     """,
 )
 def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
-    # Arrow cumsum kernel: bit-identical to the sequential fold (same
-    # left-to-right IEEE order), but runs as C loops per batch instead of
-    # interpreted HOF lambdas (see operators/similarity.py::fold_dot_np).
-    normed = emb.select(
-        "vec_id", "v", F.sqrt(fold_dot_np("v", "v")).alias("nrm")
-    )
-    q = normed.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("v").alias("qv"), F.col("nrm").alias("qn")
-    )
-    c = normed.filter(F.col("vec_id") >= 5).select(
-        "vec_id", F.col("v").alias("cv"), F.col("nrm").alias("cn")
-    )
-    scored = c.crossJoin(F.broadcast(q)).select(
-        "q_id",
-        "vec_id",
-        F.round(
-            fold_dot_np("qv", "cv") / (F.col("qn") * F.col("cn")), 4
-        ).alias("sim"),
+    scored = score_query_set(normed_corpus(spark, sf_dir)).select(
+        "q_id", "vec_id", (F.col("sim_e4") / 10000).alias("sim")
     )
     return top_k_per_query(scored)
 

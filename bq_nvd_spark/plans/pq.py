@@ -30,13 +30,13 @@ oracle) plus a ``recall_ok`` boolean that Spark computes from the PQ
 results and the oracle emits as literal TRUE — the driver hash therefore
 fails if ADC recall@10 ever drops below ``RECALL_MIN``.
 
-Scale shape: encode = one broadcast of K centroids against the corpus
-(×K fan-out, map-side-combined argmin agg); LUT build touches only the
-query set; scoring is a per-row projection over the codes relation; the
-top-k is a per-query window. The corpus is never cross-joined against
-itself and the float embeddings are read exactly twice (encode + the
-fidelity check's exact side — a production pipeline would drop the
-second).
+Scale shape: encode = one Arrow-kernel pass over the corpus against the
+broadcast K-centroid codebook; LUT build touches only the query set;
+scoring is a per-row projection over the codes relation; the top-k is a
+per-query window. The corpus is never cross-joined against itself, and
+the float embeddings are read once per session: the shared normed
+corpus feeds both the encode and the fidelity check's exact side. The
+codes and the exact scores are session memos.
 """
 
 from __future__ import annotations
@@ -45,42 +45,29 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from bq_nvd_spark.operators.checkpoint import stage_checkpoint
+from bq_nvd_spark.operators.checkpoint import shared_stage
 from bq_nvd_spark.operators.similarity import (
+    DUCK_NORMS_CTE,
+    DUCK_QUERY_SET_SCORED,
     DUCK_TOP_K_TAIL,
     PQ_M,
+    QUERY_MAX_ID,
     TOP_K,
-    duck_fold_dot,
-    fold_dot_np,
     make_pq_encoder,
+    normed_corpus,
+    score_query_set,
     subspace_dots_np,
     top_k_per_query,
 )
 from bq_nvd_spark.plans.registry import query
-from bq_nvd_spark.sources.tables import load_table
 
 K_CENTROIDS = 64
 SHORTLIST_MIN = 100  # ADC shortlist: max(SHORTLIST_MIN, corpus/10)
-_QUERY_MAX_ID = 5  # same query/corpus split as the other E3 queries
 RECALL_MIN = 0.5  # measured >= 0.6 per query at sf0.001/0.01/0.1
 
 _PQ_ORACLE = f"""
-    WITH e AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ),
-    n AS (
-      SELECT vec_id, v, SQRT({duck_fold_dot('v', 'v')}) AS nrm FROM e
-    ),
-    q AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn FROM n
-          WHERE vec_id < {_QUERY_MAX_ID}),
-    c AS (SELECT vec_id, v AS cv, nrm AS cn FROM n
-          WHERE vec_id >= {_QUERY_MAX_ID}),
-    scored AS (
-      SELECT q.q_id, c.vec_id,
-             FLOOR({duck_fold_dot('qv', 'cv')} / (qn * cn) * 10000 + 0.5)
-               / 10000 AS sim
-      FROM c CROSS JOIN q
-    )
+    WITH {DUCK_NORMS_CTE},
+    {DUCK_QUERY_SET_SCORED}
     SELECT q_id, vec_id, sim, TRUE AS recall_ok
     {DUCK_TOP_K_TAIL}
 """
@@ -96,20 +83,13 @@ def pq_adc_recall_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     index's retrieval quality the way the sketch queries bound estimator
     error.
     """
-    from bq_nvd_spark.plans.similarity_search import _ivf_norms
-
-    # Optimization round 17: the corpus relation is the E3-family
-    # shared (vec_id, v, nrm) — the embeddings scan + Arrow norm
-    # kernel run once per SESSION (shared with the IVF/SemDeDup/D4
-    # consumers), not once per pq invocation. The per-subspace
-    # self-dots (`aa`) moved inside the encode kernel below.
-    corpus = _ivf_norms(spark, sf_dir).filter(
-        F.col("vec_id") >= _QUERY_MAX_ID
-    )
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
-    queries = emb.filter(F.col("vec_id") < _QUERY_MAX_ID)
+    # The corpus and the query set are the E3-family shared
+    # (vec_id, v, nrm): the embeddings scan + Arrow norm kernel run
+    # once per SESSION (shared with the IVF/SemDeDup/D4 consumers), not
+    # once per pq invocation.
+    normed = normed_corpus(spark, sf_dir)
+    corpus = normed.filter(F.col("vec_id") >= QUERY_MAX_ID)
+    queries = normed.filter(F.col("vec_id") < QUERY_MAX_ID)
 
     # Codebook: K corpus subvector sets picked by md5(vec_id) — layout-
     # independent, no training reduction.
@@ -139,21 +119,27 @@ def pq_adc_recall_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # where the repo's documented bounded-collect sites belong, and its
     # pure encode math (pq_encode_codes, bit-identical to the crossJoin
     # formulation) is exercised directly by the code-parity test.
-    pq_encode_np = make_pq_encoder(spark, seeds)
+    #
+    # The codes relation is a session memo: the codebook collect and
+    # the encode pass run once per session, not per invocation.
+    def encode() -> DataFrame:
+        pq_encode_np = make_pq_encoder(spark, seeds)
+        # nrm rides along so the ADC scorer needs no join back to the
+        # corpus (one fewer exchange); the kernel runs ONCE per row
+        # (single projection), elements split in a follow-up narrow
+        # select.
+        return corpus.select(
+            "vec_id", "nrm", pq_encode_np("v").alias("codes")
+        ).select(
+            "vec_id",
+            "nrm",
+            *[
+                F.element_at("codes", m + 1).cast("int").alias(f"code_{m}")
+                for m in range(PQ_M)
+            ],
+        )
 
-    # nrm rides along so the ADC scorer needs no join back to the
-    # corpus (one fewer exchange); the kernel runs ONCE per row (single
-    # projection), elements split in a follow-up narrow select.
-    codes = corpus.select(
-        "vec_id", "nrm", pq_encode_np("v").alias("codes")
-    ).select(
-        "vec_id",
-        "nrm",
-        *[
-            F.element_at("codes", m + 1).cast("int").alias(f"code_{m}")
-            for m in range(PQ_M)
-        ],
-    )
+    codes = shared_stage(spark, ("pq_codes", sf_dir), encode)
 
     # Per-query ADC lookup tables: PQ_M arrays of K query·centroid dots,
     # cid-ordered (array_sort on unique cids — deterministic).
@@ -204,24 +190,14 @@ def pq_adc_recall_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # Exact side — the oracle-matched hash surface AND the refine stage's
-    # scoring relation (one fold pass serves both consumers).
-    q = queries.select(
-        F.col("vec_id").alias("q_id"),
-        F.col("v").alias("qv"),
-        F.sqrt(fold_dot_np("v", "v")).alias("qn"),
-    )
-    exact_scored = stage_checkpoint(
-        corpus.crossJoin(F.broadcast(q)).select(
-            "q_id",
-            "vec_id",
-            (
-                F.floor(
-                    fold_dot_np("qv", "v") / (F.col("qn") * F.col("nrm")) * 10000
-                    + 0.5
-                )
-                / 10000
-            ).alias("sim"),
-        )
+    # scoring relation (one fold pass, a session memo, serves both
+    # consumers).
+    exact_scored = shared_stage(
+        spark,
+        ("pq_exact_scored", sf_dir),
+        lambda: score_query_set(normed).select(
+            "q_id", "vec_id", (F.col("sim_e4") / 10000).alias("sim")
+        ),
     )
     exact_top = top_k_per_query(exact_scored)
 

@@ -25,9 +25,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bq_nvd_spark.operators.checkpoint import shared_stage
 from bq_nvd_spark.operators.similarity import (
+    DUCK_QUERY_SET_SCORED,
     DUCK_TOP_K_TAIL,
+    duck_fold_dot,
     fold_dot_np,
+    score_query_set,
     top_k_per_query,
 )
 from bq_nvd_spark.plans.registry import query
@@ -118,9 +122,6 @@ def embedding_int8_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_QUERY_MAX_ID = 5  # same query/corpus split as similarity_search.py
-
-
 @query(
     "quantized_cosine_topk",
     oracle=f"""
@@ -140,24 +141,13 @@ _QUERY_MAX_ID = 5  # same query/corpus split as similarity_search.py
       SELECT vec_id,
              list_transform(v, x -> q_min + CAST(FLOOR((x - q_min) / scale
                                                        + 0.5) AS BIGINT)
-                                            * scale) AS dv
+                                            * scale) AS v
       FROM s
     ),
     n AS (
-      SELECT vec_id, dv,
-             SQRT(list_reduce(list_prepend(0.0,
-               list_transform(range(1, len(dv) + 1), i -> dv[i] * dv[i])),
-               (a, x) -> a + x)) AS nrm
-      FROM dq
+      SELECT vec_id, v, SQRT({duck_fold_dot('v', 'v')}) AS nrm FROM dq
     ),
-    scored AS (
-      SELECT q.vec_id AS q_id, c.vec_id,
-             FLOOR(list_reduce(list_prepend(0.0,
-               list_transform(range(1, len(q.dv) + 1), i -> q.dv[i] * c.dv[i])),
-               (a, x) -> a + x) / (q.nrm * c.nrm) * 10000 + 0.5) / 10000 AS sim
-      FROM n q JOIN n c
-        ON q.vec_id < {_QUERY_MAX_ID} AND c.vec_id >= {_QUERY_MAX_ID}
-    )
+    {DUCK_QUERY_SET_SCORED}
     SELECT q_id, vec_id, sim
     {DUCK_TOP_K_TAIL}
     """,
@@ -165,57 +155,50 @@ _QUERY_MAX_ID = 5  # same query/corpus split as similarity_search.py
 def quantized_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k over DEQUANTIZED int8 vectors — the
     recall-fidelity twin of ``plans/llm.py::cosine_topk``. Same
-    broadcast-the-queries shape: the corpus never shuffles, each row
-    pays one fold per query, and the scale cost model is identical to
-    the exact version (the quantization is a per-row projection)."""
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .repartition(spark.sparkContext.defaultParallelism, "vec_id")
-        .select("vec_id", _v().alias("v"))
-    )
-    s = emb.select(
-        "vec_id",
-        "v",
-        F.array_min("v").alias("q_min"),
-        F.when(
-            F.array_max("v") > F.array_min("v"),
-            (F.array_max("v") - F.array_min("v")) / N_LEVELS,
-        )
-        .otherwise(F.lit(1.0))
-        .alias("scale"),
-    )
-    dq = s.select(
-        "vec_id",
-        F.transform(
-            "v",
-            lambda x: F.col("q_min")
-            + F.floor((x - F.col("q_min")) / F.col("scale") + 0.5).cast("long")
-            * F.col("scale"),
-        ).alias("dv"),
-    )
-    # Query and corpus sides both read the dequantized+normed relation;
-    # checkpoint it so the quantize→dequantize→norm chain (two Arrow
-    # kernel passes over every vector) runs once, not per consumer.
-    from bq_nvd_spark.operators.checkpoint import stage_checkpoint
-
-    n = stage_checkpoint(
-        dq.select("vec_id", "dv", F.sqrt(fold_dot_np("dv", "dv")).alias("nrm"))
-    )
-    q = n.filter(F.col("vec_id") < _QUERY_MAX_ID).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("dv").alias("qv"),
-        F.col("nrm").alias("qn"),
-    )
-    c = n.filter(F.col("vec_id") >= _QUERY_MAX_ID)
-    scored = c.crossJoin(F.broadcast(q)).select(
-        "q_id",
-        "vec_id",
-        (
-            F.floor(
-                fold_dot_np("qv", "dv") / (F.col("qn") * F.col("nrm")) * 10000
-                + 0.5
-            )
-            / 10000
-        ).alias("sim"),
+    broadcast-the-queries shape (``score_query_set``): the corpus never
+    shuffles, each row pays one fold per query, and the scale cost
+    model is identical to the exact version (the quantization is a
+    per-row projection)."""
+    scored = score_query_set(_sq8_normed(spark, sf_dir)).select(
+        "q_id", "vec_id", (F.col("sim_e4") / 10000).alias("sim")
     )
     return top_k_per_query(scored)
+
+
+def _sq8_normed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, v, nrm) over the DEQUANTIZED vectors. Query and corpus
+    sides both read it, so it is a session memo (``shared_stage``): the
+    quantize→dequantize→norm chain (two Arrow kernel passes over every
+    vector) runs once per session, not per consumer or invocation."""
+
+    def build() -> DataFrame:
+        emb = (
+            load_table(spark, sf_dir, "embeddings")
+            .repartition(spark.sparkContext.defaultParallelism, "vec_id")
+            .select("vec_id", _v().alias("v"))
+        )
+        s = emb.select(
+            "vec_id",
+            "v",
+            F.array_min("v").alias("q_min"),
+            F.when(
+                F.array_max("v") > F.array_min("v"),
+                (F.array_max("v") - F.array_min("v")) / N_LEVELS,
+            )
+            .otherwise(F.lit(1.0))
+            .alias("scale"),
+        )
+        dq = s.select(
+            "vec_id",
+            F.transform(
+                "v",
+                lambda x: F.col("q_min")
+                + F.floor((x - F.col("q_min")) / F.col("scale") + 0.5).cast("long")
+                * F.col("scale"),
+            ).alias("v"),
+        )
+        return dq.select(
+            "vec_id", "v", F.sqrt(fold_dot_np("v", "v")).alias("nrm")
+        )
+
+    return shared_stage(spark, ("sq8_normed", sf_dir), build)

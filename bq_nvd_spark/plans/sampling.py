@@ -828,7 +828,6 @@ def dsir_resample_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # an unpartitioned window over the |sources|-row census (the benign
 # aggregated-series case); membership selection composes with
 # mixture_resample_docs' md5-rank machinery.
-TEMP_ALPHA_NOTE = "alpha = 1/2 via IEEE-exact sqrt"
 
 
 @query(

@@ -5,7 +5,9 @@ O(N·Q)); here the same query/candidate split runs through the sign-LSH
 bucket join from ``operators/similarity.py``. The result is the exact
 cosine top-k *restricted to bucket-sharing candidates* — deterministic
 in both engines because the hyperplanes are fixed literals and every
-float reduction is a sequential fold.
+float reduction is a sequential fold. The query split, the cosine, the
+normed corpus and the query-set scorer come from the E3 vector kit in
+``operators/similarity.py``.
 """
 
 from __future__ import annotations
@@ -17,37 +19,27 @@ from pyspark.sql import functions as F
 
 from bq_nvd_spark.operators.graph import duck_near_dup_closure, near_dup_clusters
 from bq_nvd_spark.operators.similarity import (
+    DUCK_NORMS_CTE,
     DUCK_TOP_K_TAIL,
+    QUERY_MAX_ID,
     TOP_K,
     band_buckets_np,
+    cos_e4,
+    cosine,
     duck_band_buckets,
+    duck_cos_e4,
+    duck_cosine,
     duck_fold_dot,
     duck_refine_bucket_case,
     fold_dot,
-    fold_dot_np,
+    normed_corpus,
     refine_bucket_np,
+    score_query_set,
     sorted_pairs,
     top_k_per_query,
 )
 from bq_nvd_spark.plans.registry import query
 from bq_nvd_spark.sources.tables import load_table
-
-
-def _spread_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, v: array<double>) spread across cores. The norm and
-    re-rank folds are interpreted HOFs (never codegen), so a toy
-    single-file corpus would otherwise run them on one core; real
-    inputs arrive already partitioned and skip straight through."""
-    return (
-        load_table(spark, sf_dir, "embeddings")
-        .repartition(spark.sparkContext.defaultParallelism, "vec_id")
-        .select(
-            "vec_id",
-            F.transform("embedding", lambda x: x.cast("double")).alias("v"),
-        )
-    )
-
-_QUERY_MAX_ID = 5  # vec_id < 5 are the query set, the rest the corpus
 
 
 def _emb_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -61,7 +53,7 @@ def _emb_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bq_nvd_spark.operators.checkpoint import shared_stage
 
     def build() -> DataFrame:
-        return _ivf_norms(spark, sf_dir).select(
+        return normed_corpus(spark, sf_dir).select(
             "vec_id", "v", "nrm", band_buckets_np("v").alias("bands")
         )
 
@@ -91,17 +83,16 @@ _DUCK_LSH_BUCKETS_CTE = f"""e AS (
     oracle=f"""
     WITH {_DUCK_LSH_BUCKETS_CTE},
     q AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn, band_idx, bucket
-          FROM buckets WHERE vec_id < {_QUERY_MAX_ID}),
+          FROM buckets WHERE vec_id < {QUERY_MAX_ID}),
     c AS (SELECT vec_id, v AS cv, nrm AS cn, band_idx, bucket
-          FROM buckets WHERE vec_id >= {_QUERY_MAX_ID}),
+          FROM buckets WHERE vec_id >= {QUERY_MAX_ID}),
     cand AS (
       SELECT DISTINCT q.q_id, q.qv, q.qn, c.vec_id, c.cv, c.cn
       FROM q JOIN c ON q.band_idx = c.band_idx AND q.bucket = c.bucket
     ),
     scored AS (
       SELECT q_id, vec_id,
-             FLOOR({duck_fold_dot('qv', 'cv')} / (qn * cn) * 10000 + 0.5)
-               / 10000 AS sim
+             {duck_cos_e4('qv', 'cv', 'qn', 'cn')} / 10000 AS sim
       FROM cand
     )
     SELECT q_id, vec_id, sim
@@ -123,14 +114,14 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets = sig.select(
         "vec_id", "v", "nrm", F.posexplode("bands").alias("band_idx", "bucket")
     )
-    q = buckets.filter(F.col("vec_id") < _QUERY_MAX_ID).select(
+    q = buckets.filter(F.col("vec_id") < QUERY_MAX_ID).select(
         F.col("vec_id").alias("q_id"),
         F.col("v").alias("qv"),
         F.col("nrm").alias("qn"),
         "band_idx",
         "bucket",
     )
-    c = buckets.filter(F.col("vec_id") >= _QUERY_MAX_ID).select(
+    c = buckets.filter(F.col("vec_id") >= QUERY_MAX_ID).select(
         "vec_id",
         F.col("v").alias("cv"),
         F.col("nrm").alias("cn"),
@@ -147,13 +138,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             "vec_id",
-            (
-                F.floor(
-                    fold_dot_np("qv", "cv") / (F.col("qn") * F.col("cn")) * 10000
-                    + 0.5
-                )
-                / 10000
-            ).alias("sim"),
+            (cos_e4("qv", "cv", "qn", "cn") / 10000).alias("sim"),
         )
         .distinct()
     )
@@ -162,17 +147,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 IVF_CELLS = 16  # centroid count; cells ≈ corpus/16
 IVF_NPROBE = 4  # cells probed per query
-_CENT_MAX_ID = _QUERY_MAX_ID + IVF_CELLS
-
-
-#: The normalized embedding relation as oracle CTEs (``e`` raw,
-#: ``n`` = (vec_id, v, nrm)) — the oracle twin of ``_ivf_norms``.
-_DUCK_NORMS_CTE = f"""e AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-    ),
-    n AS MATERIALIZED (
-      SELECT vec_id, v, SQRT({duck_fold_dot('v', 'v')}) AS nrm FROM e
-    )"""
+_CENT_MAX_ID = QUERY_MAX_ID + IVF_CELLS
 
 
 #: the deterministic IVF coarse quantizer as oracle CTEs — ONE text,
@@ -184,17 +159,17 @@ _DUCK_NORMS_CTE = f"""e AS (
 #: this fixed quantizer and consumes the shared ``assign`` relation.
 _IVF_QUANTIZER_CTE = f"""cents AS (
       SELECT vec_id AS cent_id, v AS cv, nrm AS cnrm
-      FROM n WHERE vec_id >= {_QUERY_MAX_ID} AND vec_id < {_CENT_MAX_ID}
+      FROM n WHERE vec_id >= {QUERY_MAX_ID} AND vec_id < {_CENT_MAX_ID}
     ),
     assign AS (
       SELECT vec_id, v, nrm, cell FROM (
         SELECT a.vec_id, a.v, a.nrm, c.cent_id AS cell,
                ROW_NUMBER() OVER (
                  PARTITION BY a.vec_id
-                 ORDER BY {duck_fold_dot('a.v', 'c.cv')} / (a.nrm * c.cnrm) DESC,
+                 ORDER BY {duck_cosine('a.v', 'c.cv', 'a.nrm', 'c.cnrm')} DESC,
                           c.cent_id) AS rn
         FROM n a, cents c
-        WHERE a.vec_id >= {_QUERY_MAX_ID}
+        WHERE a.vec_id >= {QUERY_MAX_ID}
       ) WHERE rn = 1
     ),
     probes AS (
@@ -202,34 +177,12 @@ _IVF_QUANTIZER_CTE = f"""cents AS (
         SELECT q.vec_id AS q_id, q.v AS qv, q.nrm AS qn, c.cent_id AS cell,
                ROW_NUMBER() OVER (
                  PARTITION BY q.vec_id
-                 ORDER BY {duck_fold_dot('q.v', 'c.cv')} / (q.nrm * c.cnrm) DESC,
+                 ORDER BY {duck_cosine('q.v', 'c.cv', 'q.nrm', 'c.cnrm')} DESC,
                           c.cent_id) AS rn
         FROM n q, cents c
-        WHERE q.vec_id < {_QUERY_MAX_ID}
+        WHERE q.vec_id < {QUERY_MAX_ID}
       ) WHERE rn <= {IVF_NPROBE}
     )"""
-
-
-
-
-def _ivf_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, v, nrm) — the normalized embedding relation every IVF
-    consumer reads. Optimization round 17: ``shared_stage``-memoized
-    per (application, sf_dir). It was a per-query ``stage_checkpoint``
-    inside ``_ivf_assign_and_probes``, so each of the EIGHT registered
-    consumers re-paid the embeddings scan + repartition + Arrow norm
-    kernel every invocation; the registry releases per-query
-    checkpoints at each top-level entry, which is exactly the replay
-    ``shared_stage`` exists to cut (the dedup-chain precedent)."""
-    from bq_nvd_spark.operators.checkpoint import shared_stage
-
-    def build() -> DataFrame:
-        emb = _spread_embeddings(spark, sf_dir)
-        return emb.select(
-            "vec_id", "v", F.sqrt(fold_dot_np("v", "v")).alias("nrm")
-        )
-
-    return shared_stage(spark, ("ivf_norms", sf_dir), build)
 
 
 def _ivf_assign_and_probes(spark: SparkSession, sf_dir: str):
@@ -255,13 +208,13 @@ def _ivf_assign_and_probes(spark: SparkSession, sf_dir: str):
     """
     from bq_nvd_spark.operators.checkpoint import shared_stage
 
-    n = _ivf_norms(spark, sf_dir)
+    n = normed_corpus(spark, sf_dir)
     # One row: every centroid in an array sorted by cent_id
     # (collect_list order is nondeterministic; sort_array on the leading
     # struct field restores it — the argmax tie-break relies on it).
     cent_arr = (
         n.filter(
-            (F.col("vec_id") >= _QUERY_MAX_ID) & (F.col("vec_id") < _CENT_MAX_ID)
+            (F.col("vec_id") >= QUERY_MAX_ID) & (F.col("vec_id") < _CENT_MAX_ID)
         )
         .select(
             F.struct(
@@ -310,7 +263,7 @@ def _ivf_assign_and_probes(spark: SparkSession, sf_dir: str):
         spark,
         ("ivf_assign", sf_dir),
         lambda: (
-            n.filter(F.col("vec_id") >= _QUERY_MAX_ID)
+            n.filter(F.col("vec_id") >= QUERY_MAX_ID)
             .crossJoin(F.broadcast(cent_arr))
             .select("vec_id", "v", "nrm", best_cell.alias("cell"))
         ),
@@ -319,7 +272,7 @@ def _ivf_assign_and_probes(spark: SparkSession, sf_dir: str):
         spark,
         ("ivf_probes", sf_dir),
         lambda: (
-            n.filter(F.col("vec_id") < _QUERY_MAX_ID)
+            n.filter(F.col("vec_id") < QUERY_MAX_ID)
             .crossJoin(F.broadcast(cent_arr))
             .select(
                 F.col("vec_id").alias("q_id"),
@@ -336,12 +289,11 @@ def _ivf_assign_and_probes(spark: SparkSession, sf_dir: str):
 @query(
     "ivf_topk",
     oracle=f"""
-    WITH {_DUCK_NORMS_CTE},
+    WITH {DUCK_NORMS_CTE},
     {_IVF_QUANTIZER_CTE},
     scored AS (
       SELECT p.q_id, a.vec_id,
-             FLOOR({duck_fold_dot('p.qv', 'a.v')} / (p.qn * a.nrm) * 10000 + 0.5)
-               / 10000 AS sim
+             {duck_cos_e4('p.qv', 'a.v', 'p.qn', 'a.nrm')} / 10000 AS sim
       FROM probes p JOIN assign a ON a.cell = p.cell
     )
     SELECT q_id, vec_id, sim
@@ -370,13 +322,7 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = assign.join(F.broadcast(probes), "cell").select(
         "q_id",
         "vec_id",
-        (
-            F.floor(
-                fold_dot_np("qv", "v") / (F.col("qn") * F.col("nrm")) * 10000
-                + 0.5
-            )
-            / 10000
-        ).alias("sim"),
+        (cos_e4("qv", "v", "qn", "nrm") / 10000).alias("sim"),
     )
     return top_k_per_query(scored)
 
@@ -575,8 +521,7 @@ def _duck_emb_pairs_cte() -> str:
     ),
     pairs AS (
       SELECT DISTINCT id_a, id_b,
-             FLOOR({duck_fold_dot('va', 'vb')} / (na * nb) * 10000 + 0.5)
-               / 10000 AS sim
+             {duck_cos_e4('va', 'vb', 'na', 'nb')} / 10000 AS sim
       FROM cand
     )"""
 
@@ -641,13 +586,7 @@ def _embedding_similar_pairs_build(
     return cand.select(
         "id_a",
         "id_b",
-        (
-            F.floor(
-                fold_dot_np("va", "vb") / (F.col("na") * F.col("nb")) * 10000
-                + 0.5
-            )
-            / 10000
-        ).alias("sim"),
+        (cos_e4("va", "vb", "na", "nb") / 10000).alias("sim"),
     ).filter(F.col("sim") >= SIMILAR_COS)
 
 
@@ -707,20 +646,20 @@ _SCORE_SCALE = 1_000_000_000_000  # cos → integer at 1e-12 — exact int sums
 @query(
     "ivf_refined_topk",
     oracle=f"""
-    WITH {_DUCK_NORMS_CTE},
+    WITH {DUCK_NORMS_CTE},
     cents AS (
       SELECT vec_id AS cent_id, v AS cv, nrm AS cnrm
-      FROM n WHERE vec_id >= {_QUERY_MAX_ID} AND vec_id < {_CENT_MAX_ID}
+      FROM n WHERE vec_id >= {QUERY_MAX_ID} AND vec_id < {_CENT_MAX_ID}
     ),
     assign AS MATERIALIZED (
       SELECT vec_id, v, nrm, cell FROM (
         SELECT a.vec_id, a.v, a.nrm, c.cent_id AS cell,
                ROW_NUMBER() OVER (
                  PARTITION BY a.vec_id
-                 ORDER BY {duck_fold_dot('a.v', 'c.cv')} / (a.nrm * c.cnrm) DESC,
+                 ORDER BY {duck_cosine('a.v', 'c.cv', 'a.nrm', 'c.cnrm')} DESC,
                           c.cent_id) AS rn
         FROM n a, cents c
-        WHERE a.vec_id >= {_QUERY_MAX_ID}
+        WHERE a.vec_id >= {QUERY_MAX_ID}
       ) WHERE rn = 1
     ),
     anchors AS (
@@ -732,7 +671,7 @@ _SCORE_SCALE = 1_000_000_000_000  # cos → integer at 1e-12 — exact int sums
     ),
     member_scores AS (
       SELECT m.cell, m.vec_id,
-             SUM(CAST(FLOOR({duck_fold_dot('m.v', 'a.av')} / (m.nrm * a.anrm)
+             SUM(CAST(FLOOR({duck_cosine('m.v', 'a.av', 'm.nrm', 'a.anrm')}
                             * {_SCORE_SCALE} + 0.5) AS BIGINT)) AS score
       FROM assign m JOIN anchors a ON a.cell = m.cell
       GROUP BY m.cell, m.vec_id
@@ -754,10 +693,10 @@ _SCORE_SCALE = 1_000_000_000_000  # cos → integer at 1e-12 — exact int sums
         SELECT a.vec_id, a.v, a.nrm, r.rep_id AS rcell,
                ROW_NUMBER() OVER (
                  PARTITION BY a.vec_id
-                 ORDER BY {duck_fold_dot('a.v', 'r.rv')} / (a.nrm * r.rnrm) DESC,
+                 ORDER BY {duck_cosine('a.v', 'r.rv', 'a.nrm', 'r.rnrm')} DESC,
                           r.rep_id) AS rn
         FROM n a, rcents r
-        WHERE a.vec_id >= {_QUERY_MAX_ID}
+        WHERE a.vec_id >= {QUERY_MAX_ID}
       ) WHERE rn = 1
     ),
     probes AS (
@@ -765,16 +704,15 @@ _SCORE_SCALE = 1_000_000_000_000  # cos → integer at 1e-12 — exact int sums
         SELECT q.vec_id AS q_id, q.v AS qv, q.nrm AS qn, r.rep_id AS rcell,
                ROW_NUMBER() OVER (
                  PARTITION BY q.vec_id
-                 ORDER BY {duck_fold_dot('q.v', 'r.rv')} / (q.nrm * r.rnrm) DESC,
+                 ORDER BY {duck_cosine('q.v', 'r.rv', 'q.nrm', 'r.rnrm')} DESC,
                           r.rep_id) AS rn
         FROM n q, rcents r
-        WHERE q.vec_id < {_QUERY_MAX_ID}
+        WHERE q.vec_id < {QUERY_MAX_ID}
       ) WHERE rn <= {IVF_NPROBE}
     ),
     scored AS (
       SELECT p.q_id, a.vec_id,
-             FLOOR({duck_fold_dot('p.qv', 'a.v')} / (p.qn * a.nrm) * 10000 + 0.5)
-               / 10000 AS sim
+             {duck_cos_e4('p.qv', 'a.v', 'p.qn', 'a.nrm')} / 10000 AS sim
       FROM probes p JOIN reassign a ON a.rcell = p.rcell
     )
     SELECT q_id, vec_id, sim
@@ -801,17 +739,15 @@ def ivf_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    from bq_nvd_spark.operators.checkpoint import stage_checkpoint
+    from bq_nvd_spark.operators.checkpoint import shared_stage
 
     # The normalized corpus feeds FIVE consumers (seed centroids, coarse
     # assign, refined-centroid lookup, re-assign, query probes); without
     # materialization each one replays the scan + norm kernel and the
-    # whole plan balloons to 34 shuffles / 26 broadcasts. Optimization
-    # round 17: the materialized relation is the E3-shared _ivf_norms
-    # (session-memoized) instead of a per-query checkpoint; values are
-    # untouched.
-    n = _ivf_norms(spark, sf_dir)
-    corpus = n.filter(F.col("vec_id") >= _QUERY_MAX_ID)
+    # whole plan balloons to 34 shuffles / 26 broadcasts. It is the
+    # E3-shared normed_corpus (session-memoized).
+    n = normed_corpus(spark, sf_dir)
+    corpus = n.filter(F.col("vec_id") >= QUERY_MAX_ID)
 
     def argmax_cell(arr_col: str, id_field: str, vec_field: str, nrm_field: str):
         def cos(c):
@@ -882,11 +818,13 @@ def ivf_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("vec_id").alias("rep_id"))
     )
 
-    # Refined centroids → ONE broadcast row, checkpointed: both the
+    # Refined centroids → ONE broadcast row, a session memo: both the
     # re-assign and the query-probe sides consume it, and its upstream
     # (member scoring + per-cell window) is the plan's deepest branch.
-    rcent_arr = stage_checkpoint(
-        reps.join(n, reps.rep_id == n.vec_id)
+    rcent_arr = shared_stage(
+        spark,
+        ("ivf_refined_cents", sf_dir),
+        lambda: reps.join(n, reps.rep_id == n.vec_id)
         .select(
             F.struct(
                 F.col("rep_id").alias("cent_id"),
@@ -894,7 +832,7 @@ def ivf_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("nrm").alias("cnrm"),
             ).alias("c")
         )
-        .agg(F.sort_array(F.collect_list("c")).alias("rcents"))
+        .agg(F.sort_array(F.collect_list("c")).alias("rcents")),
     )
 
     def rcent_cos(c):
@@ -919,7 +857,7 @@ def ivf_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         argmax_cell("rcents", "cent_id", "cv", "cnrm").alias("rcell"),
     )
     probes = (
-        n.filter(F.col("vec_id") < _QUERY_MAX_ID)
+        n.filter(F.col("vec_id") < QUERY_MAX_ID)
         .crossJoin(F.broadcast(rcent_arr))
         .select(
             F.col("vec_id").alias("q_id"),
@@ -932,13 +870,7 @@ def ivf_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = reassign.join(F.broadcast(probes), "rcell").select(
         "q_id",
         "vec_id",
-        (
-            F.floor(
-                fold_dot_np("qv", "v") / (F.col("qn") * F.col("nrm")) * 10000
-                + 0.5
-            )
-            / 10000
-        ).alias("sim"),
+        (cos_e4("qv", "v", "qn", "nrm") / 10000).alias("sim"),
     )
     return top_k_per_query(scored)
 
@@ -1112,16 +1044,15 @@ MMR_LAM_DEN = 10
 #: unrolled greedy blocks are shared verbatim.
 _MMR_BRUTE_REL = f"""q AS (
       SELECT vec_id AS q_id, v AS qv, nrm AS qn FROM n
-      WHERE vec_id < {_QUERY_MAX_ID}
+      WHERE vec_id < {QUERY_MAX_ID}
     ),
     c AS (
       SELECT vec_id, v AS cv, nrm AS cn FROM n
-      WHERE vec_id >= {_QUERY_MAX_ID}
+      WHERE vec_id >= {QUERY_MAX_ID}
     ),
     rel AS (
       SELECT q.q_id, c.vec_id, c.cv, c.cn,
-             CAST(FLOOR({duck_fold_dot('qv', 'cv')} / (qn * cn) * 10000
-                        + 0.5) AS BIGINT) AS rel_e4
+             CAST({duck_cos_e4('qv', 'cv', 'qn', 'cn')} AS BIGINT) AS rel_e4
       FROM c CROSS JOIN q
     )"""
 
@@ -1133,8 +1064,7 @@ _MMR_BRUTE_REL = f"""q AS (
 _MMR_IVF_REL = f"""{_IVF_QUANTIZER_CTE},
     rel AS (
       SELECT p.q_id, a.vec_id, a.v AS cv, a.nrm AS cn,
-             CAST(FLOOR({duck_fold_dot('p.qv', 'a.v')} / (p.qn * a.nrm)
-                        * 10000 + 0.5) AS BIGINT) AS rel_e4
+             CAST({duck_cos_e4('p.qv', 'a.v', 'p.qn', 'a.nrm')} AS BIGINT) AS rel_e4
       FROM probes p JOIN assign a ON a.cell = p.cell
     )"""
 
@@ -1201,8 +1131,7 @@ def _mmr_oracle(rel_cte: str = _MMR_BRUTE_REL) -> str:
     ),
     pairs AS MATERIALIZED (
       SELECT a.q_id, a.vec_id AS vid_a, b.vec_id AS vid_b,
-             CAST(FLOOR({duck_fold_dot('a.cv', 'b.cv')} / (a.cn * b.cn)
-                        * 10000 + 0.5) AS BIGINT) AS sim_e4
+             CAST({duck_cos_e4('a.cv', 'b.cv', 'a.cn', 'b.cn')} AS BIGINT) AS sim_e4
       FROM pool a
       JOIN pool b ON b.q_id = a.q_id AND b.vec_id <> a.vec_id
     ),"""
@@ -1217,51 +1146,43 @@ def _mmr_oracle(rel_cte: str = _MMR_BRUTE_REL) -> str:
 def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy MMR re-rank of the per-query top-MMR_POOL relevance pool
     (see the section note for the exactness and scale contracts)."""
-    from pyspark.sql.window import Window
+    from bq_nvd_spark.operators.checkpoint import shared_stage
 
-    from bq_nvd_spark.operators.checkpoint import stage_checkpoint
-
-    normed = _ivf_norms(spark, sf_dir)
-    q = normed.filter(F.col("vec_id") < _QUERY_MAX_ID).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-    )
-    c = normed.filter(F.col("vec_id") >= _QUERY_MAX_ID).select(
-        "vec_id", F.col("v").alias("cv"), F.col("nrm").alias("cn")
-    )
-    rel = c.crossJoin(F.broadcast(q)).select(
+    rel = score_query_set(normed_corpus(spark, sf_dir), "v", "nrm").select(
         "q_id",
         "vec_id",
-        "cv",
-        "cn",
-        F.floor(
-            fold_dot_np("qv", "cv") / (F.col("qn") * F.col("cn")) * 10000
-            + 0.5
-        )
-        .cast("long")
-        .alias("rel_e4"),
+        F.col("v").alias("cv"),
+        F.col("nrm").alias("cn"),
+        F.col("sim_e4").cast("long").alias("rel_e4"),
     )
+    # The ONE corpus-sized pass ends here: the pool (with vectors,
+    # queries x MMR_POOL rows) is a session memo, so the greedy loop's
+    # K consumers and the pairwise-sim relation read a materialized
+    # limit-bounded relation instead of replaying the scan.
+    # Materialize at the window's natural width, THEN coalesce the
+    # <= queries x MMR_POOL rows to one partition for the tiny
+    # downstream stages. coalesce is narrow — placing it INSIDE the
+    # memo build would collapse the corpus-sized top-pool Sort+Window
+    # stage into a single task (the un-partitioned-window trap),
+    # because coalesce propagates up to the previous shuffle boundary.
+    pool = shared_stage(spark, ("mmr_pool", sf_dir), lambda: _mmr_pool(rel))
+    return _mmr_greedy_from_pool(pool.coalesce(1))
+
+
+def _mmr_pool(rel: DataFrame) -> DataFrame:
+    """The per-query top-MMR_POOL of a (q_id, vec_id, cv, cn, rel_e4)
+    relevance relation, (rel_e4 DESC, vec_id ASC) — the pool both MMR
+    variants memoize."""
+    from pyspark.sql.window import Window
+
     wpool = Window.partitionBy("q_id").orderBy(
         F.desc("rel_e4"), F.asc("vec_id")
     )
-    # The ONE corpus-sized pass ends here: checkpoint the pool (with
-    # vectors, queries x MMR_POOL rows) so the greedy loop's K
-    # consumers and the pairwise-sim relation read a materialized
-    # limit-bounded relation instead of replaying the scan.
-    # Checkpoint at the window's natural width, THEN coalesce the
-    # materialized <= queries x MMR_POOL rows to one partition for the
-    # tiny downstream stages. coalesce is narrow — placing it INSIDE
-    # the checkpoint build would collapse the corpus-sized top-pool
-    # Sort+Window stage into a single task (the un-partitioned-window
-    # trap), because coalesce propagates up to the previous shuffle
-    # boundary.
-    pool = stage_checkpoint(
-        rel.withColumn("prn", F.row_number().over(wpool)).filter(
-            F.col("prn") <= MMR_POOL
-        )
-    ).coalesce(1)
-    return _mmr_greedy_from_pool(pool)
+    return (
+        rel.withColumn("prn", F.row_number().over(wpool))
+        .filter(F.col("prn") <= MMR_POOL)
+        .select("q_id", "vec_id", "cv", "cn", "rel_e4")
+    )
 
 
 def _mmr_greedy_from_pool(pool: DataFrame) -> DataFrame:
@@ -1290,13 +1211,7 @@ def _mmr_greedy_from_pool(pool: DataFrame) -> DataFrame:
             "q_id",
             "vid_a",
             "vid_b",
-            F.floor(
-                fold_dot_np("va", "vb") / (F.col("na") * F.col("nb"))
-                * 10000
-                + 0.5
-            )
-            .cast("long")
-            .alias("sim_e4"),
+            cos_e4("va", "vb", "na", "nb").cast("long").alias("sim_e4"),
         )
     )
     # The greedy trace is irreducibly sequential (pick i needs picks
@@ -1380,9 +1295,7 @@ def _mmr_greedy_from_pool(pool: DataFrame) -> DataFrame:
 def mmr_ann_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy MMR re-rank over the IVF-shortlisted relevance pool (see
     the section note; pool semantics match ivf_topk's candidate set)."""
-    from pyspark.sql.window import Window
-
-    from bq_nvd_spark.operators.checkpoint import stage_checkpoint
+    from bq_nvd_spark.operators.checkpoint import shared_stage
 
     assign, probes = _ivf_assign_and_probes(spark, sf_dir)
     rel = assign.join(F.broadcast(probes), "cell").select(
@@ -1390,29 +1303,15 @@ def mmr_ann_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.col("v").alias("cv"),
         F.col("nrm").alias("cn"),
-        F.floor(
-            fold_dot_np("qv", "v") / (F.col("qn") * F.col("nrm")) * 10000
-            + 0.5
-        )
-        .cast("long")
-        .alias("rel_e4"),
+        cos_e4("qv", "v", "qn", "nrm").cast("long").alias("rel_e4"),
     )
-    wpool = Window.partitionBy("q_id").orderBy(
-        F.desc("rel_e4"), F.asc("vec_id")
-    )
-    # Same checkpoint-then-coalesce discipline as the brute variant:
+    # Same memo-then-coalesce discipline as the brute variant:
     # materialize at the shortlist's natural width, then collapse the
     # <= queries x MMR_POOL rows for the tiny downstream stages.
-    pool = (
-        stage_checkpoint(
-            rel.withColumn("prn", F.row_number().over(wpool)).filter(
-                F.col("prn") <= MMR_POOL
-            )
-        )
-        .coalesce(1)
-        .select("q_id", "vec_id", "cv", "cn", "rel_e4")
+    pool = shared_stage(
+        spark, ("mmr_ann_pool", sf_dir), lambda: _mmr_pool(rel)
     )
-    return _mmr_greedy_from_pool(pool)
+    return _mmr_greedy_from_pool(pool.coalesce(1))
 
 # --------------------------------------------------------------------------
 # E3 (round 15): HARD-NEGATIVE MINING for contrastive training — for
@@ -1457,8 +1356,8 @@ HN_M = 1 << 44  # argmin encoder: key = (10000-sim_e4)*HN_M + vec_id
     ),
     keyed AS (
       SELECT a.vec_id, a.label,
-             MIN((10000 - CAST(FLOOR({duck_fold_dot('a.v', 'b.v')}
-                               / (a.nrm * b.nrm) * 10000 + 0.5) AS BIGINT))
+             MIN((10000 - CAST({duck_cos_e4('a.v', 'b.v', 'a.nrm', 'b.nrm')}
+                               AS BIGINT))
                  * {HN_M} + b.vec_id) AS key
       FROM la a JOIN la b
         ON b.cell = a.cell AND b.label <> a.label
@@ -1493,12 +1392,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nrm").alias("bn"),
         "cell",
     )
-    sim_e4 = (
-        F.floor(
-            fold_dot_np("av", "bv") / (F.col("an") * F.col("bn")) * 10000
-            + 0.5
-        )
-    ).cast("long")
+    sim_e4 = cos_e4("av", "bv", "an", "bn").cast("long")
     keyed = (
         a.join(b, "cell")
         .filter(F.col("b_label") != F.col("a_label"))
@@ -1559,8 +1453,7 @@ _SEMDEDUP_PAIRS_CTE = f"""n AS MATERIALIZED (
     {_IVF_QUANTIZER_CTE},
     sd_pairs AS (
       SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-             CAST(FLOOR({duck_fold_dot('a.v', 'b.v')} / (a.nrm * b.nrm)
-                        * 10000 + 0.5) AS BIGINT) AS sim_e4
+             CAST({duck_cos_e4('a.v', 'b.v', 'a.nrm', 'b.nrm')} AS BIGINT) AS sim_e4
       FROM assign a JOIN assign b
         ON b.cell = a.cell AND b.vec_id > a.vec_id
     ),
@@ -1590,10 +1483,7 @@ def _semdedup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("nrm").alias("bn"),
             "cell",
         )
-        sim_e4 = F.floor(
-            fold_dot_np("av", "bv") / (F.col("an") * F.col("bn")) * 10000
-            + 0.5
-        ).cast("long")
+        sim_e4 = cos_e4("av", "bv", "an", "bn").cast("long")
         return (
             a.join(b, "cell")
             .filter(F.col("id_b") > F.col("id_a"))
@@ -1651,19 +1541,19 @@ def semdedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT vec_id, CAST(label AS BIGINT) AS label
     FROM embeddings
-    WHERE vec_id >= {_QUERY_MAX_ID}
+    WHERE vec_id >= {QUERY_MAX_ID}
       AND vec_id NOT IN (SELECT id FROM dropped)
     """,
 )
 def semdedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SemDeDup'd corpus: every indexed vector survives except
     non-minimum members of within-cell cosine clusters. The spine is
-    the IVF-indexed corpus (vec_id >= _QUERY_MAX_ID) — query vectors
+    the IVF-indexed corpus (vec_id >= QUERY_MAX_ID) — query vectors
     are retrieval probes, not dedup candidates."""
     dropped = _semdedup_dropped(spark, sf_dir)
     emb = (
         load_table(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") >= _QUERY_MAX_ID)
+        .filter(F.col("vec_id") >= QUERY_MAX_ID)
         .select("vec_id", F.col("label").cast("long").alias("label"))
     )
     # No forced broadcast: the dropped set is corpus-proportional on a
@@ -1686,7 +1576,7 @@ def semdedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ivf_cell_census",
     oracle=f"""
-    WITH {_DUCK_NORMS_CTE},
+    WITH {DUCK_NORMS_CTE},
     {_IVF_QUANTIZER_CTE}
     SELECT cell,
            CAST(COUNT(*) AS BIGINT) AS n_vecs,
@@ -1751,12 +1641,7 @@ def proto_rank_kernel(assign: DataFrame, cents: DataFrame) -> DataFrame:
     ).select(
         "vec_id",
         "cell",
-        F.floor(
-            fold_dot_np("v", "cv") / (F.col("nrm") * F.col("cnrm")) * 10000
-            + 0.5
-        )
-        .cast("long")
-        .alias("cos_cent_e4"),
+        cos_e4("v", "cv", "nrm", "cnrm").cast("long").alias("cos_cent_e4"),
     )
     w_rank = Window.partitionBy("cell").orderBy(
         F.desc("cos_cent_e4"), F.asc("vec_id")
@@ -1783,13 +1668,13 @@ def _centroid_rel(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins against centroids relationally (the D4 rank, the nprobe
     sweep's probe-rank re-derivation, the composed pipeline).
 
-    Optimization round 17: sliced from the shared ``_ivf_norms``
+    Optimization round 17: sliced from the shared ``normed_corpus``
     relation instead of re-running the embeddings scan + Arrow norm
     kernel per consumer — same rows, same kernel, same values."""
     return (
-        _ivf_norms(spark, sf_dir)
+        normed_corpus(spark, sf_dir)
         .filter(
-            (F.col("vec_id") >= _QUERY_MAX_ID)
+            (F.col("vec_id") >= QUERY_MAX_ID)
             & (F.col("vec_id") < _CENT_MAX_ID)
         )
         .select(
@@ -1821,8 +1706,8 @@ def _proto_ranked_body(src_rel: str) -> str:
     assignment; one text, no drift."""
     return f"""ac AS (
       SELECT a.vec_id, a.cell,
-             CAST(FLOOR({duck_fold_dot('a.v', 'c.cv')} / (a.nrm * c.cnrm)
-                        * 10000 + 0.5) AS BIGINT) AS cos_cent_e4
+             CAST({duck_cos_e4('a.v', 'c.cv', 'a.nrm', 'c.cnrm')} AS BIGINT)
+               AS cos_cent_e4
       FROM {src_rel} a JOIN cents c ON c.cent_id = a.cell
     ),
     ranked AS (
@@ -1905,10 +1790,9 @@ def proto_pruning_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: oracles.
 _BRUTE_TOP_CTES = f"""bscored AS (
       SELECT q.vec_id AS q_id, c.vec_id,
-             FLOOR({duck_fold_dot('q.v', 'c.v')} / (q.nrm * c.nrm)
-                   * 10000 + 0.5) AS sim_e4
+             {duck_cos_e4('q.v', 'c.v', 'q.nrm', 'c.nrm')} AS sim_e4
       FROM n q JOIN n c
-        ON q.vec_id < {_QUERY_MAX_ID} AND c.vec_id >= {_QUERY_MAX_ID}
+        ON q.vec_id < {QUERY_MAX_ID} AND c.vec_id >= {QUERY_MAX_ID}
     ),
     btop AS (
       SELECT q_id, vec_id FROM (
@@ -1935,7 +1819,7 @@ _BRUTE_TOP_CTES = f"""bscored AS (
 # ground-truth sets are deterministic in both engines and the census
 # is pure integer counts. Scale shape: the retrieved side IS
 # ivf_topk's plan; the ground-truth side is one broadcast of the
-# ≤_QUERY_MAX_ID-row query set against the corpus (the cosine_topk
+# ≤QUERY_MAX_ID-row query set against the corpus (the cosine_topk
 # shape — exactly the full scan the index avoids, paid here because
 # measuring recall REQUIRES the exact answer; a production deployment
 # runs this census on a sampled query set, which is what the bounded
@@ -1943,12 +1827,11 @@ _BRUTE_TOP_CTES = f"""bscored AS (
 @query(
     "ivf_recall_census",
     oracle=f"""
-    WITH {_DUCK_NORMS_CTE},
+    WITH {DUCK_NORMS_CTE},
     {_IVF_QUANTIZER_CTE},
     iscored AS (
       SELECT p.q_id, a.vec_id,
-             FLOOR({duck_fold_dot('p.qv', 'a.v')} / (p.qn * a.nrm)
-                   * 10000 + 0.5) AS sim_e4
+             {duck_cos_e4('p.qv', 'a.v', 'p.qn', 'a.nrm')} AS sim_e4
       FROM probes p JOIN assign a ON a.cell = p.cell
     ),
     itop AS (
@@ -1995,23 +1878,12 @@ def _brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         from pyspark.sql.window import Window
 
-        n = _ivf_norms(spark, sf_dir)
-        q = n.filter(F.col("vec_id") < _QUERY_MAX_ID).select(
-            F.col("vec_id").alias("q_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qn"),
-        )
-        c = n.filter(F.col("vec_id") >= _QUERY_MAX_ID)
-        sim_e4 = F.floor(
-            fold_dot_np("qv", "v") / (F.col("qn") * F.col("nrm")) * 10000
-            + 0.5
-        ).cast("long")
         w = Window.partitionBy("q_id").orderBy(
             F.desc("sim_e4"), F.asc("vec_id")
         )
         return (
-            c.crossJoin(F.broadcast(q))
-            .select("q_id", "vec_id", sim_e4.alias("sim_e4"))
+            score_query_set(normed_corpus(spark, sf_dir))
+            .select("q_id", "vec_id", F.col("sim_e4").cast("long").alias("sim_e4"))
             .select("q_id", "vec_id", F.row_number().over(w).alias("rn"))
             .filter(F.col("rn") <= TOP_K)
             .select("q_id", "vec_id", F.lit(1).alias("hit"))
@@ -2051,21 +1923,20 @@ def _brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "ivf_nprobe_sweep",
     oracle=f"""
-    WITH {_DUCK_NORMS_CTE},
+    WITH {DUCK_NORMS_CTE},
     {_IVF_QUANTIZER_CTE},
     pr AS (
       SELECT p.q_id, p.qv, p.qn, p.cell,
              ROW_NUMBER() OVER (
                PARTITION BY p.q_id
-               ORDER BY {duck_fold_dot('p.qv', 'c.cv')} / (p.qn * c.cnrm)
+               ORDER BY {duck_cosine('p.qv', 'c.cv', 'p.qn', 'c.cnrm')}
                         DESC, p.cell) AS prank
       FROM probes p JOIN cents c ON c.cent_id = p.cell
     ),
     sweep AS (SELECT UNNEST(range(1, {IVF_NPROBE + 1})) AS nprobe),
     cand AS (
       SELECT s.nprobe, pr.q_id, a.vec_id,
-             FLOOR({duck_fold_dot('pr.qv', 'a.v')} / (pr.qn * a.nrm)
-                   * 10000 + 0.5) AS sim_e4
+             {duck_cos_e4('pr.qv', 'a.v', 'pr.qn', 'a.nrm')} AS sim_e4
       FROM pr JOIN assign a ON a.cell = pr.cell
       JOIN sweep s ON pr.prank <= s.nprobe
     ),
@@ -2097,9 +1968,7 @@ def ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     assign, probes = _ivf_assign_and_probes(spark, sf_dir)
     cents = _centroid_rel(spark, sf_dir)
     w_rank = Window.partitionBy("q_id").orderBy(
-        F.desc(
-            fold_dot_np("qv", "cv") / (F.col("qn") * F.col("cnrm"))
-        ),
+        F.desc(cosine("qv", "cv", "qn", "cnrm")),
         F.asc("cell"),
     )
     pr = (
@@ -2128,11 +1997,7 @@ def ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         "q_id",
         "vec_id",
         "prank",
-        F.floor(
-            fold_dot_np("qv", "av") / (F.col("qn") * F.col("an"))
-            * 10000
-            + 0.5
-        ).cast("long").alias("sim_e4"),
+        cos_e4("qv", "av", "qn", "an").cast("long").alias("sim_e4"),
     )
     cand = pair_scored.join(
         F.broadcast(sweep), F.col("prank") <= F.col("nprobe")

@@ -1,6 +1,6 @@
 """The measurement and audit scripts: the registry profiler runs end to
-end, every script measures through perfbench's tracer, and no source
-hard-codes the checkout's location."""
+end, the broadcast audit passes, every script measures through
+perfbench's tracer, and no source hard-codes the checkout's location."""
 
 from __future__ import annotations
 
@@ -45,6 +45,16 @@ def test_profile_registry_runs_cold_and_warm():
         for kind, rec in runs.items():
             assert "error" not in rec, (name, kind, rec.get("error"))
             assert rec["plans.exec_jobs"] > 0, (name, kind)
+
+
+def test_broadcast_audit_passes():
+    """Every ``F.broadcast`` hint in the package is classified as
+    structurally bounded (``scripts/broadcast_audit.py`` exits 0)."""
+    out = subprocess.run(
+        [sys.executable, os.path.join(ROOT, "scripts", "broadcast_audit.py")],
+        cwd=ROOT, capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
 
 
 def test_scripts_measure_only_through_the_tracer():

@@ -10,6 +10,7 @@ assumption the fast path documents.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from bq_nvd_spark.operators.similarity import band_buckets, band_buckets_np
@@ -356,9 +357,9 @@ def test_mmr_diversifies_past_a_duplicate_and_handles_short_pools(
     max_sim = {}
     for r in cos:
         max_sim[r.q_id] = max(max_sim.get(r.q_id, r.sim), r.sim)
-    # containment, not equality: cosine_topk rounds with ROUND(.,4)
-    # while mmr floor-quantizes, and top-sim ties are legal — rank 1
-    # must sit IN the relevance-argmax tie set, chosen deterministically
+    # containment, not equality: top-sim ties are legal (both queries
+    # floor the cosine to e4 units) — rank 1 must sit IN the
+    # relevance-argmax tie set, chosen deterministically
     top_set = {
         q: {r.vec_id for r in cos if r.q_id == q and r.sim == m}
         for q, m in max_sim.items()
@@ -511,11 +512,9 @@ def test_hard_negative_mining_geometry_and_python_reference(spark, sf_dir):
     # Fixture invariants cross-checked against a Python brute-force
     # restricted to IVF cells: mined negatives must carry a different
     # label and be the exact within-cell argmax (sim DESC, vec_id ASC).
+    from bq_nvd_spark.operators.similarity import QUERY_MAX_ID
     from bq_nvd_spark.plans import QUERIES
-    from bq_nvd_spark.plans.similarity_search import (
-        _CENT_MAX_ID,
-        _QUERY_MAX_ID,
-    )
+    from bq_nvd_spark.plans.similarity_search import _CENT_MAX_ID
 
     rows = (
         load_table(spark, sf_dir, "embeddings")
@@ -531,7 +530,7 @@ def test_hard_negative_mining_geometry_and_python_reference(spark, sf_dir):
         nb = math.sqrt(sum(x * x for x in b))
         return math.floor(d / (na * nb) * 10000 + 0.5)
 
-    cents = {i: vecs[i][0] for i in vecs if _QUERY_MAX_ID <= i < _CENT_MAX_ID}
+    cents = {i: vecs[i][0] for i in vecs if QUERY_MAX_ID <= i < _CENT_MAX_ID}
 
     def cell_of(v):
         best = None
@@ -546,11 +545,11 @@ def test_hard_negative_mining_geometry_and_python_reference(spark, sf_dir):
         return best[1]
 
     cells = {
-        i: cell_of(v) for i, (v, _) in vecs.items() if i >= _QUERY_MAX_ID
+        i: cell_of(v) for i, (v, _) in vecs.items() if i >= QUERY_MAX_ID
     }
     want = {}
     for i, (v, lab) in vecs.items():
-        if i < _QUERY_MAX_ID:
+        if i < QUERY_MAX_ID:
             continue
         cands = [
             (cos_e4(v, vecs[j][0]), j)
@@ -577,10 +576,8 @@ def test_semdedup_collapses_near_identical_within_cell(spark, tmp_path):
     # the distant 23 and every centroid survive untouched.
     from bq_nvd_spark.operators.checkpoint import release_shared_stages
     from bq_nvd_spark.plans import QUERIES
-    from bq_nvd_spark.plans.similarity_search import (
-        _QUERY_MAX_ID,
-        SEMDEDUP_TAU_E4,
-    )
+    from bq_nvd_spark.operators.similarity import QUERY_MAX_ID
+    from bq_nvd_spark.plans.similarity_search import SEMDEDUP_TAU_E4
 
     dim = 64
 
@@ -608,7 +605,7 @@ def test_semdedup_collapses_near_identical_within_cell(spark, tmp_path):
         r.vec_id: r.label
         for r in QUERIES["semdedup_survivors"](spark, str(tmp_path)).collect()
     }
-    assert set(survivors) == set(range(_QUERY_MAX_ID, 21)) | {21, 23}
+    assert set(survivors) == set(range(QUERY_MAX_ID, 21)) | {21, 23}
     assert survivors[21] == 0 and survivors[23] == 2
     # this tmp corpus shares the session-scoped shared_stage cache key
     # namespace with other tests only via its unique sf_dir, but drop
@@ -751,12 +748,15 @@ def test_d4_pipeline_rederives_quota_over_semdedup_survivors(spark, sf_dir):
 
 
 def test_dedup_and_retrieval_idioms_have_one_definition():
-    """The near-dup closure and the top-k-per-query window each have one
-    home (operators/graph.py, operators/similarity.py) that every dedup
-    and retrieval family calls: one ``connected_components`` call site,
-    one recursive ``walk`` CTE, one (sim DESC, vec_id ASC) top-k window
-    and one ``TOP_K`` in the engine."""
+    """The near-dup closure and the retrieval idioms each have one home
+    (operators/graph.py, operators/similarity.py) that every dedup and
+    retrieval family calls: one ``connected_components`` call site, one
+    recursive ``walk`` CTE, one (sim DESC, vec_id ASC) top-k window, one
+    ``TOP_K`` and one ``QUERY_MAX_ID`` in the engine; one cosine per
+    engine and one DuckDB fold-dot text. The E3 plan modules memoize
+    through ``shared_stage`` only: no ``stage_checkpoint`` call."""
     import os
+    import re
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     needles = {
@@ -764,17 +764,35 @@ def test_dedup_and_retrieval_idioms_have_one_definition():
         "walk(id, rep) AS (": 0,
         'partitionBy("q_id").orderBy(F.desc("sim"), F.asc("vec_id"))': 0,
         "TOP_K = 10": 0,
+        "QUERY_MAX_ID = 5": 0,
     }
+    patterns = {
+        # the Spark cosine: fold dot over the norm product
+        r'fold_dot_np\("?\w+"?, "?\w+"?\) / \(': 0,
+        # the DuckDB cosine
+        r"duck_fold_dot\([^)]*\)\} / \(": 0,
+        # the DuckDB fold-dot text
+        r'list_transform\(range\(1, .*?\),[\s"f]*i -> \S+\[i\] \* \S+\[i\]': 0,
+    }
+    e3_plans = {"similarity_search.py", "quantization.py", "pq.py"}
+    checkpoints = 0
     for dirpath, _, files in os.walk(os.path.join(root, "bq_nvd_spark")):
         for name in files:
             if not name.endswith(".py"):
                 continue
             with open(os.path.join(dirpath, name), encoding="utf-8") as fh:
-                for line in fh:
-                    for needle in needles:
-                        if needle in line and "def connected_components(" not in line:
-                            needles[needle] += 1
+                text = fh.read()
+            for line in text.splitlines():
+                for needle in needles:
+                    if needle in line and "def connected_components(" not in line:
+                        needles[needle] += 1
+            for pattern in patterns:
+                patterns[pattern] += len(re.findall(pattern, text))
+            if name in e3_plans and dirpath.endswith("plans"):
+                checkpoints += text.count("stage_checkpoint(")
     assert needles == dict.fromkeys(needles, 1), needles
+    assert patterns == dict.fromkeys(patterns, 1), patterns
+    assert checkpoints == 0
 
 
 def test_semantic_dedup_closure_is_memoized(spark, sf_dir, monkeypatch):
@@ -802,6 +820,61 @@ def test_semantic_dedup_closure_is_memoized(spark, sf_dir, monkeypatch):
     assert first and first == second
 
 
+@pytest.mark.parametrize(
+    "name, keys",
+    [
+        ("quantized_cosine_topk", ["sq8_normed"]),
+        ("pq_adc_recall_topk", ["pq_codes", "pq_exact_scored"]),
+        ("ivf_refined_topk", ["ivf_refined_cents"]),
+        ("mmr_diverse_topk", ["mmr_pool"]),
+        ("mmr_ann_diverse_topk", ["mmr_ann_pool"]),
+    ],
+)
+def test_e3_sf_dir_relations_are_memoized(spark, sf_dir, monkeypatch, name, keys):
+    """Every E3 relation that depends only on sf_dir is a session memo:
+    the first build leaves the query's ``shared_stage`` entries, a
+    second build makes no ``stage_checkpoint`` call and no PQ codebook
+    collect, and the result is unchanged."""
+    import sys
+
+    from bq_nvd_spark.operators import checkpoint
+    from bq_nvd_spark.operators.checkpoint import (
+        release_shared_stages,
+        shared_stage_peek,
+    )
+    from bq_nvd_spark.plans import QUERIES
+    from bq_nvd_spark.plans import pq as pq_mod
+
+    calls = []
+
+    def counting(real, tag):
+        def wrapped(*args, **kwargs):
+            calls.append(tag)
+            return real(*args, **kwargs)
+
+        return wrapped
+
+    real_checkpoint = checkpoint.stage_checkpoint
+    for mod in list(sys.modules.values()):
+        if (
+            getattr(mod, "__name__", "").startswith("bq_nvd_spark")
+            and getattr(mod, "stage_checkpoint", None) is real_checkpoint
+        ):
+            monkeypatch.setattr(
+                mod, "stage_checkpoint", counting(real_checkpoint, "checkpoint")
+            )
+    monkeypatch.setattr(
+        pq_mod, "make_pq_encoder", counting(pq_mod.make_pq_encoder, "encoder")
+    )
+    release_shared_stages(spark)
+    first = sorted(QUERIES[name](spark, sf_dir).collect())
+    assert all(shared_stage_peek(spark, (k, sf_dir)) is not None for k in keys)
+    del calls[:]
+    second = QUERIES[name](spark, sf_dir)
+    assert calls == []
+    assert first and first == sorted(second.collect())
+
+
 # --------------------------------------------------------------------------
 # Optimization round 17: the PQ encode moved from a corpus×K crossJoin
 # + groupBy-argmin (two 64-dim vectors through Arrow per candidate
@@ -814,13 +887,17 @@ def test_semantic_dedup_closure_is_memoized(spark, sf_dir, monkeypatch):
 def test_pq_encode_kernel_matches_crossjoin_argmin(spark, sf_dir):
     from pyspark.sql.window import Window
 
-    from bq_nvd_spark.operators.similarity import PQ_M, subspace_dots_np
-    from bq_nvd_spark.plans.pq import K_CENTROIDS, _QUERY_MAX_ID
+    from bq_nvd_spark.operators.similarity import (
+        PQ_M,
+        QUERY_MAX_ID,
+        normed_corpus,
+        subspace_dots_np,
+    )
+    from bq_nvd_spark.plans.pq import K_CENTROIDS
     from bq_nvd_spark.plans import pq as pq_mod
-    from bq_nvd_spark.plans.similarity_search import _ivf_norms
 
-    corpus = _ivf_norms(spark, sf_dir).filter(
-        F.col("vec_id") >= _QUERY_MAX_ID
+    corpus = normed_corpus(spark, sf_dir).filter(
+        F.col("vec_id") >= QUERY_MAX_ID
     )
     # the original encode, verbatim: md5-ordered seeds, aa/ab/cc via
     # subspace_dots_np, min-of-struct argmin with cid tie-break
