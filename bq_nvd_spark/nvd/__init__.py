@@ -11,6 +11,7 @@ from bq_nvd_spark.nvd.etl import (
     cve_items,
     dedup_within,
     deltas_only,
+    nvd_store_integrity,
     read_cve_ndjson,
     read_feed,
     write_ndjson,
@@ -32,6 +33,7 @@ __all__ = [
     "feed_url",
     "ingest_feed",
     "nvd_schema",
+    "nvd_store_integrity",
     "parse_bq_json_schema",
     "read_cve_ndjson",
     "read_feed",

@@ -52,11 +52,7 @@ from bq_nvd_spark.nvd.download import (
     download_feed,
 )
 from bq_nvd_spark.nvd.etl import NvdStore
-from bq_nvd_spark.nvd.pipeline import (
-    BOOTSTRAP_THRESHOLD,
-    IngestResult,
-    ingest_feed,
-)
+from bq_nvd_spark.nvd.pipeline import BOOTSTRAP_THRESHOLD, IngestResult, run
 
 # Reference bq-nvd.py:26-35 — the settings roster. Everything is
 # env-var-first; one missing variable sends the WHOLE set to the yaml
@@ -143,21 +139,11 @@ def _fetch(config: dict, name: str) -> str:
         raise AssertionError("unreachable")
 
 
-def _ingest(spark, store: NvdStore, path: str) -> IngestResult:
-    """Steps 2-4 — one declarative extract+transform+load pass
-    (pipeline.ingest_feed); the reference runs these as three separate
-    driver-side stages (bq-nvd.py:116-150)."""
-    result = ingest_feed(spark, store, path)
-    if result.skipped:
-        print_debug("no updates to load")  # reference bq-nvd.py:141-143
-    else:
-        print_debug(f"loaded {result.loaded} CVEs from {path}")
-    return result
-
-
 def run_cli(config: dict, spark=None) -> list[IngestResult]:
     """check_bootstrap → bootstrap-or-incremental, reference
-    bq-nvd.py:70-104 + main():153-163."""
+    bq-nvd.py:70-104 + main():153-163, through ``pipeline.run``. Feeds
+    are downloaded lazily: the year feeds one by one only when the run
+    bootstraps, ``recent`` only on an incremental pass."""
     if spark is None:
         from bq_nvd_spark.session import get_spark
 
@@ -169,22 +155,29 @@ def run_cli(config: dict, spark=None) -> list[IngestResult]:
         format=config.get("store_format", "parquet"),
         schema_path=config.get("nvd_schema"),
     )
+    first = int(config.get("first_feed_year", FIRST_FEED_YEAR))
+    last = int(config.get("last_feed_year", datetime.now().year))
+
+    def year_feeds():
+        print_debug("bootstrapping")  # reference bq-nvd.py:88
+        for year in range(first, last + 1):
+            yield _fetch(config, str(year))
+
+    def recent_feed():
+        print_debug("doing incremental update")  # reference bq-nvd.py:100
+        return _fetch(config, "recent")
 
     threshold = int(config.get("bootstrap_threshold", BOOTSTRAP_THRESHOLD))
-    count = store.count_cves()
-    if count < threshold:
-        print_debug("bootstrapping")  # reference bq-nvd.py:88
-        first = int(config.get("first_feed_year", FIRST_FEED_YEAR))
-        last = int(config.get("last_feed_year", datetime.now().year))
-        results = []
-        for year in range(first, last + 1):
-            path = _fetch(config, str(year))
-            results.append(_ingest(spark, store, path))
-        return results
-
-    print_debug("doing incremental update")  # reference bq-nvd.py:100
-    path = _fetch(config, "recent")
-    return [_ingest(spark, store, path)]
+    results = run(spark, store, year_feeds(), recent_feed, bootstrap_threshold=threshold)
+    # Steps 2-4 ran as one declarative extract+transform+load pass per
+    # feed; the reference runs them as three driver-side stages
+    # (bq-nvd.py:116-150).
+    for result in results:
+        if result.skipped:
+            print_debug("no updates to load")  # reference bq-nvd.py:141-143
+        else:
+            print_debug(f"loaded {result.loaded} CVEs from {result.feed_path}")
+    return results
 
 
 def main(argv: list[str] | None = None) -> int:

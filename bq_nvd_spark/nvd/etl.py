@@ -21,8 +21,10 @@ Spark-first re-expression:
   probe side streams, and column pruning reduces the store scan to one
   column. This is the distributed fix for the reference's admitted
   inefficiency.
-- the empty-delta short-circuit (A3) is an ``isEmpty`` on the optimized
-  plan, mirroring ``len(scrubbed_list) == 0 → None`` (etl.py:94-96).
+- the empty-delta short-circuit (A3) rides on the write itself: the
+  store's append observes ``count(*)`` inside its own job, and a 0-row
+  write commits nothing, mirroring ``len(scrubbed_list) == 0 → None``
+  (etl.py:94-96) without a separate counting job.
 - sinks: NDJSON (Spark's JSON writer is newline-delimited natively,
   S3) and a parquet store partitioned by ``year(publishedDate)`` — the
   columnar analog of the BigQuery table, with per-year partition
@@ -31,14 +33,21 @@ Spark-first re-expression:
   it touches (AQE splits a year above its advisory partition size into
   files of about that size). The remaining small-file source is the
   current year, which gains one file per non-empty refresh pass (~72 a
-  day at the reference's 20-minute cadence) until it is compacted.
+  day at the reference's 20-minute cadence); compacting it is deferred.
+- the store's state is a put-if-absent commit log (``NvdStore``, after
+  the Delta Lake transaction log): the stored-CVE count (A1) is read
+  from the latest log entry with no Spark job, and overlapping writers
+  fail loudly instead of appending the same delta twice.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
+import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from bq_nvd_spark.nvd.schema import feed_schema, nvd_schema
@@ -122,15 +131,23 @@ def deltas_only(incoming: DataFrame, existing_ids: DataFrame) -> DataFrame:
 def dedup_within(incoming: DataFrame) -> DataFrame:
     """First-write-wins *within* a batch: one row per ID, smallest
     (publishedDate, lastModifiedDate) first — keeps re-runs deterministic
-    when a single feed carries duplicate IDs."""
+    when a single feed carries duplicate IDs.
+
+    The window's shuffle is an explicit ``repartition`` to the session's
+    shuffle-partition count, which AQE never coalesces. The store's
+    append rebalances this output by year, and AQE can split a year
+    above its advisory size only between map tasks: a small batch
+    coalesced into one task would write any year as one file."""
     from pyspark.sql.window import Window
 
     w = Window.partitionBy(F.col(ID_COL)).orderBy(
         F.col("publishedDate").asc_nulls_last(),
         F.col("lastModifiedDate").asc_nulls_last(),
     )
+    n = int(incoming.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return (
-        incoming.withColumn("_rn", F.row_number().over(w))
+        incoming.repartition(n, F.col(ID_COL))
+        .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
@@ -143,6 +160,26 @@ def write_ndjson(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").option("timestampFormat", NVD_TIMESTAMP_FORMAT).json(path)
 
 
+LOG_DIR = "_log"
+STAGING_DIR = "_staging"
+
+
+def _listed(name: str) -> bool:
+    """Spark's file-listing rule: names starting with ``.`` or ``_`` are
+    hidden, except ``_``-prefixed partition directories (``k=v``)."""
+    return not name.startswith(".") and (not name.startswith("_") or "=" in name)
+
+
+def _data_files(root: str) -> list[str]:
+    """The data files a Spark scan of ``root`` lists, relative to it."""
+    out = []
+    for dirpath, dirs, files in os.walk(root):
+        dirs[:] = sorted(d for d in dirs if _listed(d))
+        rel = os.path.relpath(dirpath, root)
+        out += [os.path.normpath(os.path.join(rel, f)) for f in sorted(files) if _listed(f)]
+    return out
+
+
 class NvdStore:
     """Parquet-backed CVE store — the engine's analog of the BigQuery
     ``nvd`` table (columnar at rest, append-only, no enforced uniqueness;
@@ -152,13 +189,34 @@ class NvdStore:
     layout becomes partition pruning for time-scoped queries; at 100 TB
     each year is an independently scannable directory.
 
+    State is a commit log, ``_log/_<version:08d>.json`` (after the Delta
+    Lake transaction log). Version 0 creates the store; each later
+    version is one append and lists the data files it adds (relative to
+    the store) with its ``rows``, its null-skipping ``cves`` (``count``
+    of the ID) and the running ``total_cves``. So:
+
+    - ``exists()`` means "version 0 is committed", and ``count_cves``
+      reads the latest entry only, with no Spark job;
+    - an entry is created put-if-absent, at the version after the one
+      the writer's scan saw: of two runs planned against the same
+      version one commits and the other raises, so the store never holds
+      an ID twice;
+    - an append is staged under ``_staging/<uuid>/``, committed, then
+      renamed into ``_pub_year=Y/``. Spark's listing skips ``_`` names,
+      so ``read()`` stays a directory read (listing the logged files
+      instead costs an extra listing job above 32 paths) and never sees
+      staged or orphaned files. Every scan first rolls the latest
+      entry's pending renames forward, which heals a crash between
+      commit and rename.
+
     Write layout: an append writes at most one file per year partition it
     touches, whatever the shuffle-partition count; a year above AQE's
     advisory partition size is split into files of about that size.
-    Every scan (``count_cves``, the ``cve_ids`` anti-join, end-user SQL)
-    therefore opens about one file per year per append that touched it. The
-    current year still gains one small file per non-empty refresh pass
-    (~72 a day at a 20-minute cadence); compacting it is an open item.
+    Every scan (the ``cve_ids`` anti-join, end-user SQL) therefore opens
+    about one file per year per append that touched it. The current year
+    still gains one small file per non-empty refresh pass (~72 a day at a
+    20-minute cadence); compacting it, as one log commit that removes N
+    files and adds one, is deferred.
 
     The sink format is a SEAM, not a constant: parquet is canonical in
     the sandbox, but the reference's store is a warehouse load job
@@ -166,7 +224,8 @@ class NvdStore:
     the spark-bigquery connector on the classpath and ``options`` naming
     the table) or any other DataSource V2 sink is a configuration
     change, never a pipeline-code change. ``tests/test_nvd_pipeline.py``
-    pins the seam by running the identical pipeline through ORC.
+    pins the seam by running the identical pipeline through ORC; the log
+    records files, never format internals.
     """
 
     def __init__(
@@ -182,23 +241,99 @@ class NvdStore:
         self.format = format
         self.options = dict(options or {})
         self.schema_path = schema_path
+        # The log version this handle's last scan saw, or its last append
+        # committed: the next append commits only at the version after it.
+        self.version: int | None = None
+        # The entry the last append committed; None when it wrote no row.
+        self.last_commit: dict | None = None
+
+    # -- the commit log ------------------------------------------------
+    def _entry_path(self, version: int) -> str:
+        return os.path.join(self.path, LOG_DIR, f"_{version:08d}.json")
+
+    def _entry(self, version: int) -> dict:
+        with open(self._entry_path(version)) as f:
+            return json.load(f)
+
+    def _versions(self) -> list[int]:
+        try:
+            names = os.listdir(os.path.join(self.path, LOG_DIR))
+        except FileNotFoundError:
+            return []
+        return sorted(int(n[1:-5]) for n in names if n.startswith("_") and n.endswith(".json"))
+
+    def _latest(self) -> dict | None:
+        """The latest entry, its pending renames rolled forward."""
+        versions = self._versions()
+        if not versions:
+            return None
+        entry = self._entry(versions[-1])
+        self._roll_forward(entry)
+        return entry
+
+    def _commit(self, entry: dict) -> None:
+        """Put-if-absent: the entry appears whole or not at all (a hard
+        link of a finished file, so no reader sees it half-written), and
+        a version that already exists raises ``FileExistsError``."""
+        log = os.path.join(self.path, LOG_DIR)
+        os.makedirs(log, exist_ok=True)
+        tmp = os.path.join(log, f".{uuid.uuid4().hex}.tmp")
+        with open(tmp, "w") as f:
+            json.dump(entry, f)
+        try:
+            os.link(tmp, self._entry_path(entry["version"]))
+        finally:
+            os.unlink(tmp)
+
+    def _roll_forward(self, entry: dict) -> None:
+        """Finish an entry's renames out of its staging directory, each
+        data file with its checksum sidecar. A rename is done once its
+        source is gone, so this is idempotent and may race another
+        process doing the same."""
+        staging = entry.get("staging")
+        if not staging or not os.path.isdir(os.path.join(self.path, staging)):
+            return
+        for rel in entry["files"]:
+            head, tail = os.path.split(rel)
+            os.makedirs(os.path.join(self.path, head), exist_ok=True)
+            for name in (rel, os.path.join(head, f".{tail}.crc")):
+                try:
+                    os.rename(os.path.join(self.path, staging, name), os.path.join(self.path, name))
+                except FileNotFoundError:
+                    pass  # already moved, or no sidecar
+        shutil.rmtree(os.path.join(self.path, staging), ignore_errors=True)
 
     # -- S6: create-if-not-exists -------------------------------------
+    def exists(self) -> bool:
+        return os.path.exists(self._entry_path(0))
+
     def ensure(self) -> None:
         """DDL analog of the reference's swallow-Conflict create
-        (bq_nvd/bq.py:84-110): write an empty partitioned parquet table
-        if and only if none exists."""
-        if not self.exists():
-            empty = self.spark.createDataFrame([], nvd_schema(self.schema_path))
-            self._write(empty, mode="overwrite")
-
-    def exists(self) -> bool:
-        # Any write (even of an empty frame) leaves a _SUCCESS marker, so
-        # a non-empty directory means the table has been created.
-        return os.path.isdir(self.path) and bool(os.listdir(self.path))
+        (bq_nvd/bq.py:84-110): commit version 0 unless it exists. A new
+        store writes no empty table. A directory written before the log
+        (data files, no ``_log/``) is adopted with one scan, its files
+        listed in version 0; one holding only ``_temporary/`` is adopted
+        as empty."""
+        if self.exists():
+            return
+        files = _data_files(self.path) if os.path.isdir(self.path) else []
+        rows = cves = 0
+        if files:
+            counts = self.read().agg(F.count(F.lit(1)), F.count(F.col(ID_COL))).first()
+            rows, cves = int(counts[0]), int(counts[1])
+        try:
+            self._commit({"version": 0, "files": files, "rows": rows, "cves": cves,
+                          "total_cves": cves})
+        except FileExistsError:
+            pass  # a concurrent run created it first
 
     # -- scans ---------------------------------------------------------
     def read(self) -> DataFrame:
+        """Every stored row: pending renames rolled forward, then a
+        directory read. Spark lists the files here, so the version seen
+        is pinned for the next ``append``."""
+        entry = self._latest()
+        self.version = entry["version"] if entry else None
         return (
             self.spark.read.schema(self._partitioned_schema())
             .format(self.format)
@@ -214,38 +349,114 @@ class NvdStore:
 
     def count_cves(self) -> int:
         """A1: null-skipping COUNT of the nested ID (reference
-        bq.py:125-134); auto-creates the store when absent, mirroring the
-        NotFound → make_dataset → 0 path (bq.py:137-140)."""
-        if not self.exists():
-            self.ensure()
-            return 0
-        row = self.read().agg(F.count(F.col(ID_COL)).alias("Count")).first()
-        return int(row["Count"])
+        bq.py:125-134), read from the latest log entry with no Spark job;
+        auto-creates the store when absent, mirroring the NotFound →
+        make_dataset → 0 path (bq.py:137-140)."""
+        self.ensure()
+        return self._latest()["total_cves"]
 
     # -- S5: bulk append ----------------------------------------------
     def append(self, df: DataFrame) -> None:
         """Synchronous bulk load (Spark actions are synchronous, matching
         the reference's deliberate ``load_job.result()`` so set
-        calculations read their own writes, bq.py:195-202)."""
-        self._write(df, mode="append")
+        calculations read their own writes, bq.py:195-202).
 
-    def _write(self, df: DataFrame, mode: str) -> None:
-        # One file per year per append, not one per (shuffle task, year);
-        # see "Write layout" in the class docstring.
+        One write into a staging directory, which counts its own rows; a
+        0-row write commits nothing. Otherwise the entry commits at the
+        version after ``self.version`` and the files are renamed into
+        the store. A commit lost to another writer raises
+        ``FileExistsError`` and leaves the store as it was. The committed
+        entry, or None, is left in ``last_commit``.
+        """
+        self.last_commit = None
+        self.ensure()
+        base = self.version if self.version is not None else self._latest()["version"]
+        staging = f"{STAGING_DIR}/{uuid.uuid4().hex}"
+        committed = False
+        try:
+            counts = self._write(df, os.path.join(self.path, staging))
+            if counts["rows"] == 0:  # A3: nothing new since the last run
+                return
+            entry = {
+                "version": base + 1,
+                "staging": staging,
+                "files": _data_files(os.path.join(self.path, staging)),
+                "rows": counts["rows"],
+                "cves": counts["cves"],
+                "total_cves": self._entry(base)["total_cves"] + counts["cves"],
+            }
+            self._commit(entry)
+            committed = True
+        finally:
+            if not committed:
+                shutil.rmtree(os.path.join(self.path, staging), ignore_errors=True)
+        self._roll_forward(entry)
+        self.version, self.last_commit = entry["version"], entry
+
+    def _write(self, df: DataFrame, path: str) -> dict:
+        """Write ``df`` to ``path`` with one file per year per append (see
+        "Write layout"), and return its ``rows`` and ``cves``, observed
+        inside the write's own job. The observation sits above the
+        rebalance: below it, a 0-row input loses its metrics, since AQE
+        replaces the empty shuffle and ``Observation.get`` then fails."""
+        observation = Observation()
         (
             df.withColumn(
                 "_pub_year", F.coalesce(F.year("publishedDate"), F.lit(0))
             )
             .hint("rebalance", "_pub_year")
+            .observe(observation, F.count(F.lit(1)).alias("rows"),
+                     F.count(F.col(ID_COL)).alias("cves"))
             .write.format(self.format)
             .options(**self.options)
-            .mode(mode)
             .partitionBy("_pub_year")
-            .save(self.path)
+            .save(path)
         )
+        return observation.get
 
     def _partitioned_schema(self):
         from pyspark.sql.types import IntegerType, StructField
 
         base = nvd_schema(self.schema_path)
         return base.add(StructField("_pub_year", IntegerType(), True))
+
+
+def nvd_store_integrity(store: NvdStore) -> dict:
+    """Check a store against its log and change nothing in it.
+
+    One scan counts the non-null IDs and the IDs stored twice; the
+    schema of the data files (parquet and ORC carry one) is compared with
+    ``nvd_schema.json``; every file an entry lists must exist; the latest
+    ``total_cves`` must equal the scanned count. Leftovers in
+    ``_staging/`` (a writer that died or lost its commit) are listed but
+    kept, and do not fail the check: no scan sees them.
+    """
+    versions = store._versions()
+    if not versions:
+        raise ValueError(f"{store.path} has no commit log")
+    entries = [store._entry(v) for v in versions]
+    per_id = store.read().groupBy(F.col(ID_COL).alias("ID")).count().filter("ID IS NOT NULL")
+    scanned, duplicates = per_id.agg(
+        F.coalesce(F.sum("count"), F.lit(0)), F.count(F.when(F.col("count") > 1, 1))
+    ).first()
+    missing = [f for e in entries for f in e["files"]
+               if not os.path.exists(os.path.join(store.path, f))]
+    schema_matches = None
+    if store.format in ("parquet", "orc") and _data_files(store.path):
+        on_disk = (store.spark.read.format(store.format).options(**store.options)
+                   .option("mergeSchema", "true").load(store.path).schema)
+        schema_matches = on_disk.simpleString() == store._partitioned_schema().simpleString()
+    staging = os.path.join(store.path, STAGING_DIR)
+    leftovers = sorted(f"{STAGING_DIR}/{n}" for n in os.listdir(staging)) if os.path.isdir(staging) else []
+    report = {
+        "version": versions[-1],
+        "total_cves": entries[-1]["total_cves"],
+        "scanned_cves": int(scanned),
+        "duplicate_ids": int(duplicates),
+        "schema_matches": schema_matches,
+        "missing_files": missing,
+        "staging_leftovers": leftovers,
+    }
+    report["ok"] = (report["scanned_cves"] == report["total_cves"] and not duplicates
+                    and schema_matches is not False and not missing)
+    return report

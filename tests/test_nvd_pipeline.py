@@ -8,6 +8,7 @@ from __future__ import annotations
 import gzip
 import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -23,8 +24,11 @@ from pyspark.sql.types import (
 from bq_nvd_spark.nvd import (
     NvdStore,
     cve_items,
+    dedup_within,
+    deltas_only,
     ingest_feed,
     nvd_schema,
+    nvd_store_integrity,
     parse_bq_json_schema,
     read_cve_ndjson,
     read_feed,
@@ -32,6 +36,7 @@ from bq_nvd_spark.nvd import (
     write_ndjson,
 )
 from bq_nvd_spark.nvd.etl import ID_COL
+from bq_nvd_spark.nvd.etl import _data_files as listed_files
 
 FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures", "nvd")
 YEAR_FEED = os.path.join(FIXTURES, "nvdcve-1.1-2024.json.gz")
@@ -358,13 +363,14 @@ def test_feed_schema_drift_fails_loudly_or_loads(spark, tmp_path, drift, raises,
 
 def test_half_created_store_reads_empty_then_bootstraps(spark, tmp_path):
     """A store directory a crashed first write left holding only
-    ``_temporary/0/`` counts as created (``exists()`` is "dir non-empty")
-    but scans as empty, so the next run bootstraps it cleanly: all 8
-    fixture CVEs load and no ID lands twice."""
+    ``_temporary/0/`` is not created (``exists()`` is "version 0 of the
+    log is committed"); it is adopted as empty, so the next run
+    bootstraps it cleanly: all 8 fixture CVEs load and no ID lands
+    twice."""
     path = tmp_path / "store"
     (path / "_temporary" / "0").mkdir(parents=True)
     store = NvdStore(spark, str(path))
-    assert store.exists()
+    assert not store.exists()
     assert store.count_cves() == 0
 
     results = run(spark, store, [YEAR_FEED], RECENT_FEED, bootstrap_threshold=5)
@@ -519,3 +525,199 @@ def test_append_splits_a_year_above_the_aqe_advisory_size(spark, tmp_path):
         assert files_written("small_advisory") >= 2
     finally:
         spark.conf.set(key, previous)
+
+
+# --------------------------------------------------------------------------
+# The store's commit log: each fault either fails the run loudly or leaves
+# the store readable with no ID twice; the refresh pass's job budget; and
+# the integrity check.
+def _brownfield(spark, path) -> NvdStore:
+    store = NvdStore(spark, str(path))
+    ingest_feed(spark, store, YEAR_FEED)
+    assert store.count_cves() == 8
+    return store
+
+
+def _rows(df) -> list[str]:
+    return sorted(repr(r) for r in df.collect())
+
+
+def _duplicate_ids(store: NvdStore) -> int:
+    return store.read().groupBy(ID_COL).count().filter("count > 1").count()
+
+
+def _recent_delta(store: NvdStore):
+    items = cve_items(read_feed(store.spark, RECENT_FEED))
+    return deltas_only(dedup_within(items), store.cve_ids())
+
+
+def test_write_failing_before_commit_leaves_store_unchanged(spark, tmp_path, monkeypatch):
+    """The write raises after staging its files and before the commit:
+    the ingest fails, the count and the rows stay as they were, and the
+    staged files are removed without any scan having seen them."""
+    store = _brownfield(spark, tmp_path / "store")
+    before = _rows(store.read())
+    real_write = store._write
+
+    def write_then_die(df, path):
+        real_write(df, path)
+        assert any(f.endswith(".parquet") for f in listed_files(path))
+        raise RuntimeError("killed after staging")
+
+    monkeypatch.setattr(store, "_write", write_then_die)
+    with pytest.raises(RuntimeError, match="killed after staging"):
+        ingest_feed(spark, store, RECENT_FEED)
+    assert store.last_commit is None
+    assert store.count_cves() == 8
+    assert _rows(store.read()) == before
+    assert os.listdir(os.path.join(store.path, "_staging")) == []
+
+
+@pytest.mark.parametrize("first_scan", ["count_cves", "read"])
+def test_commit_without_moves_rolls_forward(spark, tmp_path, monkeypatch, first_scan):
+    """The entry commits but the process dies before renaming its files
+    into the store: the next ``count_cves`` or ``read()`` (here on a
+    fresh handle, as the next run would) finishes the renames, and the
+    logged count equals ``COUNT(ID)`` over the directory scan."""
+    store = _brownfield(spark, tmp_path / "store")
+    monkeypatch.setattr(store, "_roll_forward", lambda entry: None)
+    result = ingest_feed(spark, store, RECENT_FEED)
+    assert (result.loaded, result.skipped) == (2, False)
+    staged = store.last_commit["staging"]
+    assert os.path.isdir(os.path.join(store.path, staged))
+
+    after = NvdStore(spark, store.path)
+    if first_scan == "count_cves":
+        assert after.count_cves() == 10
+    else:
+        assert after.read().count() == 10
+    assert not os.path.exists(os.path.join(store.path, staged))
+    scanned = after.read().agg(F.count(F.col(ID_COL))).first()[0]
+    assert after.count_cves() == scanned == 10
+    assert _duplicate_ids(after) == 0
+
+
+def test_overlapping_ingests_planned_on_one_version(spark, tmp_path):
+    """Two runs anti-join the same feed against the same store version
+    (two handles, as two overlapping cron runs hold): the first commit
+    wins, the second raises, and the store holds no ID twice."""
+    first = _brownfield(spark, tmp_path / "store")
+    second = NvdStore(spark, first.path)
+    delta_first, delta_second = _recent_delta(first), _recent_delta(second)
+    assert first.version == second.version == 1
+
+    first.append(delta_first)
+    assert first.last_commit["rows"] == 2
+    with pytest.raises(FileExistsError):
+        second.append(delta_second)
+    assert second.last_commit is None
+    assert second.count_cves() == 10
+    assert second.read().count() == 10
+    assert _duplicate_ids(second) == 0
+    assert os.listdir(os.path.join(first.path, "_staging")) == []
+
+
+def test_racing_commits_of_one_version_have_one_winner(tmp_path):
+    """Many threads commit the same log version at once: exactly one
+    succeeds, every other raises ``FileExistsError``, and the entry on
+    disk is the winner's, whole."""
+    import sys
+    import threading
+
+    store = NvdStore(None, str(tmp_path / "store"))
+    outcomes = {}
+
+    def commit(i):
+        try:
+            store._commit({"version": 1, "writer": i, "files": [f"f{i}"] * 100})
+            outcomes[i] = "won"
+        except FileExistsError:
+            outcomes[i] = "lost"
+
+    previous = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=commit, args=(i,)) for i in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(previous)
+    assert not any(t.is_alive() for t in threads)
+    winners = [i for i, o in outcomes.items() if o == "won"]
+    assert len(outcomes) == 16 and len(winners) == 1
+    entry = store._entry(1)
+    assert entry["writer"] == winners[0] and entry["files"] == [f"f{winners[0]}"] * 100
+    assert store._versions() == [1]
+    assert os.listdir(os.path.join(store.path, "_log")) == ["_00000001.json"]
+
+
+def test_pre_log_store_is_adopted_unchanged(spark, tmp_path):
+    """A store written before the commit log (an empty-table write, then
+    an append, no ``_log/``) is adopted once: version 0 lists its files,
+    the count and the rows are unchanged, and refreshes continue on it."""
+    path = str(tmp_path / "legacy")
+    store = NvdStore(spark, path)
+    year = F.coalesce(F.year("publishedDate"), F.lit(0))
+    empty = spark.createDataFrame([], nvd_schema())
+    empty.withColumn("_pub_year", year).write.mode("overwrite").partitionBy("_pub_year").save(path)
+    items = cve_items(read_feed(spark, YEAR_FEED))
+    items.withColumn("_pub_year", year).write.mode("append").partitionBy("_pub_year").save(path)
+    before = _rows(store.read())
+    assert len(before) == 8 and not store.exists()
+
+    assert store.count_cves() == 8
+    assert store.exists()
+    assert store._entry(0)["files"] == listed_files(path)
+    assert _rows(store.read()) == before
+    result = ingest_feed(spark, store, RECENT_FEED)
+    assert (result.loaded, result.skipped) == (2, False)
+    assert store.count_cves() == 10
+    assert _duplicate_ids(store) == 0
+
+
+def test_refresh_pass_job_budget(spark, tmp_path):
+    """A brownfield refresh reads its count from the log with no Spark
+    job and ingests in at most 4 jobs, with a non-empty delta and with
+    an empty one; the empty pass commits nothing."""
+    from perfbench.tracing import Tracer
+
+    store = _brownfield(spark, tmp_path / "store")
+    tracer = Tracer(spark, "nvd-job-budget", enabled=True)
+    for loaded, skipped in [(2, False), (0, True)]:
+        versions = store._versions()
+        with tracer.span("count_cves") as counted:
+            store.count_cves()
+        with tracer.span("ingest_feed") as ingested:
+            result = ingest_feed(spark, store, RECENT_FEED)
+        assert (result.loaded, result.skipped) == (loaded, skipped)
+        assert counted.jobs == 0
+        assert ingested.jobs <= 4, ingested.jobs
+    assert store._versions() == versions
+    assert store.count_cves() == 10
+
+
+def test_store_integrity_reports_an_orphan_and_keeps_it(spark, tmp_path):
+    """``nvd_store_integrity`` passes a fixture store with one planted
+    staging orphan, lists the orphan and deletes nothing; a logged file
+    gone missing fails it."""
+    store = _brownfield(spark, tmp_path / "store")
+    ingest_feed(spark, store, RECENT_FEED)
+    logged = store.last_commit["files"][0]
+    orphan = os.path.join(store.path, "_staging", "orphan", logged)
+    os.makedirs(os.path.dirname(orphan))
+    shutil.copy(os.path.join(store.path, logged), orphan)
+
+    report = nvd_store_integrity(store)
+    assert report == {
+        "version": 2, "total_cves": 10, "scanned_cves": 10, "duplicate_ids": 0,
+        "schema_matches": True, "missing_files": [],
+        "staging_leftovers": ["_staging/orphan"], "ok": True,
+    }
+    assert os.path.exists(orphan)
+    assert store.read().count() == 10
+
+    os.remove(os.path.join(store.path, logged))
+    report = nvd_store_integrity(store)
+    assert report["missing_files"] == [logged] and not report["ok"]
