@@ -34,22 +34,20 @@ Spark-first re-expression:
   files of about that size). The remaining small-file source is the
   current year, which gains one file per non-empty refresh pass (~72 a
   day at the reference's 20-minute cadence); compacting it is deferred.
-- the store's state is a put-if-absent commit log (``NvdStore``, after
-  the Delta Lake transaction log): the stored-CVE count (A1) is read
-  from the latest log entry with no Spark job, and overlapping writers
-  fail loudly instead of appending the same delta twice.
+- the store's state is the put-if-absent commit log of
+  ``bq_nvd_spark/commit_log.py``: the stored-CVE count (A1) is read from
+  the latest entry with no Spark job, and overlapping writers fail
+  loudly instead of appending the same delta twice.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from bq_nvd_spark.commit_log import STAGING_DIR, CommitLog, _data_files
 from bq_nvd_spark.nvd.schema import feed_schema, nvd_schema
 
 # NVD 1.1 feeds carry minute-precision ISO-8601 with a Z suffix
@@ -160,26 +158,6 @@ def write_ndjson(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").option("timestampFormat", NVD_TIMESTAMP_FORMAT).json(path)
 
 
-LOG_DIR = "_log"
-STAGING_DIR = "_staging"
-
-
-def _listed(name: str) -> bool:
-    """Spark's file-listing rule: names starting with ``.`` or ``_`` are
-    hidden, except ``_``-prefixed partition directories (``k=v``)."""
-    return not name.startswith(".") and (not name.startswith("_") or "=" in name)
-
-
-def _data_files(root: str) -> list[str]:
-    """The data files a Spark scan of ``root`` lists, relative to it."""
-    out = []
-    for dirpath, dirs, files in os.walk(root):
-        dirs[:] = sorted(d for d in dirs if _listed(d))
-        rel = os.path.relpath(dirpath, root)
-        out += [os.path.normpath(os.path.join(rel, f)) for f in sorted(files) if _listed(f)]
-    return out
-
-
 class NvdStore:
     """Parquet-backed CVE store — the engine's analog of the BigQuery
     ``nvd`` table (columnar at rest, append-only, no enforced uniqueness;
@@ -189,25 +167,12 @@ class NvdStore:
     layout becomes partition pruning for time-scoped queries; at 100 TB
     each year is an independently scannable directory.
 
-    State is a commit log, ``_log/_<version:08d>.json`` (after the Delta
-    Lake transaction log). Version 0 creates the store; each later
-    version is one append and lists the data files it adds (relative to
-    the store) with its ``rows``, its null-skipping ``cves`` (``count``
-    of the ID) and the running ``total_cves``. So:
-
-    - ``exists()`` means "version 0 is committed", and ``count_cves``
-      reads the latest entry only, with no Spark job;
-    - an entry is created put-if-absent, at the version after the one
-      the writer's scan saw: of two runs planned against the same
-      version one commits and the other raises, so the store never holds
-      an ID twice;
-    - an append is staged under ``_staging/<uuid>/``, committed, then
-      renamed into ``_pub_year=Y/``. Spark's listing skips ``_`` names,
-      so ``read()`` stays a directory read (listing the logged files
-      instead costs an extra listing job above 32 paths) and never sees
-      staged or orphaned files. Every scan first rolls the latest
-      entry's pending renames forward, which heals a crash between
-      commit and rename.
+    State is a ``commit_log.CommitLog``: version 0 creates the store,
+    each later one is an append with its ``rows``, null-skipping
+    ``cves`` and running ``total_cves``. An append commits at the
+    version after the one its scan saw, so the store never holds an ID
+    twice. ``read()`` stays a directory read: listing the logged files
+    instead costs an extra listing job above 32 paths.
 
     Write layout: an append writes at most one file per year partition it
     touches, whatever the shuffle-partition count; a year above AQE's
@@ -241,71 +206,16 @@ class NvdStore:
         self.format = format
         self.options = dict(options or {})
         self.schema_path = schema_path
+        self.log = CommitLog(path)
         # The log version this handle's last scan saw, or its last append
         # committed: the next append commits only at the version after it.
         self.version: int | None = None
         # The entry the last append committed; None when it wrote no row.
         self.last_commit: dict | None = None
 
-    # -- the commit log ------------------------------------------------
-    def _entry_path(self, version: int) -> str:
-        return os.path.join(self.path, LOG_DIR, f"_{version:08d}.json")
-
-    def _entry(self, version: int) -> dict:
-        with open(self._entry_path(version)) as f:
-            return json.load(f)
-
-    def _versions(self) -> list[int]:
-        try:
-            names = os.listdir(os.path.join(self.path, LOG_DIR))
-        except FileNotFoundError:
-            return []
-        return sorted(int(n[1:-5]) for n in names if n.startswith("_") and n.endswith(".json"))
-
-    def _latest(self) -> dict | None:
-        """The latest entry, its pending renames rolled forward."""
-        versions = self._versions()
-        if not versions:
-            return None
-        entry = self._entry(versions[-1])
-        self._roll_forward(entry)
-        return entry
-
-    def _commit(self, entry: dict) -> None:
-        """Put-if-absent: the entry appears whole or not at all (a hard
-        link of a finished file, so no reader sees it half-written), and
-        a version that already exists raises ``FileExistsError``."""
-        log = os.path.join(self.path, LOG_DIR)
-        os.makedirs(log, exist_ok=True)
-        tmp = os.path.join(log, f".{uuid.uuid4().hex}.tmp")
-        with open(tmp, "w") as f:
-            json.dump(entry, f)
-        try:
-            os.link(tmp, self._entry_path(entry["version"]))
-        finally:
-            os.unlink(tmp)
-
-    def _roll_forward(self, entry: dict) -> None:
-        """Finish an entry's renames out of its staging directory, each
-        data file with its checksum sidecar. A rename is done once its
-        source is gone, so this is idempotent and may race another
-        process doing the same."""
-        staging = entry.get("staging")
-        if not staging or not os.path.isdir(os.path.join(self.path, staging)):
-            return
-        for rel in entry["files"]:
-            head, tail = os.path.split(rel)
-            os.makedirs(os.path.join(self.path, head), exist_ok=True)
-            for name in (rel, os.path.join(head, f".{tail}.crc")):
-                try:
-                    os.rename(os.path.join(self.path, staging, name), os.path.join(self.path, name))
-                except FileNotFoundError:
-                    pass  # already moved, or no sidecar
-        shutil.rmtree(os.path.join(self.path, staging), ignore_errors=True)
-
     # -- S6: create-if-not-exists -------------------------------------
     def exists(self) -> bool:
-        return os.path.exists(self._entry_path(0))
+        return os.path.exists(self.log.entry_path(0))
 
     def ensure(self) -> None:
         """DDL analog of the reference's swallow-Conflict create
@@ -322,8 +232,8 @@ class NvdStore:
             counts = self.read().agg(F.count(F.lit(1)), F.count(F.col(ID_COL))).first()
             rows, cves = int(counts[0]), int(counts[1])
         try:
-            self._commit({"version": 0, "files": files, "rows": rows, "cves": cves,
-                          "total_cves": cves})
+            self.log.commit({"version": 0, "files": files, "rows": rows, "cves": cves,
+                             "total_cves": cves})
         except FileExistsError:
             pass  # a concurrent run created it first
 
@@ -332,7 +242,7 @@ class NvdStore:
         """Every stored row: pending renames rolled forward, then a
         directory read. Spark lists the files here, so the version seen
         is pinned for the next ``append``."""
-        entry = self._latest()
+        entry = self.log.latest()
         self.version = entry["version"] if entry else None
         return (
             self.spark.read.schema(self._partitioned_schema())
@@ -353,7 +263,7 @@ class NvdStore:
         auto-creates the store when absent, mirroring the NotFound →
         make_dataset → 0 path (bq.py:137-140)."""
         self.ensure()
-        return self._latest()["total_cves"]
+        return self.log.latest()["total_cves"]
 
     # -- S5: bulk append ----------------------------------------------
     def append(self, df: DataFrame) -> None:
@@ -370,28 +280,18 @@ class NvdStore:
         """
         self.last_commit = None
         self.ensure()
-        base = self.version if self.version is not None else self._latest()["version"]
-        staging = f"{STAGING_DIR}/{uuid.uuid4().hex}"
-        committed = False
-        try:
-            counts = self._write(df, os.path.join(self.path, staging))
+        base = self.version if self.version is not None else self.log.latest()["version"]
+
+        def write(staging: str) -> dict | None:
+            counts = self._write(df, staging)
             if counts["rows"] == 0:  # A3: nothing new since the last run
-                return
-            entry = {
-                "version": base + 1,
-                "staging": staging,
-                "files": _data_files(os.path.join(self.path, staging)),
-                "rows": counts["rows"],
-                "cves": counts["cves"],
-                "total_cves": self._entry(base)["total_cves"] + counts["cves"],
-            }
-            self._commit(entry)
-            committed = True
-        finally:
-            if not committed:
-                shutil.rmtree(os.path.join(self.path, staging), ignore_errors=True)
-        self._roll_forward(entry)
-        self.version, self.last_commit = entry["version"], entry
+                return None
+            return {"rows": counts["rows"], "cves": counts["cves"],
+                    "total_cves": self.log.entry(base)["total_cves"] + counts["cves"]}
+
+        entry = self.log.publish(base, write)
+        if entry is not None:
+            self.version, self.last_commit = entry["version"], entry
 
     def _write(self, df: DataFrame, path: str) -> dict:
         """Write ``df`` to ``path`` with one file per year per append (see
@@ -431,10 +331,10 @@ def nvd_store_integrity(store: NvdStore) -> dict:
     ``_staging/`` (a writer that died or lost its commit) are listed but
     kept, and do not fail the check: no scan sees them.
     """
-    versions = store._versions()
+    versions = store.log.versions()
     if not versions:
         raise ValueError(f"{store.path} has no commit log")
-    entries = [store._entry(v) for v in versions]
+    entries = [store.log.entry(v) for v in versions]
     per_id = store.read().groupBy(F.col(ID_COL).alias("ID")).count().filter("ID IS NOT NULL")
     scanned, duplicates = per_id.agg(
         F.coalesce(F.sum("count"), F.lit(0)), F.count(F.when(F.col("count") > 1, 1))

@@ -54,13 +54,9 @@ def recursive_month_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``monthly_urgent_gapfill`` expressed as engine-managed recursion
     instead of ``sequence()``.
 
-    Each recursion step is a one-row relation, so the iterated work is
-    O(depth), never O(rows), and the fact table is scanned once for
-    bounds and once for the monthly counts. Depth is the reason the
-    spine is bounded to 12 steps: every step is a separate Spark job,
-    so recursion depth — not data volume — is the cost driver (an
-    unbounded history spine measured ~0.2 s/step regardless of scale
-    factor; ``spark.sql.cteRecursionLevelLimit`` caps runaways at 100).
+    The recursive row carries the upper bound (``spine(m, hi)``), so a
+    step reads only the previous one-row step, never ``bounds``: the fact
+    table is scanned once for the bounds and once for the counts.
     """
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_rcte")
     return spark.sql(
@@ -71,10 +67,10 @@ def recursive_month_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
                  CAST(date_trunc('month', MAX(o_orderdate)) AS DATE) AS hi
           FROM orders_rcte
         ),
-        spine(m) AS (
-          SELECT lo FROM bounds
+        spine(m, hi) AS (
+          SELECT lo, hi FROM bounds
           UNION ALL
-          SELECT add_months(m, 1) FROM spine, bounds WHERE m < hi
+          SELECT add_months(m, 1), hi FROM spine WHERE m < hi
         ),
         monthly AS (
           SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS m,

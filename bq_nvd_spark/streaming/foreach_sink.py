@@ -14,44 +14,41 @@ merge cost scales with the delta, not the store:
 
 - the store is hash-bucketed on the merge key: ``bucket =
   pmod(xxhash64(key), n_buckets)``; each bucket directory is
-  independently versioned (``b{K}/v{n}``) and a manifest records, per
-  bucket, the live version plus the last applied batch id.
-  Read-modify-write never overwrites the version being read;
+  independently versioned (``b{K}/v{n}``) and each commit-log entry
+  (``commit_log.py``) records every bucket's live version plus the
+  batch id. Read-modify-write never overwrites the version being read;
 - a micro-batch only rewrites the buckets its keys hash into.  A
   small delta against a huge store touches few buckets, so rewrite
   bytes ~ |touched buckets| x bucket size ~ O(|delta|) once
   ``n_buckets`` is sized so a bucket fits a file-group (the same
   copy-on-write contract a lakehouse MERGE INTO gives);
-- a replayed batch (same ``batch_id`` after a checkpoint recovery) is
-  detected via the manifest and SKIPPED, which is what makes the
-  at-least-once delivery of foreachBatch exactly-once in effect.  A
-  crash *between* the bucket write and the manifest commit is also
-  safe: the new version directory is unreferenced until the commit,
-  and replace-by-key re-merge is idempotent (update output mode
-  delivers full cumulative values, not increments);
-- each bucket keeps one live version on disk: right after the manifest
-  flip, every other version directory of each touched bucket is
-  deleted (nothing reads a superseded version once the commit lands).
-  A crash between a commit and that cleanup leaves a stray version,
-  which the next merge touching the bucket removes;
+- a replayed batch (a ``batch_id`` at or below the log's after a
+  checkpoint recovery) is SKIPPED, which makes the at-least-once
+  delivery of foreachBatch exactly-once in effect.  A crash before the
+  commit leaves only unlisted staged files, and replace-by-key re-merge
+  is idempotent (update mode delivers cumulative values); a crash after
+  it is rolled forward by the next read of the log;
+- each bucket keeps one live version on disk: right after the commit,
+  every other version directory of each touched bucket is deleted.  A
+  crash before that cleanup leaves a stray version, which the next
+  merge touching the bucket removes;
 - the merge itself is a keyed UPSERT (replace-by-key): the store side
   is pruned to the touched buckets *before* the anti-join, so the
   shuffle is |touched-bucket rows| + |batch rows|, exactly what
   ``MERGE INTO ... WHEN MATCHED THEN UPDATE WHEN NOT MATCHED THEN
   INSERT`` shuffles on a bucketed lakehouse table.
 
-Scale notes (100 TB): state never lives on the driver — the manifest
-is a dict of small integers, and the only ``collect`` is the set of
-touched bucket ids (bounded by ``n_buckets``).  The final result is
-returned as a lazy scan over the live bucket versions; nothing is
-materialized driver-side.  See SCALE.md §"foreachBatch upsert" for
-the full 100 TB narrative.
+Scale notes (100 TB): state never lives on the driver — a log entry
+is a dict of small integers and file names, and the only ``collect``
+is the set of touched bucket ids (bounded by ``n_buckets``).  The
+final result is returned as a lazy scan over the live bucket versions;
+nothing is materialized driver-side.  See SCALE.md §"foreachBatch
+upsert" for the full 100 TB narrative.
 """
 
 from __future__ import annotations
 
 import atexit
-import json
 import os
 import shutil
 import tempfile
@@ -60,17 +57,21 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bq_nvd_spark.commit_log import CommitLog
 from bq_nvd_spark.plans.registry import query
 from bq_nvd_spark.streaming.micro_batch import run_available_now
 
 
 class ParquetUpsertStore:
     """Keyed, hash-bucketed parquet store with per-bucket versioned
-    commits and batch-id replay dedup (copy-on-write MERGE INTO)."""
+    commits and batch-id replay dedup (copy-on-write MERGE INTO). A
+    merge commits at the version after the one its read of the log saw,
+    so of two merges planned on one version the second raises."""
 
     def __init__(self, root: str, n_buckets: int = 8):
         self.root = root
         self.n_buckets = n_buckets
+        self.log = CommitLog(root)
         # Data-file schema memo (optimization round 17): the merge
         # contract fixes the row schema for the store's lifetime, yet
         # every per-batch touched-bucket read and every current() scan
@@ -79,7 +80,6 @@ class ParquetUpsertStore:
         # inference thereafter. Metadata only — the data itself is
         # re-scanned on every action.
         self._data_schema = None
-        os.makedirs(root, exist_ok=True)
 
     def _read(self, spark: SparkSession, paths: list[str]) -> DataFrame:
         """Scan bucket-version dirs with the memoized data schema."""
@@ -89,27 +89,16 @@ class ParquetUpsertStore:
         self._data_schema = df.schema
         return df
 
-    def _manifest(self) -> dict:
+    def _latest(self) -> dict:
         path = os.path.join(self.root, "manifest.json")
-        if not os.path.exists(path):
-            return {"last_batch_id": -1, "buckets": {}}
-        with open(path) as fh:
-            m = json.load(fh)
-        if "buckets" not in m:
-            # Pre-bucketed single-version layout ("version" key): its data
-            # is invisible to the bucket layout, so refuse loudly rather
-            # than silently starting an empty store next to it.
+        if os.path.exists(path):
+            # Written before the commit log, whose reads cannot see its
+            # data: refuse rather than start an empty store beside it.
             raise ValueError(
-                f"{path} is a legacy single-version store manifest; "
+                f"{path} is a legacy store manifest; "
                 "migrate it by re-ingesting into a fresh store directory"
             )
-        return m
-
-    def _commit(self, manifest: dict) -> None:
-        tmp = os.path.join(self.root, "manifest.json.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-        os.replace(tmp, os.path.join(self.root, "manifest.json"))
+        return self.log.latest() or {"version": -1, "batch_id": -1, "buckets": {}}
 
     def _bucket_paths(self, buckets: dict, only: set | None = None) -> list[str]:
         return [
@@ -120,10 +109,10 @@ class ParquetUpsertStore:
 
     def current(self, spark: SparkSession) -> DataFrame | None:
         """Lazy scan over every bucket's live version (no materialization)."""
-        m = self._manifest()
-        if not m["buckets"]:
+        buckets = self._latest()["buckets"]
+        if not buckets:
             return None
-        return self._read(spark, self._bucket_paths(m["buckets"]))
+        return self._read(spark, self._bucket_paths(buckets))
 
     def merge_batch(
         self,
@@ -145,8 +134,8 @@ class ParquetUpsertStore:
         is_deleted THEN DELETE``.  Tombstoned keys still count as
         touched (their buckets are rewritten without them), and the
         column itself never reaches the stored data."""
-        m = self._manifest()
-        if batch_id <= m["last_batch_id"]:
+        m = self._latest()
+        if batch_id <= m["batch_id"]:
             return  # replayed batch after recovery — already applied
         spark = batch_df.sparkSession
         # The merge consumes the batch THREE times (touched-bucket ids,
@@ -227,33 +216,23 @@ class ParquetUpsertStore:
                 "left_anti",
             )
             combined = kept.unionByName(upserts)
-        new_version = batch_id  # monotonic and unique (replays skipped above)
-        (
-            combined.repartition("__bucket")
-            .write.mode("overwrite")
-            .partitionBy("__bucket")
-            .parquet(os.path.join(self.root, f"delta{new_version}"))
-        )
-        buckets = dict(m["buckets"])
-        delta_root = os.path.join(self.root, f"delta{new_version}")
-        for k in touched:
-            # Move each written bucket partition under its bucket dir as
-            # the next version; the manifest flip below publishes it.
-            src = os.path.join(delta_root, f"__bucket={k}")
-            dst = os.path.join(self.root, f"b{k}", f"v{new_version}")
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            if os.path.exists(src):
-                # A crash between write and commit leaves an unpublished
-                # dst from the same batch id; discard it and re-publish.
-                shutil.rmtree(dst, ignore_errors=True)
-                os.replace(src, dst)
-                buckets[str(k)] = new_version
-            else:
-                # Tombstones emptied this bucket: no partition dir was
-                # written, so retire the bucket from the live map.
-                buckets.pop(str(k), None)
-        shutil.rmtree(delta_root, ignore_errors=True)
-        self._commit({"last_batch_id": batch_id, "buckets": buckets})
+        version = m["version"] + 1
+
+        def write(staging: str) -> dict:
+            combined.repartition("__bucket").write.partitionBy("__bucket").parquet(staging)
+            buckets = {k: v for k, v in m["buckets"].items() if int(k) not in touched}
+            for k in touched:
+                # Each written bucket partition becomes the bucket's next
+                # version. A bucket the tombstones emptied has no partition
+                # dir, and so leaves the live map.
+                src = os.path.join(staging, f"__bucket={k}")
+                if os.path.exists(src):
+                    os.makedirs(os.path.join(staging, f"b{k}"))
+                    os.rename(src, os.path.join(staging, f"b{k}", f"v{version}"))
+                    buckets[str(k)] = version
+            return {"batch_id": batch_id, "buckets": buckets}
+
+        buckets = self.log.publish(m["version"], write)["buckets"]
         # One live version per bucket. The write job above has finished
         # and current() lists only live versions, so nothing reads a
         # superseded version of a touched bucket after the commit; drop
@@ -262,7 +241,7 @@ class ParquetUpsertStore:
         for k in touched:
             bucket_dir = os.path.join(self.root, f"b{k}")
             live = f"v{buckets[str(k)]}" if str(k) in buckets else None
-            for v in os.listdir(bucket_dir):
+            for v in os.listdir(bucket_dir) if os.path.isdir(bucket_dir) else []:
                 if v != live:
                     shutil.rmtree(os.path.join(bucket_dir, v), ignore_errors=True)
 

@@ -36,7 +36,7 @@ from bq_nvd_spark.nvd import (
     write_ndjson,
 )
 from bq_nvd_spark.nvd.etl import ID_COL
-from bq_nvd_spark.nvd.etl import _data_files as listed_files
+from bq_nvd_spark.commit_log import _data_files as listed_files
 
 FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures", "nvd")
 YEAR_FEED = os.path.join(FIXTURES, "nvdcve-1.1-2024.json.gz")
@@ -580,7 +580,7 @@ def test_commit_without_moves_rolls_forward(spark, tmp_path, monkeypatch, first_
     fresh handle, as the next run would) finishes the renames, and the
     logged count equals ``COUNT(ID)`` over the directory scan."""
     store = _brownfield(spark, tmp_path / "store")
-    monkeypatch.setattr(store, "_roll_forward", lambda entry: None)
+    monkeypatch.setattr(store.log, "roll_forward", lambda entry: None)
     result = ingest_feed(spark, store, RECENT_FEED)
     assert (result.loaded, result.skipped) == (2, False)
     staged = store.last_commit["staging"]
@@ -629,7 +629,7 @@ def test_racing_commits_of_one_version_have_one_winner(tmp_path):
 
     def commit(i):
         try:
-            store._commit({"version": 1, "writer": i, "files": [f"f{i}"] * 100})
+            store.log.commit({"version": 1, "writer": i, "files": [f"f{i}"] * 100})
             outcomes[i] = "won"
         except FileExistsError:
             outcomes[i] = "lost"
@@ -647,9 +647,9 @@ def test_racing_commits_of_one_version_have_one_winner(tmp_path):
     assert not any(t.is_alive() for t in threads)
     winners = [i for i, o in outcomes.items() if o == "won"]
     assert len(outcomes) == 16 and len(winners) == 1
-    entry = store._entry(1)
+    entry = store.log.entry(1)
     assert entry["writer"] == winners[0] and entry["files"] == [f"f{winners[0]}"] * 100
-    assert store._versions() == [1]
+    assert store.log.versions() == [1]
     assert os.listdir(os.path.join(store.path, "_log")) == ["_00000001.json"]
 
 
@@ -669,7 +669,7 @@ def test_pre_log_store_is_adopted_unchanged(spark, tmp_path):
 
     assert store.count_cves() == 8
     assert store.exists()
-    assert store._entry(0)["files"] == listed_files(path)
+    assert store.log.entry(0)["files"] == listed_files(path)
     assert _rows(store.read()) == before
     result = ingest_feed(spark, store, RECENT_FEED)
     assert (result.loaded, result.skipped) == (2, False)
@@ -686,7 +686,7 @@ def test_refresh_pass_job_budget(spark, tmp_path):
     store = _brownfield(spark, tmp_path / "store")
     tracer = Tracer(spark, "nvd-job-budget", enabled=True)
     for loaded, skipped in [(2, False), (0, True)]:
-        versions = store._versions()
+        versions = store.log.versions()
         with tracer.span("count_cves") as counted:
             store.count_cves()
         with tracer.span("ingest_feed") as ingested:
@@ -694,7 +694,7 @@ def test_refresh_pass_job_budget(spark, tmp_path):
         assert (result.loaded, result.skipped) == (loaded, skipped)
         assert counted.jobs == 0
         assert ingested.jobs <= 4, ingested.jobs
-    assert store._versions() == versions
+    assert store.log.versions() == versions
     assert store.count_cves() == 10
 
 

@@ -32,9 +32,16 @@ def test_lateral_decorrelates_to_join_plus_window(spark, sf_dir):
 
 
 def test_recursive_spine_is_contiguous_and_bounded(spark, sf_dir):
-    rows = sorted(
-        recursive_month_spine(spark, sf_dir).collect(), key=lambda r: r["month"]
-    )
+    """Twelve contiguous months, in at most 12 Spark jobs: a recursion
+    step must not rescan the fact table."""
+    from perfbench.tracing import Tracer
+
+    tracer = Tracer(spark, "recursive-spine-job-budget", enabled=True)
+    with tracer.span("recursive_month_spine") as span:
+        rows = sorted(
+            recursive_month_spine(spark, sf_dir).collect(), key=lambda r: r["month"]
+        )
+    assert span.jobs <= 12, span.jobs
     assert len(rows) == 12  # trailing year, one row per month
     for a, b in zip(rows, rows[1:]):
         # contiguous month steps

@@ -132,8 +132,6 @@ def test_upsert_store_rewrites_only_touched_buckets(spark, tmp_path):
     """Copy-on-write contract: a batch touching one key must republish
     only that key's hash bucket — every other bucket keeps its version
     (rewrite bytes scale with the delta, not the store)."""
-    import json
-
     from bq_nvd_spark.streaming.foreach_sink import ParquetUpsertStore
 
     store = ParquetUpsertStore(str(tmp_path / "store"), n_buckets=8)
@@ -142,12 +140,12 @@ def test_upsert_store_rewrites_only_touched_buckets(spark, tmp_path):
         "user_id long, n_events long, cents long",
     )
     store.merge_batch(seed, batch_id=0, key="user_id")
-    before = json.load(open(tmp_path / "store" / "manifest.json"))["buckets"]
+    before = store.log.latest()["buckets"]
     assert len(before) > 1  # 40 uniform keys spread over several buckets
 
     one = spark.createDataFrame([(7, 5, 999)], "user_id long, n_events long, cents long")
     store.merge_batch(one, batch_id=1, key="user_id")
-    after = json.load(open(tmp_path / "store" / "manifest.json"))["buckets"]
+    after = store.log.latest()["buckets"]
     changed = [k for k in after if after[k] != before.get(k)]
     assert len(changed) == 1  # exactly the bucket user 7 hashes into
     got = {r["user_id"]: (r["n_events"], r["cents"]) for r in store.current(spark).collect()}
@@ -239,11 +237,9 @@ def test_upsert_store_rejects_legacy_manifest(spark, tmp_path):
 
 def test_upsert_store_keeps_only_live_bucket_versions(spark, tmp_path):
     """One live version per bucket: after every merge each bucket dir
-    holds only the version the manifest names, a stray version (as a
-    crash between a commit and its cleanup would leave) goes the next
-    time its bucket is touched, and an emptied bucket keeps none."""
-    import json
-
+    holds only the version the log names, a stray version (as a crash
+    between a commit and its cleanup would leave) goes the next time its
+    bucket is touched, and an emptied bucket keeps none."""
     from bq_nvd_spark.streaming.foreach_sink import ParquetUpsertStore
 
     root = tmp_path / "store"
@@ -262,7 +258,7 @@ def test_upsert_store_keeps_only_live_bucket_versions(spark, tmp_path):
         store.merge_batch(
             spark.createDataFrame(rows, schema), bid, "user_id", "is_deleted"
         )
-        live = json.loads((root / "manifest.json").read_text())["buckets"]
+        live = store.log.latest()["buckets"]
         assert on_disk() == {k: [f"v{v}"] for k, v in live.items()}, bid
 
     for k in live:
@@ -272,6 +268,133 @@ def test_upsert_store_keeps_only_live_bucket_versions(spark, tmp_path):
     store.merge_batch(tombstones, 6, "user_id", "is_deleted")
     assert store.current(spark) is None
     assert on_disk() == {k: [] for k in live}
+
+
+def _upsert_model(batches) -> dict:
+    model: dict = {}
+    for rows in batches:
+        for k, v, dead in rows:
+            if dead:
+                model.pop(k, None)
+            else:
+                model[k] = v
+    return model
+
+
+def _upsert_state(store, spark) -> dict:
+    final = store.current(spark)
+    return {} if final is None else {r["user_id"]: r["cents"] for r in final.collect()}
+
+
+def _extra_bucket_versions(store) -> dict:
+    """Bucket dirs holding anything but the live version the log names."""
+    live = store.log.latest()["buckets"]
+    out = {}
+    for name in os.listdir(store.root):
+        if name.startswith("b"):
+            held = sorted(os.listdir(os.path.join(store.root, name)))
+            if held != ([f"v{live[name[1:]]}"] if name[1:] in live else []):
+                out[name] = held
+    return out
+
+
+_SEED = [(i, i * 10, False) for i in range(8)]
+
+
+def _merge(spark, store, rows, batch_id) -> None:
+    df = spark.createDataFrame(rows, "user_id long, cents long, is_deleted boolean")
+    store.merge_batch(df, batch_id, "user_id", "is_deleted")
+
+
+def test_concurrent_upsert_merges_have_one_winner(spark, tmp_path, monkeypatch):
+    """Two handles on one store plan their merges on the same version
+    (on disjoint buckets, so the second's reads stay valid): the first
+    commit wins, the second raises ``FileExistsError`` and leaves no
+    staged files, and the store holds the first merge's keys."""
+    from bq_nvd_spark.streaming.foreach_sink import ParquetUpsertStore
+
+    root = str(tmp_path / "store")
+    first = ParquetUpsertStore(root, n_buckets=4)
+    second = ParquetUpsertStore(root, n_buckets=4)
+    _merge(spark, first, _SEED, 0)
+    ahead = [(1, 111, False), (20, 200, False), (3, 0, True)]
+    behind = [(2, 222, False), (10, 100, False), (5, 0, True)]
+    real_merge = second._merge_cached
+
+    def overtaken(*args):
+        # ``second`` has read the log; ``first`` commits before it does.
+        _merge(spark, first, ahead, 1)
+        return real_merge(*args)
+
+    monkeypatch.setattr(second, "_merge_cached", overtaken)
+    with pytest.raises(FileExistsError):
+        _merge(spark, second, behind, 2)
+    after = ParquetUpsertStore(root, n_buckets=4)
+    assert _upsert_state(after, spark) == _upsert_model([_SEED, ahead])
+    assert os.listdir(os.path.join(root, "_staging")) == []
+    assert _extra_bucket_versions(first) == {}
+
+
+@pytest.mark.parametrize("fault", ["write_dies_before_commit", "commit_without_renames"])
+def test_upsert_store_survives_merge_faults(spark, tmp_path, monkeypatch, fault):
+    """A merge whose write dies after staging leaves the store as it
+    was and ``_staging/`` empty; a merge that commits without renaming
+    its files in is finished by a fresh handle's ``current()``. Either
+    way every bucket dir holds its live version only."""
+    from bq_nvd_spark.streaming.foreach_sink import ParquetUpsertStore
+
+    root = str(tmp_path / "store")
+    store = ParquetUpsertStore(root, n_buckets=4)
+    _merge(spark, store, _SEED, 0)
+    batch = [(1, 111, False), (20, 200, False), (3, 0, True)]
+    if fault == "write_dies_before_commit":
+        def die(entry):
+            assert any(f.endswith(".parquet") for f in entry["files"])
+            raise RuntimeError("killed after staging")
+
+        monkeypatch.setattr(store.log, "commit", die)
+        with pytest.raises(RuntimeError, match="killed after staging"):
+            _merge(spark, store, batch, 1)
+        expected = _upsert_model([_SEED])
+        assert os.listdir(os.path.join(root, "_staging")) == []
+    else:
+        monkeypatch.setattr(store.log, "roll_forward", lambda entry: None)
+        _merge(spark, store, batch, 1)
+        assert os.listdir(os.path.join(root, "_staging")) != []
+        expected = _upsert_model([_SEED, batch])
+    after = ParquetUpsertStore(root, n_buckets=4)
+    assert _upsert_state(after, spark) == expected
+    assert os.listdir(os.path.join(root, "_staging")) == []
+    assert _extra_bucket_versions(after) == {}
+
+
+def _source_hits(pattern: str, tops: tuple, allowed: str) -> list[str]:
+    """``path:line`` of every match of ``pattern`` in the ``.py`` files
+    under ``tops`` (relative to the repository), ``allowed`` excepted."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    regex = re.compile(pattern)
+    hits = []
+    for top in tops:
+        for dirpath, _, files in os.walk(os.path.join(root, top)):
+            for name in files:
+                rel = os.path.relpath(os.path.join(dirpath, name), root)
+                if not name.endswith(".py") or rel == allowed:
+                    continue
+                with open(os.path.join(root, rel), encoding="utf-8") as fh:
+                    for lineno, line in enumerate(fh, 1):
+                        if regex.search(line):
+                            hits.append(f"{rel}:{lineno}")
+    return hits
+
+
+def test_only_the_commit_log_commits_store_state():
+    """Store state is published in bq_nvd_spark/commit_log.py only: no
+    other engine source hard-links, atomically replaces or exclusively
+    creates a file."""
+    hits = _source_hits(
+        r"os\.link\(|os\.replace\(|O_EXCL", ("bq_nvd_spark",), "bq_nvd_spark/commit_log.py"
+    )
+    assert not hits, hits
 
 
 def test_memory_sink_drains_leave_no_temp_views(spark, sf_dir):
@@ -353,20 +476,8 @@ def test_only_the_runner_starts_streams():
     no other engine or script source opens a writeStream, awaits a
     query or sets the session's shuffle width (a builder ``.config`` of
     it, as in session.py, is not a set)."""
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    allowed = os.path.join(root, "bq_nvd_spark", "streaming", "micro_batch.py")
-    pattern = re.compile(
-        r"\.writeStream|awaitTermination\(|conf\.set\([^)]*shuffle\.partitions"
+    pattern = r"\.writeStream|awaitTermination\(|conf\.set\([^)]*shuffle\.partitions"
+    hits = _source_hits(
+        pattern, ("bq_nvd_spark", "scripts"), "bq_nvd_spark/streaming/micro_batch.py"
     )
-    hits = []
-    for top in ("bq_nvd_spark", "scripts"):
-        for dirpath, _, files in os.walk(os.path.join(root, top)):
-            for name in files:
-                path = os.path.join(dirpath, name)
-                if not name.endswith(".py") or path == allowed:
-                    continue
-                with open(path, encoding="utf-8") as fh:
-                    for lineno, line in enumerate(fh, 1):
-                        if pattern.search(line):
-                            hits.append(f"{os.path.relpath(path, root)}:{lineno}")
     assert not hits, hits
